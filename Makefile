@@ -1,7 +1,7 @@
 # Driver targets for the engine (the reference's Makefile deploys AWS
 # infra; this one runs the engine locally).
 
-.PHONY: test bench bench-small demo smoke
+.PHONY: test bench bench-small demo smoke perfbench perfbench-selftest
 
 test:
 	python -m pytest tests/ -q
@@ -11,6 +11,18 @@ bench:
 
 bench-small:
 	SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 python bench.py
+
+# The repository benchmark (perfbench/README.md): one seeded workload per
+# run, e.g. `make perfbench W=snapshot_dml SEED=3 TRACE=1`.
+W ?= taxi_elt
+SEED ?= 1
+TRACE ?= 0
+
+perfbench:
+	python3 perfbench/run.py --workload $(W) --seed $(SEED) --seconds 12 --trace $(TRACE)
+
+perfbench-selftest:
+	python3 perfbench/selftest.py
 
 demo:
 	python examples/taxi_pipeline_demo.py

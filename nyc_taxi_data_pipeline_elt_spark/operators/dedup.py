@@ -40,6 +40,7 @@ from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType
 
 from .confscope import loop_session, rebind
 
@@ -262,7 +263,18 @@ def incremental_minhash_dedup(
     equi-join against the index on (band_idx, band_key) — the historical
     corpus is never re-shingled, and the index join shuffles only band
     keys (or nothing at all if the index is bucketed on them).
+
+    Raises ``TypeError`` when ``band_index.band_key`` is not a long: an
+    index persisted by an older, md5-keyed build would join on NULLs and
+    silently find no duplicates, so it must be rebuilt first.
     """
+    key_type = band_index.schema["band_key"].dataType
+    if not isinstance(key_type, LongType):
+        raise TypeError(
+            f"band index band_key is {key_type.simpleString()}, not bigint: "
+            "it was built by an older md5-keyed build; rebuild the band "
+            "index with minhash_band_rows before deduplicating against it"
+        )
     new_rows = minhash_band_rows(new_docs, id_col=id_col, text_col=text_col)
     idx = band_index.select(
         F.col(id_col).alias("corpus_doc_id"), "band_idx", "band_key"

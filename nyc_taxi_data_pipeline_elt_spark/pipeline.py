@@ -13,21 +13,26 @@ The processing stage is the reference's landing->consumer transform
 (``process_data_glue.py:127-205``) rebuilt Spark-first:
 
 - partition pruning by *filter*, not path surgery
-- schema drift handled by per-batch ``conform_to_schema`` (fixes the
+- the landing scan planned from the Parquet footers: one scan plus
+  ``conform_to_schema`` per distinct footer schema, so schema drift
+  between months costs one more scan instead of a failed read (fixes the
   month-1 int<->double failure recorded at README.md:146)
 - DQ failures routed to a dead-letter table instead of silently dropped
-  (the README's own to-do)
+  (the README's own to-do), written alongside the consumer table
 - no log-only ``count()`` actions — the reference triggers 3 full
-  recomputations per run (SURVEY.md §4 anti-patterns); here each stage is
-  exactly one action (the write)
+  recomputations per run (SURVEY.md §4 anti-patterns); here a stage's
+  only actions are its two writes
 """
 
 from __future__ import annotations
 
 import json
 from dataclasses import dataclass, field
+from functools import reduce
 from pathlib import Path
 
+import pyarrow.parquet as pq
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -71,6 +76,8 @@ _RENAMES = {"VendorID": "vendor_id"}
 # (the drift that killed the reference's January run). Narrowing back to
 # the catalog's bigint is sanctioned.
 _NARROW_OK = {"passenger_count"}
+# the footer key-value entry Spark's Parquet schema inference reads
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 @dataclass
@@ -101,65 +108,96 @@ def _quarantine(batch_path: Path, exc: Exception) -> None:
         f.write(json.dumps(entry) + "\n")
 
 
+def _footer_key(path: Path) -> tuple[str, bytes | None]:
+    """What Spark's schema inference reads from a Parquet footer: the
+    Parquet schema plus Spark's own row-metadata entry. Reads the footer
+    only; raises on a file that is not Parquet."""
+    meta = pq.read_metadata(path)
+    # the first line of the schema's str() is the Python object address
+    schema = str(meta.schema).split("\n", 1)[1]
+    return schema, (meta.metadata or {}).get(_SPARK_ROW_METADATA)
+
+
+def _visible(path: Path) -> bool:
+    # Spark's file index skips names starting with "_" or "."
+    return not path.name.startswith(("_", "."))
+
+
 def read_landing_conformed(
     spark: SparkSession, landing_dir: str, trip_type: str
 ) -> tuple[DataFrame | None, int]:
     """Read one fleet's landing partition, drift-safe.
 
-    Fast path: one mergeSchema scan over ``trip_type=X/`` (the reference's
-    read, process_data_glue.py:137-139) then a single conformance pass.
-    Drift path: if the footer merge fails (int<->double across months —
-    exactly README.md:146), fall back to conforming each
-    ``partition_date=`` batch independently and unioning by name; per-batch
-    schemas are internally consistent, so the union is well-typed.
+    The scan is planned from the Parquet footers on the driver: every
+    ``partition_date=`` batch's files are grouped by footer schema, each
+    group is one Spark scan conformed to ``RAW_UNIFIED_SCHEMA``, and the
+    groups are unioned by name. Files in one group share a footer schema,
+    so Spark infers the same type for each of them, and a type drift
+    between months (int<->double, exactly README.md:146) only adds a
+    group. TLC publishes one file per fleet-month, so the driver reads one
+    footer per month.
 
-    Returns ``(df_or_None, n_quarantined)``. Raises when every batch
-    quarantined — a fleet that is entirely unreadable is a systemic
-    failure, not an empty input, and must fail the stage (the reference's
-    fail-fast contract, process_data_glue.py:140-143).
+    A batch is quarantined (file-level dead-letter) when one of its
+    footers cannot be read, when it has no data files, or when
+    ``conform_to_schema`` rejects its group. Returns
+    ``(df_or_None, n_quarantined)``. Raises when every batch quarantined
+    — a fleet that is entirely unreadable is a systemic failure, not an
+    empty input, and must fail the stage (the reference's fail-fast
+    contract, process_data_glue.py:140-143).
     """
     base = Path(landing_dir) / f"trip_type={trip_type}"
     if not base.exists():
         return None, 0
+    batches = sorted(p for p in base.iterdir() if p.is_dir() and _visible(p))
+    if not batches:
+        return None, 0
 
-    def _conform(df: DataFrame) -> DataFrame:
+    failed: dict[Path, Exception] = {}
+    groups: dict[tuple[str, bytes | None], list[Path]] = {}
+    for batch in batches:
+        files = sorted(f for f in batch.iterdir() if f.is_file() and _visible(f))
+        try:
+            if not files:
+                raise FileNotFoundError(f"no data files in {batch}")
+            keys = [_footer_key(f) for f in files]
+        except Exception as exc:
+            failed[batch] = exc
+            continue
+        for key, f in zip(keys, files):
+            groups.setdefault(key, []).append(f)
+
+    def _scan(files: list[Path]) -> DataFrame:
         return conform_to_schema(
-            df, RAW_UNIFIED_SCHEMA, renames=_RENAMES, narrow_ok=_NARROW_OK
+            spark.read.parquet(*map(str, files)),
+            RAW_UNIFIED_SCHEMA,
+            renames=_RENAMES,
+            narrow_ok=_NARROW_OK,
         )
 
-    try:
-        df = spark.read.option("mergeSchema", "true").parquet(str(base))
-        return _conform(df), 0
-    except Exception:
-        batches = sorted(p for p in base.iterdir() if p.is_dir())
-        if not batches:
-            return None, 0
-        parts = []
-        n_quarantined = 0
-        for p in batches:
-            try:
-                part = _conform(
-                    spark.read.option("mergeSchema", "true").parquet(str(p))
-                )
-                parts.append(part)
-            except Exception as exc:
-                # file-level dead-letter: a batch that cannot even be
-                # conformed (corrupt footer, unmappable drift) is recorded
-                # and skipped instead of failing the whole fleet — the
-                # file-granularity counterpart of the row-level DLQ
-                _quarantine(p, exc)
-                n_quarantined += 1
-        if not parts:
-            # every batch unreadable: systemic, not empty — fail the stage
-            raise RuntimeError(
-                f"all {n_quarantined} landing batches for trip_type="
-                f"{trip_type!r} were quarantined; see "
-                f"{base.parent / '_quarantine.jsonl'}"
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out, n_quarantined
+    scans: list[tuple[list[Path], DataFrame]] = []
+    for files in groups.values():
+        try:
+            scans.append((files, _scan(files)))
+        except Exception as exc:
+            for f in files:
+                failed.setdefault(f.parent, exc)
+    parts = []
+    for files, df in scans:
+        keep = [f for f in files if f.parent not in failed]
+        if keep:
+            # a batch quarantined by another group loses its files here too
+            parts.append(df if len(keep) == len(files) else _scan(keep))
+
+    for batch, exc in failed.items():
+        _quarantine(batch, exc)
+    if not parts:
+        # every batch unreadable: systemic, not empty — fail the stage
+        raise RuntimeError(
+            f"all {len(failed)} landing batches for trip_type="
+            f"{trip_type!r} were quarantined; see "
+            f"{base.parent / '_quarantine.jsonl'}"
+        )
+    return reduce(DataFrame.unionByName, parts), len(failed)
 
 
 def process_trips(
@@ -171,6 +209,13 @@ def process_trips(
     eager ``count()`` calls, each re-executing the full lineage (SURVEY.md
     §4 anti-patterns); here ``observe()`` accumulates the same counts as a
     side effect of the single write action — zero extra scans.
+
+    The dead-letter write runs on a side thread while the consumer write
+    runs here: the two writer jobs are independent and each has only a
+    few tasks, so they share the cores. The side thread inherits the
+    caller's job group. The two commits are not ordered; if either write
+    fails the stage fails, and a re-run repairs both tables because the
+    dynamic partition overwrite is idempotent.
     """
     tune(spark)
     raw, n_quarantined = read_landing_conformed(spark, cfg.landing_dir, trip_type)
@@ -199,7 +244,13 @@ def process_trips(
         )
         .observe(dlq_obs, F.count(F.lit(1)).alias("n_rows"))
     )
-    write_partitioned(bad_out, cfg.dlq_dir, ["trip_type"])
+    dlq_box: dict = {}
+
+    def _dlq_write() -> None:
+        try:
+            write_partitioned(bad_out, cfg.dlq_dir, ["trip_type"])
+        except BaseException as exc:  # re-raised on the calling thread
+            dlq_box["err"] = exc
 
     consumer_obs = Observation(f"consumer_{trip_type}")
     consumer = (
@@ -209,7 +260,14 @@ def process_trips(
         .select(*CONSUMER_COLUMNS)  # P9
         .observe(consumer_obs, F.count(F.lit(1)).alias("n_rows"))
     )
-    write_partitioned(consumer, cfg.consumer_dir, CONSUMER_PARTITION_KEYS)
+    dlq_thread = InheritableThread(target=_dlq_write, daemon=True)
+    dlq_thread.start()
+    try:
+        write_partitioned(consumer, cfg.consumer_dir, CONSUMER_PARTITION_KEYS)
+    finally:
+        dlq_thread.join()
+    if "err" in dlq_box:
+        raise dlq_box["err"]
     return {
         "rows_written": consumer_obs.get["n_rows"],
         "rows_dead_lettered": dlq_obs.get["n_rows"],

@@ -8,6 +8,7 @@ twins.
 
 from __future__ import annotations
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -20,6 +21,21 @@ from nyc_taxi_data_pipeline_elt_spark.plans._snapshot_fixtures import (
 )
 from nyc_taxi_data_pipeline_elt_spark.session import tune
 from nyc_taxi_data_pipeline_elt_spark.sources.readers import load_table
+
+
+# The availableNow stream cycles below finish in seconds; the bound only
+# turns a hung stream into a loud error instead of a count mismatch.
+STREAM_TIMEOUT_S = 300
+
+
+def _await_stream(q, what: str) -> None:
+    """Wait for an availableNow stream to finish; on timeout stop it and
+    raise ``TimeoutError``."""
+    if not q.awaitTermination(STREAM_TIMEOUT_S):
+        q.stop()
+        raise TimeoutError(
+            f"{what} stream did not finish within {STREAM_TIMEOUT_S} s"
+        )
 
 
 def _change_feed_fixture(spark: SparkSession, sf_dir: str):
@@ -1102,8 +1118,6 @@ def snapshot_optimize_cdf_neutral(spark: SparkSession, sf_dir: str) -> DataFrame
     # chain at construction, before optimize commits v3; manifests and
     # data files are immutable), so the collect runs on a side thread
     # while optimize rewrites. Same sets compared, same assertion.
-    import threading
-
     before_df = agg(table.read_changes_cdf(spark, since_version=-1))
     box: dict = {}
 
@@ -1113,7 +1127,7 @@ def snapshot_optimize_cdf_neutral(spark: SparkSession, sf_dir: str) -> DataFrame
         except BaseException as exc:  # re-raised on the main thread
             box["err"] = exc
 
-    collector = threading.Thread(target=_collect_before, daemon=True)
+    collector = InheritableThread(target=_collect_before, daemon=True)
     collector.start()
     table.optimize(spark, zorder_by=["o_totalprice"], target_files=4)  # v3
     collector.join()
@@ -1192,8 +1206,6 @@ def snapshot_cdf_stream_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
     # here, before any further commit could exist), so the count job
     # overlaps the availableNow cycle on a side thread instead of
     # running serially after it. Same gate, same compared invariant.
-    import threading
-
     batch_feed = table.read_changes_cdf(spark, since_version=-1)
     gate: dict = {}
 
@@ -1203,7 +1215,7 @@ def snapshot_cdf_stream_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
         except BaseException as exc:  # re-raised on the main thread
             gate["err"] = exc
 
-    counter = threading.Thread(target=_count_batch_feed, daemon=True)
+    counter = InheritableThread(target=_count_batch_feed, daemon=True)
     counter.start()
     # r14 (guide §4 + VERDICT r13 #1): stage through the JVM parquet
     # FILE SINK, not foreachBatch — the staged rows are identical
@@ -1219,8 +1231,10 @@ def snapshot_cdf_stream_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
-    counter.join()
+    try:
+        _await_stream(q, "change-feed mirror")
+    finally:
+        counter.join()
     if "err" in gate:
         raise gate["err"]
     from pyspark.sql.window import Window
@@ -1385,7 +1399,7 @@ def snapshot_mapped_stream_read(spark: SparkSession, sf_dir: str) -> DataFrame:
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    _await_stream(q, "mapped snapshot")
     return (
         spark.read.parquet(stage)
         .groupBy("o_orderstatus")

@@ -51,14 +51,16 @@ def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:
     ADVICE r13: the skip additionally verifies a sentinel view still
     exists (one catalog lookup, ~1 ms) so a future code path that drops
     or replaces a fixture view mid-session cannot be silently served a
-    stale skip — the invariant is now checked, not just documented."""
+    stale skip — the invariant is now checked, not just documented.
+    A sentinel check that raises re-registers too: re-registration is
+    idempotent, a skip it cannot verify is not."""
     tune(spark)
     if getattr(spark, "_ntx_views_sf", None) == sf_dir:
         try:
             if spark.catalog.tableExists(TESTDATA_TABLES[-1]):
                 return
         except Exception:
-            return
+            pass
     for name in TESTDATA_TABLES:
         load_table(spark, sf_dir, name).createOrReplaceTempView(name)
     try:

@@ -10,6 +10,9 @@ and the same plan holds when the table is 100 TB across a million files.
 
 from __future__ import annotations
 
+import os
+import stat
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, TimestampNTZType
@@ -26,6 +29,29 @@ TESTDATA_TABLES = (
     "documents",
     "embeddings",
 )
+
+
+def _memo_key(path: str) -> tuple[str, int, int]:
+    """(path, mtime_ns, size) of a fixture file. A directory fixture is
+    keyed on its data files' newest mtime and total size: rewriting a
+    part file in place leaves the directory's own stat unchanged."""
+    st = os.stat(path)
+    if not stat.S_ISDIR(st.st_mode):
+        return path, st.st_mtime_ns, st.st_size
+    parts = []
+    for root, dirs, files in os.walk(path):
+        # the names Spark's file index skips
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        parts += [
+            os.stat(os.path.join(root, f))
+            for f in files
+            if not f.startswith(("_", "."))
+        ]
+    return (
+        path,
+        max((p.st_mtime_ns for p in parts), default=st.st_mtime_ns),
+        sum(p.st_size for p in parts),
+    )
 
 
 def _fixture_schema(spark: SparkSession, path: str):
@@ -53,13 +79,10 @@ def _fixture_schema(spark: SparkSession, path: str):
             spark._ntx_schema_memo = memo
         except Exception:  # exotic session wrapper: fall back, stay lazy
             return spark.read.parquet(path).schema
-    import os
-
     try:
-        st = os.stat(path)
-        key = (path, st.st_mtime_ns, st.st_size)
-    except OSError:
-        key = (path, None, None)
+        key = _memo_key(path)
+    except OSError:  # cannot tell a regenerated fixture apart: no memo
+        return spark.read.parquet(path).schema
     sch = memo.get(key)
     if sch is None:
         sch = spark.read.parquet(path).schema

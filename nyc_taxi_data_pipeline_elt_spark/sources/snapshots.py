@@ -56,13 +56,13 @@ import logging
 import os
 import re as _re
 import shutil
-import threading
 import time
 import uuid
 from dataclasses import dataclass
 from functools import lru_cache as _lru_cache
 from pathlib import Path
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import coalesce as F_coalesce
 from pyspark.sql.functions import col as F_col
@@ -3804,7 +3804,7 @@ class SnapshotTable:
             fresh: list[str] = []
             fresh_stats: dict = {}
             enforced: dict = {}
-            cdc_thread: threading.Thread | None = None
+            cdc_thread: InheritableThread | None = None
             cdc_box: dict = {}
             try:
                 if change_data:
@@ -3841,7 +3841,7 @@ class SnapshotTable:
                             except BaseException as exc:
                                 cdc_box["err"] = exc
 
-                        cdc_thread = threading.Thread(
+                        cdc_thread = InheritableThread(
                             target=_cdc_write, daemon=True
                         )
                         cdc_thread.start()
@@ -4476,7 +4476,7 @@ class SnapshotTable:
                         except BaseException as exc:
                             cdc_box["err"] = exc
 
-                    cdc_thread = threading.Thread(
+                    cdc_thread = InheritableThread(
                         target=_cdc_write, daemon=True
                     )
                     cdc_thread.start()

@@ -14,6 +14,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
@@ -21,6 +22,7 @@ from nyc_taxi_data_pipeline_elt_spark.operators.dedup import (
     LSH_BANDS,
     LSH_ROWS,
     MINHASH_K,
+    incremental_minhash_dedup,
     lsh_band_keys,
     minhash_band_rows,
     shingle_rows,
@@ -140,3 +142,16 @@ def test_minhash_band_rows_values_roundtrip(spark):
     # parity suite)
     assert all(isinstance(k, int) for _, _, k in got)
     assert LSH_BANDS * LSH_ROWS == MINHASH_K
+
+
+def test_incremental_dedup_rejects_md5_keyed_band_index(spark):
+    # an index stored by an md5-keyed build: joining its hex-string keys
+    # against xxhash64 longs would silently find no duplicates
+    docs = _docs(spark)
+    stale = minhash_band_rows(docs).withColumn(
+        "band_key", F.md5(F.col("band_key").cast("string"))
+    )
+    with pytest.raises(TypeError, match="rebuild the band index"):
+        incremental_minhash_dedup(docs, stale)
+    dups, _ = incremental_minhash_dedup(docs, minhash_band_rows(docs))
+    assert {(r.new_doc_id, r.corpus_doc_id) for r in dups.collect()} >= {(1, 1)}

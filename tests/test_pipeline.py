@@ -4,6 +4,9 @@ and empty inputs (reporting_etl_job.py:65-70)."""
 
 from __future__ import annotations
 
+import json
+import threading
+import uuid
 from datetime import datetime
 
 import pandas as pd
@@ -11,9 +14,12 @@ import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 
+from nyc_taxi_data_pipeline_elt_spark import pipeline
 from nyc_taxi_data_pipeline_elt_spark.pipeline import (
     PipelineConfig,
     build_reports,
+    process_trips,
+    read_landing_conformed,
     run,
 )
 from nyc_taxi_data_pipeline_elt_spark.schemas import Q1_SCHEMA, Q2_SCHEMA
@@ -61,9 +67,9 @@ def _green(month: int) -> pd.DataFrame:
 @pytest.fixture()
 def lake(tmp_path):
     landing = tmp_path / "landing"
-    # month 1 carries the drift variant (float64 passenger_count) — the
-    # mergeSchema read over trip_type=yellow/ must fail and fall back to
-    # per-batch conformance.
+    # month 1 carries the drift variant (float64 passenger_count): its
+    # footer schema differs from April's and May's, so the yellow read
+    # plans two scans, each conformed to the catalog types.
     _write(_yellow(1, drift=True), landing_key(landing, "yellow", 2023, 1))
     _write(_yellow(4), landing_key(landing, "yellow", 2023, 4))
     _write(_yellow(5), landing_key(landing, "yellow", 2023, 5))
@@ -118,10 +124,8 @@ def test_full_pipeline(spark, lake, tmp_path):
 
 def test_corrupt_batch_is_quarantined_not_fatal(spark, tmp_path):
     """A landing batch with an unreadable footer is recorded to the
-    file-level quarantine and skipped; healthy batches still process.
-    A drifted month forces the per-batch path where quarantine lives."""
-    import json
-
+    file-level quarantine and skipped; healthy batches still process,
+    here next to a drifted month."""
     landing = tmp_path / "landing"
     _write(_yellow(1, drift=True), landing_key(landing, "yellow", 2023, 1))
     _write(_yellow(4), landing_key(landing, "yellow", 2023, 4))
@@ -146,8 +150,6 @@ def test_corrupt_batch_is_quarantined_not_fatal(spark, tmp_path):
     assert "partition_date=202302" in entries[0]["path"]
 
     # re-run: quarantine log stays deduplicated, metrics expose the count
-    from nyc_taxi_data_pipeline_elt_spark.pipeline import process_trips
-
     metrics = process_trips(spark, cfg, "yellow")
     assert metrics["batches_quarantined"] == 1
     entries = [json.loads(l) for l in qlog.read_text().splitlines()]
@@ -181,8 +183,6 @@ def test_empty_inputs_write_schema_correct_reports(spark, tmp_path):
 def test_partition_scoped_rerun_preserves_siblings(spark, lake):
     """Dynamic partition overwrite: re-processing one fleet must not clobber
     the other fleet's consumer partitions (process_data_glue.py:184-190)."""
-    from nyc_taxi_data_pipeline_elt_spark.pipeline import process_trips
-
     run(spark, lake)
     before_green = spark.read.parquet(lake.consumer_dir).filter(
         "trip_type = 'green'"
@@ -197,3 +197,92 @@ def test_partition_scoped_rerun_preserves_siblings(spark, lake):
         "rows_dead_lettered": 9,
         "batches_quarantined": 0,
     }
+
+
+def test_footer_planned_read_runs_one_job_per_footer_schema(spark, lake):
+    """The drifted yellow fleet has two footer schemas (January's float64
+    passenger_count, April's and May's int64): the read runs exactly one
+    schema-inference job per schema and none of them fails."""
+    sc = spark.sparkContext
+    group = f"landing-read-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "footer-planned landing read")
+    try:
+        raw, n_quarantined = read_landing_conformed(spark, lake.landing_dir, "yellow")
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = [tracker.getJobInfo(i) for i in tracker.getJobIdsForGroup(group)]
+    assert len(jobs) == 2
+    assert all(j.status == "SUCCEEDED" for j in jobs)
+    assert n_quarantined == 0
+    assert raw.count() == 15
+    assert dict(raw.dtypes)["passenger_count"] == "bigint"
+
+
+def test_unreadable_batches_quarantined_in_fleet_without_drift(spark, tmp_path):
+    """Without drift every healthy month shares one scan; a corrupt
+    footer and a month whose types conformance rejects are each
+    quarantined, and the healthy months still process. A quarantined
+    batch loses all its files, also one whose footer matches the
+    healthy months."""
+    landing = tmp_path / "landing"
+    _write(_yellow(4), landing_key(landing, "yellow", 2023, 4))
+    _write(_yellow(5), landing_key(landing, "yellow", 2023, 5))
+    bad = landing_key(landing, "yellow", 2023, 2)
+    bad.parent.mkdir(parents=True, exist_ok=True)
+    bad.write_bytes(b"this is not parquet")
+    rejected = landing_key(landing, "yellow", 2023, 3)
+    _write(_yellow(3).astype({"total_amount": str}), rejected)
+    _write(_yellow(3), rejected.parent / "extra.parquet")
+    cfg = PipelineConfig(
+        landing_dir=str(landing),
+        consumer_dir=str(tmp_path / "consumer"),
+        reports_dir=str(tmp_path / "reports"),
+        dlq_dir=str(tmp_path / "dlq"),
+    )
+
+    metrics = process_trips(spark, cfg, "yellow")
+
+    assert metrics == {
+        "rows_written": 4,
+        "rows_dead_lettered": 6,
+        "batches_quarantined": 2,
+    }
+    consumer = spark.read.parquet(cfg.consumer_dir)
+    assert {r.trip_month for r in consumer.select("trip_month").collect()} == {4, 5}
+    entries = [
+        json.loads(line)
+        for line in (landing / "_quarantine.jsonl").read_text().splitlines()
+    ]
+    assert {e["path"] for e in entries} == {str(bad.parent), str(rejected.parent)}
+
+
+def test_failed_dlq_write_fails_stage_and_rerun_repairs(spark, lake, monkeypatch):
+    """The dead-letter write runs on a side thread: its failure must
+    surface on the calling thread after the thread ended, and a re-run
+    must restore both tables."""
+    real_write = pipeline.write_partitioned
+    side: dict = {}
+
+    def failing_write(df, path, partition_by, mode="overwrite"):
+        if path == lake.dlq_dir:
+            side["thread"] = threading.current_thread()
+            raise OSError("dead-letter sink unavailable")
+        real_write(df, path, partition_by, mode)
+
+    monkeypatch.setattr(pipeline, "write_partitioned", failing_write)
+    with pytest.raises(OSError, match="dead-letter sink unavailable"):
+        process_trips(spark, lake, "yellow")
+    assert side["thread"] is not threading.main_thread()
+    assert not side["thread"].is_alive()
+
+    monkeypatch.setattr(pipeline, "write_partitioned", real_write)
+    metrics = process_trips(spark, lake, "yellow")
+    assert metrics == {
+        "rows_written": 6,
+        "rows_dead_lettered": 9,
+        "batches_quarantined": 0,
+    }
+    assert spark.read.parquet(lake.consumer_dir).count() == 6
+    assert spark.read.parquet(lake.dlq_dir).count() == 9

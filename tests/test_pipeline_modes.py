@@ -5,10 +5,10 @@
   stream + reconcilable append)
 - snapshot-committed (``consumer_table=SnapshotTable``, exactly-once)
 
-On the same landing input — including the drift month that forces the
-per-batch conformance path — all three must produce the same consumer
-table (rows and schema on the consumer contract columns) and the same
-dead-letter rows."""
+On the same landing input — including the drift month, which gives the
+batch read a second footer schema to conform — all three must produce the
+same consumer table (rows and schema on the consumer contract columns) and
+the same dead-letter rows."""
 
 from __future__ import annotations
 

@@ -11,8 +11,12 @@ correct views when queries switch scale factors.
 
 from __future__ import annotations
 
+import os
+
+import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+from nyc_taxi_data_pipeline_elt_spark.sources import readers
 from nyc_taxi_data_pipeline_elt_spark.sources.catalog import (
     register_testdata_views,
 )
@@ -140,3 +144,56 @@ def test_events_ts_normalized_type_unchanged(spark):
     a = sorted(str(r["ts"]) for r in plain.select("ts").collect())
     b = sorted(str(r["ts"]) for r in ev.select("ts").collect())
     assert a == b
+
+
+def test_memo_skipped_when_fixture_cannot_be_stat(spark, monkeypatch):
+    """ADVICE r14: a fixture whose stat fails is read without the memo
+    instead of being cached under a key no rewrite can ever change."""
+    def no_stat(path):
+        raise OSError("stat unavailable")
+
+    load_table(spark, SF_DIR, "nation")
+    memo = spark._ntx_schema_memo
+    before = dict(memo)
+    monkeypatch.setattr(readers, "_memo_key", no_stat)
+    df = load_table(spark, SF_DIR, "nation")
+    assert df.count() > 0
+    assert memo == before
+
+
+def test_directory_fixture_keyed_on_part_files(spark, tmp_path):
+    """A directory fixture whose part file is rewritten in place keeps
+    the directory's own stat; the memo key must still change."""
+    table = tmp_path / "sfD" / "region.parquet"
+    table.mkdir(parents=True)
+    part = table / "part-00000.parquet"
+    src = pq.read_table(f"{SF_DIR}/region.parquet")
+    pq.write_table(src, part)
+    (table / "_SUCCESS").touch()
+    assert set(load_table(spark, str(table.parent), "region").columns) == {
+        "r_regionkey", "r_name"
+    }
+    dir_stat = os.stat(table)
+    pq.write_table(src.select(["r_regionkey"]), part)
+    st = os.stat(part)
+    os.utime(part, ns=(st.st_atime_ns, st.st_mtime_ns + 1_000_000))
+    assert os.stat(table).st_mtime_ns == dir_stat.st_mtime_ns
+    assert set(load_table(spark, str(table.parent), "region").columns) == {
+        "r_regionkey"
+    }
+
+
+def test_register_views_when_sentinel_check_raises(spark, monkeypatch):
+    """ADVICE r14: a sentinel check that raises must re-register (the
+    registration is idempotent) rather than serve an unverified skip."""
+    register_testdata_views(spark, SF_DIR)
+    n = spark.sql("SELECT count(*) AS n FROM nation").first()["n"]
+    spark.catalog.dropTempView("nation")
+
+    def broken(*_a, **_k):
+        raise RuntimeError("catalog unavailable")
+
+    monkeypatch.setattr(spark.catalog, "tableExists", broken)
+    register_testdata_views(spark, SF_DIR)
+    monkeypatch.undo()
+    assert spark.sql("SELECT count(*) AS n FROM nation").first()["n"] == n

@@ -1102,3 +1102,19 @@ def test_with_event_time_order_option_validation(spark, tmp_path):
             eventTimeColumn="ts",
             readChangeFeed="true",
         )
+
+
+@pytest.mark.parametrize(
+    "query", ["snapshot_mapped_stream_read", "snapshot_cdf_stream_mirror"]
+)
+def test_stream_timeout_stops_stream_and_raises(spark, monkeypatch, query):
+    """A stream that outlives its bound is stopped and reported as a
+    timeout, before any count comparison could misreport it."""
+    from conftest import SF_DIR
+
+    from nyc_taxi_data_pipeline_elt_spark.plans import etl_queries
+
+    monkeypatch.setattr(etl_queries, "STREAM_TIMEOUT_S", 0.001)
+    with pytest.raises(TimeoutError, match="did not finish"):
+        getattr(etl_queries, query)(spark, SF_DIR)
+    assert spark.streams.active == []
