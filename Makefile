@@ -1,10 +1,17 @@
 # Driver targets for the engine (the reference's Makefile deploys AWS
 # infra; this one runs the engine locally).
 
-.PHONY: test bench bench-small demo smoke perfbench perfbench-selftest
+.PHONY: test prover-gate bench bench-small demo smoke perfbench perfbench-selftest
 
+# The ROADMAP tier-1 command.
 test:
-	python -m pytest tests/ -q
+	export SPARK_GRAFT_CPUS="$$(env -u OMP_NUM_THREADS nproc)" SPARK_LOCAL_DIRS=/tmp/spark-local; \
+	timeout -k 10 2670 python -m pytest tests/ -q --continue-on-collection-errors -p no:cacheprovider
+
+# The stats-prover soundness gate on its own: the property test against
+# Spark's evaluation plus the verdict table and pruning integration tests.
+prover-gate:
+	python -m pytest tests/test_prover_properties.py tests/test_conjunctive_prover.py -q -p no:cacheprovider
 
 bench:
 	python bench.py

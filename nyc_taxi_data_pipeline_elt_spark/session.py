@@ -121,6 +121,15 @@ def tune(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def default_driver_memory() -> str:
+    """Driver heap for a session this module builds: half the host's
+    physical memory, capped at 48g. A fixed 48g let G1 grow a local
+    JVM toward a heap the host does not have (12 GB resident on a 15 GB
+    host before it was killed). ``SPARK_DRIVER_MEMORY`` overrides."""
+    phys = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    return f"{max(1, min(48, phys // 2 // 2**30))}g"
+
+
 def get_spark(app_name: str = "nyc-taxi-elt-spark", cpus: int | None = None) -> SparkSession:
     """Build (or reuse) a local session sized to the host.
 
@@ -134,7 +143,10 @@ def get_spark(app_name: str = "nyc-taxi-elt-spark", cpus: int | None = None) -> 
         .master(f"local[{cpus}]")
         # Shuffle partitions ~ cores for local; AQE coalesces further.
         .config("spark.sql.shuffle.partitions", str(max(cpus, 8)))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # keep saveAsTable output (bucketed tables) out of the repo tree
         .config("spark.sql.warehouse.dir", "/tmp/ntx_warehouse")

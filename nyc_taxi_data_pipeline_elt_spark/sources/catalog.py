@@ -1,4 +1,4 @@
-"""Catalog & SQL consumption surface (SURVEY.md §2.1 S9/S10).
+"""Catalog & SQL consumption surface (SURVEY.md §2.1 S10).
 
 The reference registers tables in the Glue Data Catalog via Terraform and
 syncs partitions with an async Athena ``MSCK REPAIR TABLE``
@@ -16,26 +16,6 @@ from nyc_taxi_data_pipeline_elt_spark.sources.readers import (
     TESTDATA_TABLES,
     load_table,
 )
-
-
-def register_parquet_table(
-    spark: SparkSession, name: str, path: str, partitioned: bool = False
-) -> None:
-    """Expose a parquet location as a catalog table.
-
-    For partitioned locations this is the engine's MSCK-equivalent: an
-    external table whose partitions are discovered (S9). Non-partitioned
-    locations register as plain external tables.
-    """
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    spark.sql(
-        f"CREATE TABLE {name} USING parquet OPTIONS (path '{path}')"
-    )
-    if partitioned:
-        # spark.catalog.recoverPartitions == MSCK REPAIR TABLE
-        # (process_data_glue.py:110), synchronous and in-session instead of
-        # the reference's fire-and-forget Athena call.
-        spark.catalog.recoverPartitions(name)
 
 
 def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:

@@ -37,16 +37,6 @@ def landing_key(landing_dir: str, trip_type: str, year: int, month: int) -> Path
     )
 
 
-def ingest_local_file(
-    src: str, landing_dir: str, trip_type: str, year: int, month: int
-) -> Path:
-    """Copy a local parquet into the landing layout (S2, offline variant)."""
-    dst = landing_key(landing_dir, trip_type, year, month)
-    dst.parent.mkdir(parents=True, exist_ok=True)
-    shutil.copyfile(src, dst)
-    return dst
-
-
 def ingest_http(
     landing_dir: str,
     trip_type: str,

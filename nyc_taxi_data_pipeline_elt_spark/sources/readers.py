@@ -1,4 +1,4 @@
-"""Scans (SURVEY.md §2.1: S3, S4, S5, S10).
+"""Scans (SURVEY.md §2.1: S3, S4, S5).
 
 The reference reads landing parquet with schema merging
 (``/root/reference/src/process_data_glue.py:137-139``) and prunes
@@ -156,14 +156,6 @@ def read_layer(
     if df.isEmpty():
         return None
     return df
-
-
-def to_pandas(df: DataFrame):
-    """Consumption boundary (S10): the reference pulls report tables into
-    pandas via PyAthena (``analysis/analytics_job.py:21-38``); here it is
-    the Arrow-backed ``toPandas`` on an already-aggregated (small) result.
-    """
-    return df.toPandas()
 
 
 def read_jsonl_with_dlq(

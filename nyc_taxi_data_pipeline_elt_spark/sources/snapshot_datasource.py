@@ -48,6 +48,8 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
 )
 
+from nyc_taxi_data_pipeline_elt_spark.sources import stats_prover
+
 _PUSHABLE = {
     EqualTo: "=",
     GreaterThan: ">",
@@ -309,6 +311,7 @@ class SnapshotDataSource(DataSource):
             # returns logical ones (a user-supplied reader schema works
             # too — it is logical, exactly like schema()'s)
             phys=dict(snap.column_mapping or {}),
+            types={f.name: f.dataType.simpleString() for f in schema.fields},
         )
 
     def streamReader(self, schema):
@@ -1173,9 +1176,11 @@ class _SnapshotReader(DataSourceReader):
         stats: dict | None = None,
         dv: dict | None = None,
         phys: dict | None = None,
+        types: dict | None = None,
     ):
         self.files = files
         self.arrow_schema = arrow_schema  # unified target schema (picklable)
+        self.types = types or {}  # logical column -> Spark type name
         self.columns = arrow_schema.names
         self.stats = stats or {}
         self.dv = dv or {}  # abs data file -> (abs dv file, rel file)
@@ -1218,80 +1223,24 @@ class _SnapshotReader(DataSourceReader):
                 ]
         return out
 
-    def _file_may_match(self, path: str) -> bool:
-        import pyarrow as pa
-
-        from nyc_taxi_data_pipeline_elt_spark.sources.snapshots import (
-            _probe_key,
-        )
-
-        env = self._envelopes(path)
-        for col, op, value in self.pushed:
-            # NTZ vs zoned probe semantics come from the reader schema
-            # (the logical name — before physical translation)
-            ftype = (
-                self.arrow_schema.field(col).type
-                if col in self.arrow_schema.names
-                else None
-            )
-            ntz = (
-                ftype is not None
-                and pa.types.is_timestamp(ftype)
-                and ftype.tz is None
-            )
-            # stats/footers key the PHYSICAL name (what the file holds);
-            # pushed conjuncts speak logical — translate at lookup
-            col = self.phys.get(col, col)
-            # non-envelope manifest entries (e.g. __num_rows__) never prune
-            if col not in env or not isinstance(env[col], (list, tuple)):
-                continue
-            # manifest envelopes store timestamps/dates as ISO strings;
-            # footer envelopes (legacy) yield datetimes — normalize both
-            # sides; a cross-family pair is inconclusive (may match)
-            lo = _probe_key(env[col][0], ntz)
-            hi = _probe_key(env[col][1], ntz)
-            value = (
-                [_probe_key(v, ntz) for v in value]
-                if op == "in"
-                else _probe_key(value, ntz)
-            )
-
-            def _nan(x):
-                return isinstance(x, float) and x != x
-
-            if (
-                _nan(lo)
-                or _nan(hi)
-                or (
-                    any(_nan(v) for v in value)
-                    if op == "in"
-                    else _nan(value)
-                )
-            ):
-                # NaN comparisons are all False — the NEGATED prune
-                # tests below would misread that as "provably outside"
-                # and drop a file whose rows match (review r12 pass 4,
-                # legacy footer envelopes can still carry NaN bounds)
-                continue
-            try:
-                if (
-                    (op == "=" and not lo <= value <= hi)
-                    or (op == ">" and hi <= value)
-                    or (op == ">=" and hi < value)
-                    or (op == "<" and lo >= value)
-                    or (op == "<=" and lo > value)
-                    or (op == "in" and not any(lo <= v <= hi for v in value))
-                ):
-                    return False
-            except TypeError:
-                continue
-        return True
-
     def partitions(self):
         # one partition per committed data file (scan parallelism follows
         # the manifest, no directory listing), minus files whose footer
         # stats prove they cannot match the pushed conjuncts
-        files = [f for f in self.files if self._file_may_match(f)]
+        if not self.pushed:
+            return [InputPartition(f) for f in self.files]
+        # pushed conjuncts speak logical names and carry Python values:
+        # typed by the reader schema, keyed by the PHYSICAL name the
+        # envelopes (manifest stats or footers) use
+        ir = stats_prover.probe_ir(
+            (self.phys.get(c, c), op, v, self.types.get(c))
+            for c, op, v in self.pushed
+        )
+        files = [
+            f
+            for f in self.files
+            if not stats_prover.disjoint(ir, self._envelopes(f))
+        ]
         return [InputPartition(f) for f in files]
 
     def read(self, partition: InputPartition):

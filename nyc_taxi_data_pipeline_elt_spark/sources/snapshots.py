@@ -59,7 +59,6 @@ import shutil
 import time
 import uuid
 from dataclasses import dataclass
-from functools import lru_cache as _lru_cache
 from pathlib import Path
 
 from pyspark import InheritableThread
@@ -72,97 +71,15 @@ from pyspark.sql.functions import max as F_max
 from pyspark.sql.functions import min as F_min
 from pyspark.sql.functions import when as F_when
 
+from nyc_taxi_data_pipeline_elt_spark.sources import stats_prover as _prover
+from nyc_taxi_data_pipeline_elt_spark.sources.stats_prover import _stat_key
+
 _log = logging.getLogger(__name__)
 
-
-class _AmbiguousLocalTime(TypeError):
-    """A naive datetime probe falls inside a DST-ambiguous or
-    nonexistent OS-local hour (ADVICE r12): its fold=0 and fold=1 local
-    interpretations map to different instants, and pyspark's own
-    ``TimestampType.toInternal`` (``time.mktime``, ``tm_isdst=-1``) may
-    pick either — so no single envelope key can be trusted to agree
-    with the engine's row-level comparison. Subclasses TypeError on
-    purpose: every prover already treats a TypeError as INCONCLUSIVE
-    (no prune), which is exactly the sound fallback here."""
-
-
-#: sentinel for "no sound envelope key exists for this probe value" —
-#: consumers check it explicitly and treat it as inconclusive
-_AMBIG = object()
 
 #: sentinel for "caller did not pass a resolved snapshot" (None means
 #: "no committed snapshot", so it cannot double as the default)
 _UNSET_SNAP = object()
-
-
-def _stat_key(v):
-    """Normalize a live Python value for comparison against a manifest
-    stats envelope: datetimes/dates become the ISO-8601 strings the
-    manifest stores (lexical order == chronological, UTC-naive).
-    Everything else passes through — numeric envelopes compare
-    natively. Callers wrap the comparison in a TypeError guard: a
-    cross-family pair (e.g. a string envelope probed with a number) is
-    INCONCLUSIVE, never a prune.
-
-    NAIVE datetimes are interpreted as OS-LOCAL wall time — review r12:
-    that is pyspark's own collect/lit contract for TimestampType
-    (``TimestampType.fromInternal`` renders driver-local naive
-    datetimes regardless of ``spark.sql.session.timeZone``, and
-    ``toInternal`` converts local naive back to UTC micros), so the
-    merge key-range probe and user-passed predicate values mean
-    local wall clock. Treating them as UTC silently shifted every
-    envelope comparison by the host offset on non-UTC drivers —
-    wrong-prune, data-loss class. A naive value inside a DST-ambiguous
-    or imaginary local hour has no unanimous instant (its two fold
-    readings disagree, and pyspark's mktime-based conversion may pick
-    either) — :class:`_AmbiguousLocalTime` (a TypeError: existing
-    guards already read it as inconclusive)."""
-    import datetime as _dt
-
-    if isinstance(v, _dt.datetime):
-        if v.tzinfo is None:
-            # OS-local interpretation (the pyspark collect contract),
-            # fold-unanimous: both PEP-495 readings of an ambiguous /
-            # nonexistent local hour must agree on the instant
-            a = v.replace(fold=0).astimezone(_dt.timezone.utc)
-            b = v.replace(fold=1).astimezone(_dt.timezone.utc)
-            if a != b:
-                raise _AmbiguousLocalTime(
-                    f"naive datetime {v.isoformat()} falls in a "
-                    "DST-ambiguous or nonexistent OS-local hour"
-                )
-            v = a
-        v = v.astimezone(_dt.timezone.utc).replace(tzinfo=None)
-        return v.isoformat()
-    if isinstance(v, _dt.date):
-        return v.isoformat()
-    return v
-
-
-def _probe_key(v, ntz: bool):
-    """Normalize a live probe value for a column given its timestamp
-    semantics, or None when no sound key exists (a naive zoned probe in
-    a DST-ambiguous/nonexistent OS-local hour — ADVICE r12; callers'
-    ``is not None`` / TypeError guards read None as inconclusive). NTZ
-    columns store WALL-time ISO envelopes: naive probes (pyspark
-    renders TimestampNTZType tz-free) pass through verbatim, and the
-    filter-pushdown worker's wall-tagged-aware values DROP their tag
-    wall-preservingly (``replace(tzinfo=None)`` — ADVICE r12: the
-    worker tags an NTZ literal's wall reading with the session zone,
-    whatever it is; shifting through UTC was only correct under the
-    UTC pin). ZONED columns route through :func:`_stat_key`
-    (UTC-instant envelopes, naive probes interpreted OS-local per the
-    pyspark collect/lit contract)."""
-    import datetime as _dt
-
-    if ntz and isinstance(v, _dt.datetime):
-        if v.tzinfo is not None:
-            v = v.replace(tzinfo=None)
-        return v.isoformat()
-    try:
-        return _stat_key(v)
-    except _AmbiguousLocalTime:
-        return None
 
 
 def _file_stats(abspath: str) -> dict:
@@ -176,7 +93,7 @@ def _file_stats(abspath: str) -> dict:
     safe, lexically chronological) — without them a time-keyed table
     (the commonest CDC/merge key shape) could never stats-prune, so
     every merge touched every file. Consumers compare through
-    :func:`_stat_key` / :func:`_probe_key`."""
+    :func:`stats_prover.env_key`, typed by the column's Spark type."""
     import datetime as _dt
 
     import pyarrow.parquet as pq
@@ -284,426 +201,6 @@ def _dv_new_list(value) -> list[str]:
     return [value] if isinstance(value, str) else list(value)
 
 
-# Expressions the manifest stats can PROVE file-wide: a single
-# comparison between one column and one literal (either order), or
-# BETWEEN — or, r13, any AND/OR tree over those
-# (:func:`_split_disjunction` / :func:`_split_conjunction`, SQL
-# precedence: OR loosest, BETWEEN's AND bound to its BETWEEN):
-# `DELETE WHERE ts < '2023-01-05' AND tenant = 'EU'`, the multi-tenant
-# retention purge, prunes on either conjunct's envelope, and the
-# IN-list shape `tenant = 'x' OR tenant = 'y'` prunes when every
-# disjunct does. Literals are numeric, or — r12 — quoted date/time
-# strings (optionally DATE/TIMESTAMP-prefixed), compared against the
-# ISO-8601 envelopes _file_stats records. Anything else (NOT,
-# arithmetic, function calls) is conservatively inconclusive and falls
-# back to a row scan. NULL rows pass CHECK under SQL semantics and
-# parquet min/max ignore nulls, so proving the envelope proves every
-# row.
-_NUMLIT = r"-?\d+(?:\.\d+)?"
-_QLIT = r"(?i:timestamp\s+|date\s+)?'([^']*)'"
-_LIT = rf"({_NUMLIT})|{_QLIT}"
-_CMP_RE = _re.compile(
-    rf"^\s*\(?\s*([A-Za-z_][A-Za-z0-9_]*)\s*(>=|<=|==|=|>|<)\s*"
-    rf"(?:{_LIT})\s*\)?\s*$"
-)
-_CMP_FLIP_RE = _re.compile(
-    rf"^\s*\(?\s*(?:{_LIT})\s*(>=|<=|==|=|>|<)\s*"
-    rf"([A-Za-z_][A-Za-z0-9_]*)\s*\)?\s*$"
-)
-_BETWEEN_RE = _re.compile(
-    rf"^\s*\(?\s*([A-Za-z_][A-Za-z0-9_]*)\s+BETWEEN\s+(?:{_LIT})"
-    rf"\s+AND\s+(?:{_LIT})\s*\)?\s*$",
-    _re.IGNORECASE,
-)
-_FLIP = {">=": "<=", "<=": ">=", ">": "<", "<": ">", "=": "=", "==": "=="}
-
-# date / timestamp literal shapes Spark coerces when compared against a
-# date/timestamp column (second fraction up to nanos; space or T sep)
-_ISOISH_RE = _re.compile(
-    r"^\d{4}-\d{2}-\d{2}([ T]\d{2}:\d{2}:\d{2}(\.\d{1,9})?)?$"
-)
-_ISO_TS_RE = _re.compile(r"^\d{4}-\d{2}-\d{2}T")  # _stat_key datetime form
-_ISO_DATE_RE = _re.compile(r"^\d{4}-\d{2}-\d{2}$")  # _stat_key date form
-
-
-def _num(text: str):
-    """Parse a numeric literal preserving int-ness: integer CHECK
-    literals must compare exactly against int64 envelopes (review r8:
-    routing both through float() loses precision past 2^53 and made the
-    prover unsound there — Python's mixed int/float comparisons are
-    exact, float conversion is not)."""
-    return float(text) if "." in text else int(text)
-
-
-def _lit(num_g: str | None, str_g: str | None):
-    """The literal a grammar match captured: numeric group or quoted
-    string group (exactly one is non-None)."""
-    return _num(num_g) if num_g is not None else str_g
-
-
-def _env_family(env) -> str | None:
-    """The comparison family an envelope belongs to — the only
-    env-dependent input to candidate construction (review r12 pass 4:
-    per-(file, value) candidate recomputation was O(files x values)
-    regex work; the family is 2 cheap matches per file and the
-    candidates memoize per (family, literal))."""
-    if not (isinstance(env, (list, tuple)) and len(env) == 2):
-        return None
-    if _env_numeric(env):
-        return "num"
-    if all(isinstance(x, str) for x in env):
-        if all(_ISO_TS_RE.match(x) for x in env):
-            return "ts"
-        if all(_ISO_DATE_RE.match(x) for x in env):
-            return "date"
-        return "str"
-    return None
-
-
-@_lru_cache(maxsize=4096)
-def _env_candidates(fam: str, lit) -> tuple | None:
-    """Candidate probe values for ``lit`` against an envelope of family
-    ``fam`` — a prover must be unanimous over them; None = unusable
-    pair (cross-family, or a comparison whose lexical order would
-    diverge from the engine's evaluation):
-
-    - numeric lit x numeric envelope: as-is (exact int/float compare);
-    - date/time-shaped lit x ISO-datetime envelope: BOTH the raw
-      literal and its normalized form (space sep -> 'T', date-only
-      padded to midnight, fraction canonicalized to isoformat's
-      rendering). The normalized form is exactly the timestamp Spark
-      coerces the string to on a TIMESTAMP column — but an
-      ISO-datetime-shaped envelope can also belong to a plain STRING
-      column holding ISO text, which Spark compares lexically against
-      the RAW literal (review r12: padding alone wrongly pruned
-      ``s > '2023-01-05'`` against a string value
-      '2023-01-05T00:00:00'). Unanimity across both interpretations is
-      sound for either column type;
-    - date-shaped lit x ISO-date envelope: as-is; a literal WITH a
-      time part against a date column is inconclusive (Spark casts,
-      truncating — lexical order would disagree);
-    - plain-string lit x plain-string envelope: raw lexical. Parquet
-      string bounds may be writer-truncated but remain valid BOUNDS
-      (max rounds up), so range pruning/proving stays sound;
-    - a non-date string against a date/time envelope (Spark would cast,
-      not compare lexically), or any other mix: None.
-    """
-    if isinstance(lit, (int, float)) and not isinstance(lit, bool):
-        return (lit,) if fam == "num" else None
-    if not isinstance(lit, str) or fam == "num":
-        return None
-    if _ISOISH_RE.match(lit):
-        if fam == "ts":
-            norm = lit.replace(" ", "T")
-            if len(norm) == 10:
-                norm += "T00:00:00"
-            if "." in norm:
-                # canonicalize the fraction to isoformat's rendering
-                # (review r12 pass 2: '...00.5' compared lexically
-                # against the envelope's '...00.500000' and wrongly
-                # pruned boundary-equal rows): pad to 6 digits, drop an
-                # all-zero fraction (isoformat omits it), refuse
-                # beyond-micros precision (Spark's parse rounding vs
-                # lexical order can diverge there)
-                head, frac = norm.split(".")
-                if len(frac) > 6:
-                    return None
-                norm = (
-                    head
-                    if set(frac) == {"0"}
-                    else head + "." + frac.ljust(6, "0")
-                )
-            return (lit,) if norm == lit else (lit, norm)
-        if fam == "date":
-            return (lit,) if len(lit) == 10 else None
-        return (lit,)  # plain string column holding date-ish text
-    return None if fam in ("ts", "date") else (lit,)
-
-
-def _env_probe(env, lit, allow_time: bool = True):
-    """Candidate probe values for ``lit`` against ``env`` (see
-    :func:`_env_candidates`), or None when the pair is unusable.
-    ``allow_time=False`` (ADVICE r12: the caller's session timezone is
-    not UTC, see :func:`_utc_session`) makes every timestamp/date
-    envelope unusable — Spark's string→timestamp literal coercion is
-    session-zone-dependent, so the ISO-envelope comparison model only
-    holds under the engine's UTC pin; numeric and plain-string
-    comparisons are zone-independent and stay available."""
-    fam = _env_family(env)
-    if fam is None:
-        return None
-    if not allow_time and fam in ("ts", "date"):
-        return None
-    return _env_candidates(fam, lit)
-
-
-def _utc_session(spark) -> bool:
-    """True when ``spark``'s SQL session timezone is UTC — the zone the
-    time-family stats provers' literal-coercion model assumes (the
-    repo-wide ``session.tune()`` pin). The table-format layer is
-    callable from a vanilla non-UTC session, where a timestamp-literal
-    prune would silently use shifted values (ADVICE r12, data-loss
-    class): callers pass ``allow_time=_utc_session(spark)`` so such
-    sessions fall back to row scans / full touches — correct, just
-    slower. Unknown (conf unreadable) counts as non-UTC."""
-    try:
-        tz = spark.conf.get("spark.sql.session.timeZone")
-    except Exception:
-        return False
-    return tz in ("UTC", "Etc/UTC", "Etc/Universal", "GMT", "Z", "+00:00")
-
-
-#: bound on the provers' SPLIT-recursion depth (one tick per AND/OR
-#: alternation, so ~16 syntactic AND/OR nesting levels; redundant paren
-#: wrapping is peeled iteratively and costs no depth): past it an
-#: expression is treated as inconclusive instead of risking a
-#: RecursionError escaping into DELETE/restore planning (review r13
-#: pass 5) — far beyond any human-written predicate
-_BOOL_DEPTH_MAX = 32
-
-
-def _strip_parens(expr: str) -> str:
-    """Peel redundant whole-expression parentheses, quote-aware:
-    ``'((a AND b))'`` → ``'a AND b'``; ``'(a) AND (b)'`` is untouched
-    (its first paren closes mid-string)."""
-    s = expr.strip()
-    while s.startswith("(") and s.endswith(")"):
-        depth, in_q, wraps = 0, False, True
-        for i, ch in enumerate(s):
-            if in_q:
-                in_q = ch != "'"
-                continue
-            if ch == "'":
-                in_q = True
-            elif ch == "(":
-                depth += 1
-            elif ch == ")":
-                depth -= 1
-                if depth == 0 and i != len(s) - 1:
-                    wraps = False
-                    break
-        if not wraps or depth != 0 or in_q:
-            break
-        s = s[1:-1].strip()
-    return s
-
-
-def _split_bool(expr: str, keyword: str) -> list[str] | None:
-    """The ONE quote/paren-aware top-level splitter behind
-    :func:`_split_conjunction` (``keyword='AND'``) and
-    :func:`_split_disjunction` (``keyword='OR'``) — review r13 pass 5:
-    two hand-copied scanners had already diverged once; every lexer
-    rule must live exactly once. Semantics:
-
-    - ``'AND'`` mode: split at top-level ANDs; the AND belonging to a
-      BETWEEN binds to its BETWEEN (``x BETWEEN 1 AND 2 AND y = 3``
-      splits after the 2); a top-level OR is refused (the caller's
-      per-conjunct logic is only sound for conjunctions — the
-      disjunction pass has already run);
-    - ``'OR'`` mode: split at top-level ORs (OR is the loosest SQL
-      operator, so this pass runs FIRST: ``a AND b OR c`` =
-      ``(a AND b) OR c``); ANDs stay inside their disjunct.
-
-    None = out of grammar → the provers treat the expression as
-    inconclusive: a top-level NOT, unbalanced parens/quotes, a
-    dangling BETWEEN, an empty operand, or — review r13 pass 5,
-    reproduced corruption class — a lexer construct Spark's SQL parser
-    understands but this scanner does not model: backslash escape
-    sequences (refused anywhere — inside a literal they shift where
-    the literal ENDS, which is exactly what the quote toggle must not
-    mis-track), and double-quoted literals / backticked identifiers /
-    ``--`` and ``/* */`` comments OUTSIDE single-quoted spans (inside
-    a quoted literal they are plain text and stay splittable — pass 6:
-    a blanket substring refusal cost ``note = 'n/a -- none' AND ts <
-    cutoff`` its sound time-conjunct prune). Splitting across any of
-    them could fabricate live branches out of literal interiors and
-    prove/prune unsoundly."""
-    s = _strip_parens(expr)
-    if not s:
-        return None
-    splits: list[tuple[int, int]] = []
-    depth, in_q, pending_between = 0, False, 0
-    word_start: int | None = None
-
-    def _flush(end: int) -> bool:
-        """Classify the bare word ending at ``end``; False = refuse."""
-        nonlocal pending_between
-        w = s[word_start:end].upper()
-        if w == "BETWEEN":
-            pending_between += 1
-        elif w == "AND":
-            if pending_between:
-                pending_between -= 1
-            elif keyword == "AND":
-                splits.append((word_start, end))
-        elif w == "OR":
-            if keyword != "OR":
-                return False
-            splits.append((word_start, end))
-        elif w == "NOT":
-            return False
-        return True
-
-    for i, ch in enumerate(s):
-        if ch == "\\":
-            return None  # escape sequences: unmodelled anywhere
-        if in_q:
-            in_q = ch != "'"
-            continue
-        if ch in ('"', "`"):
-            return None  # double-quoted literal / backticked identifier
-        if (ch == "-" and s.startswith("--", i)) or (
-            ch in "/*" and s[i : i + 2] in ("/*", "*/")
-        ):
-            return None  # comments: Spark drops them, we must not split
-        if depth == 0 and (ch.isalnum() or ch == "_"):
-            if word_start is None:
-                word_start = i
-            continue
-        if word_start is not None:
-            if not _flush(i):
-                return None
-            word_start = None
-        if ch == "'":
-            in_q = True
-        elif ch == "(":
-            depth += 1
-        elif ch == ")":
-            depth -= 1
-            if depth < 0:
-                return None
-    if word_start is not None and not _flush(len(s)):
-        return None
-    if depth != 0 or in_q or pending_between:
-        return None
-    parts, prev = [], 0
-    for a, b in splits:
-        parts.append(s[prev:a].strip())
-        prev = b
-    parts.append(s[prev:].strip())
-    return parts if all(parts) else None
-
-
-def _split_disjunction(expr: str) -> list[str] | None:
-    """Top-level OR disjuncts of ``expr`` (see :func:`_split_bool`)."""
-    return _split_bool(expr, "OR")
-
-
-def _split_conjunction(expr: str) -> list[str] | None:
-    """Top-level AND conjuncts of ``expr`` (VERDICT r12 task #2; see
-    :func:`_split_bool`)."""
-    return _split_bool(expr, "AND")
-
-
-def _envelope_relation(expr: str, fstats: dict, allow_time: bool = True):
-    """Parse ``expr`` under the conservative grammar and normalize its
-    literal(s) against the named column's envelope: returns
-    ``(op, lo, hi, a_cands, b_cands)`` — the literal CANDIDATE lists a
-    prover must be unanimous over (``b_cands`` only for BETWEEN) — or
-    None when out of grammar / no usable envelope. Both provers build
-    on this. ``allow_time=False`` (non-UTC caller session — see
-    :func:`_utc_session`) disables time-family envelopes."""
-    m = _BETWEEN_RE.match(expr)
-    if m:
-        col = m.group(1)
-        a = _lit(m.group(2), m.group(3))
-        b = _lit(m.group(4), m.group(5))
-        env = fstats.get(col)
-        if env is None:
-            return None
-        a = _env_probe(env, a, allow_time)
-        b = _env_probe(env, b, allow_time)
-        if a is None or b is None:
-            return None
-        return "between", env[0], env[1], a, b
-    m = _CMP_RE.match(expr)
-    if m:
-        col, op = m.group(1), m.group(2)
-        lit = _lit(m.group(3), m.group(4))
-    else:
-        m = _CMP_FLIP_RE.match(expr)
-        if not m:
-            return None
-        op, col = _FLIP[m.group(3)], m.group(4)
-        lit = _lit(m.group(1), m.group(2))
-    env = fstats.get(col)
-    if env is None:
-        return None
-    cands = _env_probe(env, lit, allow_time)
-    if cands is None:
-        return None
-    return op, env[0], env[1], cands, None
-
-
-def _check_proven_by_stats(
-    expr: str, fstats: dict, allow_time: bool = True, _depth: int = 0
-) -> bool:
-    """True only when ``fstats``'s [min, max] envelope PROVES every row
-    of the file satisfies the CHECK expression. False means
-    inconclusive (NOT disproven) — the caller must row-scan.
-
-    Conjunctions (VERDICT r12 task #2) prove per conjunct: CHECK passes
-    when the expression is not FALSE for the row, and ``a AND b`` is
-    never FALSE when neither conjunct is — proven iff ALL conjuncts
-    prove. Disjunctions (r13): ``a OR b`` is FALSE only when EVERY
-    disjunct is FALSE — proven iff ANY disjunct proves never-FALSE
-    (``NULL OR FALSE`` is NULL, which passes CHECK). OR binds loosest,
-    so the OR split runs first; each branch re-enters the full prover,
-    so the unanimity / NaN / NTZ / cast guards apply per leaf and
-    arbitrary AND/OR trees resolve. NOT is refused → inconclusive."""
-    if fstats.get("__num_rows__") == 0:
-        return True  # empty file: nothing can violate
-    if _depth > _BOOL_DEPTH_MAX:
-        return False  # pathological nesting: inconclusive, row-scan
-    ors = _split_disjunction(expr)
-    if ors is None:
-        return False
-    if len(ors) > 1:
-        return any(
-            _check_proven_by_stats(o, fstats, allow_time, _depth + 1)
-            for o in ors
-        )
-    parts = _split_conjunction(ors[0])
-    if parts is None:
-        return False
-    if len(parts) > 1:
-        return all(
-            _check_proven_by_stats(p, fstats, allow_time, _depth + 1)
-            for p in parts
-        )
-    rel = _envelope_relation(parts[0], fstats, allow_time)
-    if rel is None:
-        return False
-    op, lo, hi, cands, bs = rel
-
-    def _one(lit, b) -> bool:
-        if op == "between":
-            return lo >= lit and hi <= b
-        if op == ">=":
-            return lo >= lit
-        if op == ">":
-            return lo > lit
-        if op == "<=":
-            return hi <= lit
-        if op == "<":
-            return hi < lit
-        # = / ==: refuse string equality PROVING — parquet string
-        # bounds may be writer-truncated (max rounds UP), so
-        # lo == lit == hi could hold while true values sit below the
-        # literal. Range proofs above stay sound under truncation
-        # because the bounds stay bounds.
-        if isinstance(lit, str):
-            return False
-        return lo == lit == hi
-
-    # unanimity across literal interpretations (timestamp coercion vs
-    # raw string lexical — _env_probe): proven only if EVERY candidate
-    # pairing proves
-    return all(
-        _one(a, b) for a in cands for b in (bs if bs is not None else [None])
-    )
-
-
 def _cdf_enabled(snap: "Snapshot") -> bool:
     """The ``delta.enableChangeDataFeed`` table property, parsed
     case-insensitively (Delta's boolean-property semantics; a literal
@@ -777,91 +274,6 @@ def _rows_of(files, stats: dict) -> int | None:
     — None when any file's count is unrecorded (legacy write)."""
     counts = [stats.get(f, {}).get("__num_rows__") for f in files]
     return sum(counts) if all(c is not None for c in counts) else None
-
-
-def _env_numeric(env) -> bool:
-    """A usable [min, max] stats envelope: two non-bool numerics."""
-    return (
-        isinstance(env, (list, tuple))
-        and len(env) == 2
-        and all(
-            isinstance(x, (int, float)) and not isinstance(x, bool)
-            for x in env
-        )
-    )
-
-
-def _pred_disjoint_by_stats(
-    expr: str, fstats: dict, allow_time: bool = True, _depth: int = 0
-) -> bool:
-    """True only when ``fstats``'s [min, max] envelope PROVES no row of
-    the file can MATCH ``expr`` — the inverse question from
-    :func:`_check_proven_by_stats` (which proves every row satisfies).
-    Drives DELETE / rewrite-rebase file pruning: a provably-disjoint
-    file is carried verbatim, never read. False means inconclusive (the
-    file MAY hold matching rows) — callers must treat it as touched.
-    Grammar: one comparison or BETWEEN (numeric or quoted
-    date/time/string literal — the retention purge ``ts < '<cutoff>'``
-    prunes off the manifest's ISO envelopes), or — VERDICT r12 task #2
-    — a top-level CONJUNCTION of them: a row matches only when every
-    conjunct is TRUE, so ANY conjunct provably match-free proves the
-    file disjoint (the multi-tenant purge ``ts < cutoff AND tenant =
-    'x'`` prunes on either envelope). DISJUNCTIONS (r13): a row
-    matches ``a OR b`` when ANY disjunct is TRUE, so the file is
-    match-free only when EVERY disjunct is provably match-free — the
-    IN-list shape ``tenant = 'x' OR tenant = 'y'`` prunes when both
-    values sit outside the envelope. OR binds loosest (``a AND b OR
-    c`` = ``(a AND b) OR c``), so the OR split runs first; each branch
-    re-enters the full prover (per-leaf unanimity / NaN / NTZ / cast
-    guards), so arbitrary AND/OR trees resolve. NOT is refused →
-    inconclusive. NULL predicate values never match (SQL WHERE
-    semantics) and parquet min/max ignore nulls, so envelope
-    disjointness proves row disjointness. String disjointness stays
-    sound under parquet's bound truncation (a rounded-up max only
-    WIDENS the envelope — fewer prunes, never a wrong one)."""
-    if fstats.get("__num_rows__") == 0:
-        return True  # empty file: nothing can match
-    if _depth > _BOOL_DEPTH_MAX:
-        return False  # pathological nesting: inconclusive, touched
-    ors = _split_disjunction(expr)
-    if ors is None:
-        return False
-    if len(ors) > 1:
-        return all(
-            _pred_disjoint_by_stats(o, fstats, allow_time, _depth + 1)
-            for o in ors
-        )
-    parts = _split_conjunction(ors[0])
-    if parts is None:
-        return False
-    if len(parts) > 1:
-        return any(
-            _pred_disjoint_by_stats(p, fstats, allow_time, _depth + 1)
-            for p in parts
-        )
-    rel = _envelope_relation(parts[0], fstats, allow_time)
-    if rel is None:
-        return False
-    op, lo, hi, cands, bs = rel
-
-    def _one(lit, b) -> bool:
-        if op == "between":
-            return hi < lit or lo > b
-        if op == ">=":
-            return hi < lit
-        if op == ">":
-            return hi <= lit
-        if op == "<=":
-            return lo > lit
-        if op == "<":
-            return lo >= lit
-        return lit < lo or lit > hi  # = / ==
-
-    # unanimity across literal interpretations (_env_probe): a file is
-    # carried only if it is disjoint under EVERY candidate pairing
-    return all(
-        _one(a, b) for a in cands for b in (bs if bs is not None else [None])
-    )
 
 
 def _constraint_scan(spark: SparkSession, paths: list[str], predicate: str):
@@ -2081,6 +1493,18 @@ class SnapshotTable:
             }
         return out
 
+    def _resolve(self, spark: SparkSession, snap: Snapshot, predicate):
+        """Stats-prover IR of ``predicate`` (SQL text or Column) over
+        ``snap``'s LOGICAL schema: the manifest record, else the footer
+        union. Files are judged against :meth:`_logical_view`."""
+        if snap.schema:
+            schema = ", ".join(f"`{n}` {t}" for n, t in snap.schema)
+        elif snap.files:
+            schema = self.read(spark, snap.version, merge_schema=True).schema
+        else:
+            return _prover.UNKNOWN  # no schema and no file to prune
+        return _prover.resolve(spark, predicate, schema)
+
     def _record_partition_values(
         self, written: list[str], stats: dict, pcols: list[str]
     ) -> None:
@@ -2185,6 +1609,7 @@ class SnapshotTable:
             # this fallback only pays the resolution for legacy callers
             partition_spec = self._partition_spec()
         logical_cols = list(df.columns)
+        logical_schema = df.schema
         if mapping:
             df = df.select(
                 *[
@@ -2245,18 +1670,16 @@ class SnapshotTable:
             if enforced_out is not None:
                 enforced_out.update(cons)
             if cons:
-                tz_ok = _utc_session(df.sparkSession)
+                irs = [
+                    _prover.resolve(df.sparkSession, e, logical_schema)
+                    for e in cons.values()
+                ]
                 need_scan = []
                 for f in written:
                     view = self._logical_view(
                         stats.get(f, {}), mapping or {}
                     )
-                    if not all(
-                        _check_proven_by_stats(
-                            expr, view, allow_time=tz_ok
-                        )
-                        for expr in cons.values()
-                    ):
+                    if not all(_prover.proven(ir, view) for ir in irs):
                         need_scan.append(f)
                 if need_scan:
                     self._verify_constraints(
@@ -2462,20 +1885,17 @@ class SnapshotTable:
             if enforced.get(k) != e
         }
         if fresh and files:
-            tz_ok = _utc_session(spark)
             # constraint expressions speak LOGICAL names; stats and the
             # files are physical-keyed on a column-mapped table (review
             # r13 pass 2: the unmapped prove/scan here mis-proved
             # nothing — fail-closed — but aborted rebases with an
             # AnalysisException instead of verifying)
             cmap = dict(snap.column_mapping or {})
+            irs = [self._resolve(spark, snap, e) for e in fresh.values()]
             need = []
             for f in files:
                 view = self._logical_view(stats.get(f, {}), cmap)
-                if not all(
-                    _check_proven_by_stats(e, view, allow_time=tz_ok)
-                    for e in fresh.values()
-                ):
+                if not all(_prover.proven(ir, view) for ir in irs):
                     need.append(f)
             if need:
                 # schema= null-pads columns the batch lacks, so a fresh
@@ -3092,88 +2512,19 @@ class SnapshotTable:
         snap = self.snapshot(cur) if cur is not None else None
         cmap = dict(snap.column_mapping or {}) if snap else {}
 
-        # timestamp/date partition values compare against the manifest's
-        # ISO-string envelopes. ALWAYS the zoned interpretation
-        # (_stat_key), even for NTZ columns — review r12 pass 2: the
-        # row-level scrub/guard is `F_col(c).isin(vals)`, and Spark
-        # resolves an NTZ-column-vs-datetime-literal comparison by
-        # casting the NTZ side to LTZ in the SESSION zone (UTC,
-        # tune()'s pin) while `lit(naive)` renders OS-local — so the
-        # wall reading Spark actually matches is the value's UTC
-        # instant, exactly what _stat_key computes. Probing NTZ
-        # envelopes with the verbatim wall instead diverged from the
-        # scrub by the host offset on non-UTC drivers (carried files
-        # whose rows the predicate covers — corruption class).
-        import datetime as _pdt
-
-        tz_ok = _utc_session(spark)  # ADVICE r12: the isin-cast model
-        # above holds only under the session's UTC pin
-
-        def _pred_key(v):
-            try:
-                return _stat_key(v)
-            except _AmbiguousLocalTime:
-                return _AMBIG  # no unanimous instant: never prunes
-
-        pred_keys = {
-            c: [(_pred_key(v), isinstance(v, _pdt.date)) for v in vals]
-            for c, vals in predicate.items()
-        }
-
-        def _nan(x) -> bool:
-            return isinstance(x, float) and x != x
+        # The scrub's own isin Column decides which files provably hold
+        # no matching row: carried verbatim, and the rebase guard (a
+        # concurrent append whose rows match must abort — they would
+        # survive a replace that covers them).
+        ir = (
+            self._resolve(spark, snap, constraint)
+            if snap
+            else _prover.resolve(spark, constraint, df.schema)
+        )
 
         def _pred_excludes(fstats: dict) -> bool:
-            """ANY conjunct's envelope excludes every accepted value —
-            the file provably holds no matching row. Used both to pick
-            carried files and to vet concurrently-appended files on a
-            commit rebase (a concurrent append whose rows match the
-            predicate must abort the rebase: they would survive a
-            replace that semantically covers them). Each value routes
-            through :func:`_env_probe` (review r12 pass 3: an
-            ISO-STRING or date value probed verbatim never matched the
-            'T'-separated datetime envelopes Spark's isin-cast
-            semantics imply, carrying files the scrub covers —
-            corruption class). Inconclusive (file stays touched):
-            unusable pairs, a TYPED datetime/date value against a
-            plain-string envelope (Spark CASTS the string column for
-            that comparison — space-separated text in the file would
-            match rows the raw-lexical probe calls outside; review r12
-            pass 4), and any NaN on either side (all NaN comparisons
-            are False, which this NEGATED test would otherwise read as
-            'outside' — while Spark's isin treats NaN==NaN as a match;
-            review r12 pass 4, reproduced corruption)."""
-            fstats = self._logical_view(fstats, cmap)
-            if fstats.get("__num_rows__") == 0:
-                return True
+            return _prover.disjoint(ir, self._logical_view(fstats, cmap))
 
-            def _outside(env, v, typed: bool) -> bool:
-                if v is _AMBIG or _nan(env[0]) or _nan(env[1]) or _nan(v):
-                    return False
-                fam = _env_family(env)
-                if typed and fam == "str":
-                    return False  # cast semantics: inconclusive
-                if not tz_ok and (typed or fam in ("ts", "date")):
-                    # non-UTC session (ADVICE r12): the NTZ-as-instant /
-                    # lit-rendering reasoning above no longer holds —
-                    # inconclusive, the file stays touched
-                    return False
-                cands = _env_candidates(fam, v) if fam else None
-                if cands is None:
-                    return False  # unusable pair: inconclusive
-                return not any(env[0] <= cv <= env[1] for cv in cands)
-
-            try:
-                return any(
-                    fstats.get(c) is not None
-                    and vals
-                    and all(
-                        _outside(fstats[c], v, typed) for v, typed in vals
-                    )
-                    for c, vals in pred_keys.items()
-                )
-            except TypeError:
-                return False
         keep_files: list[str] = []
         touched: list[str] = []
         stats = dict(snap.stats or {}) if snap else {}
@@ -3191,14 +2542,10 @@ class SnapshotTable:
         try:
             written_stats = dict(repl_stats)
             if touched:
-                match = None
-                for c, vals in predicate.items():
-                    cond = F_col(c).isin(*vals)
-                    match = cond if match is None else (match & cond)
                 # Null-safe keep: rows with a NULL predicate column inside
                 # a rewritten file can never match the predicate, so they
                 # must be carried into the remainder (Delta keeps them
-                # too); ``~match`` alone evaluates NULL for them and
+                # too); ``~constraint`` alone evaluates NULL for them and
                 # drops them.
                 remainder = self._apply_dv(
                     spark,
@@ -3209,7 +2556,7 @@ class SnapshotTable:
                     else self._read_files(spark, touched),
                     touched,
                     snap.dv if snap else None,
-                ).filter(~F_coalesce(match, F_lit(False)))
+                ).filter(~F_coalesce(constraint, F_lit(False)))
                 # remainder rows are verbatim copies of already-committed
                 # rows: they passed their CHECK at the original write, so
                 # re-verifying would double the rewrite's read I/O for
@@ -3308,7 +2655,7 @@ class SnapshotTable:
         by-source rows, so it can no longer be carried on key stats
         alone — it is carried only when the by-source clause has a
         condition the file's [min, max] envelope PROVES unsatisfiable
-        (:func:`_pred_disjoint_by_stats`); an UNconditional by-source
+        (:func:`stats_prover.disjoint`); an UNconditional by-source
         clause touches every file, which is the true cost of a full
         mirror sync. The concurrent-append rebase guard inverts the
         same way: a concurrently-added file must be both key-disjoint
@@ -3540,73 +2887,48 @@ class SnapshotTable:
                     "(change data enabled)",
                 )
 
-        # session-zone guard (ADVICE r12): the by-source condition
-        # prover compares string literals against time envelopes under
-        # the UTC coercion model; key-range probes are zone-independent
-        # (collect renders NTZ walls / zoned locals per driver contract)
-        tz_ok = _utc_session(spark)
         # key ranges come from the fused probe job above (one batch scan
         # for ambiguity + range instead of two)
         key_range = probe
 
         cmap = dict(snap.column_mapping or {})
 
-        # timestamp/date merge keys: the manifest stores their envelopes
-        # as ISO strings — normalize the probe once, per key column,
-        # honoring NTZ (wall) vs zoned (instant) semantics
-        from pyspark.sql.types import TimestampNTZType
-
-        ntz_cols = {
-            f.name
-            for f in source.schema.fields
-            if isinstance(f.dataType, TimestampNTZType)
-        }
-        key_lo = {
-            c: _probe_key(key_range[f"lo_{c}"], c in ntz_cols)
-            for c in key_cols
-        }
-        key_hi = {
-            c: _probe_key(key_range[f"hi_{c}"], c in ntz_cols)
-            for c in key_cols
+        # the source's key range, typed by the source column; a table
+        # column of another type is unknown (the join casts one side)
+        table_types = dict(snap.schema or ())
+        src_types = {
+            f.name: f.dataType.simpleString() for f in source.schema.fields
         }
 
-        def _keys_disjoint(fstats: dict) -> bool:
-            """ANY key column's envelope is disjoint from the source's
-            key range — the file provably holds no matching key. Used
-            for carried-file pruning and to vet concurrently-appended
-            files on a commit rebase (a concurrent append that may hold
-            a source key escaped this merge's anti-join: abort). A
-            cross-family comparison (legacy envelope vs evolved key
-            type) is inconclusive — treated as touched, never pruned."""
-            fstats = self._logical_view(fstats, cmap)
-            if fstats.get("__num_rows__") == 0:
-                return True
-            try:
-                return any(
-                    fstats.get(c) is not None
-                    and key_lo[c] is not None
-                    and (
-                        fstats[c][1] < key_lo[c]
-                        or fstats[c][0] > key_hi[c]
-                    )
-                    for c in key_cols
-                )
-            except TypeError:
-                return False
+        def _key_type(c: str) -> str | None:
+            t = src_types[c]
+            return t if table_types.get(c, t) == t else None
+
+        key_ir = _prover.probe_ir(
+            (c, op, key_range[f"{end}_{c}"], _key_type(c))
+            for c in key_cols
+            for op, end in ((">=", "lo"), ("<=", "hi"))
+        )
+        cond_ir = (
+            self._resolve(spark, snap, bs[2])
+            if bs is not None and bs[2] is not None
+            else None
+        )
 
         def _file_carried(fstats: dict) -> bool:
             """True when the file provably needs no rewrite: key-disjoint
-            (holds no matched row), AND — pruning inversion under a
+            (holds no matched row — also the rebase guard for
+            concurrently-appended files, whose matching keys escaped this
+            merge's anti-join), AND — pruning inversion under a
             by-source clause, whose scope is exactly the key-disjoint
             rows — the clause has a condition the file's stats prove
-            unsatisfiable. Shared with the rebase added-file guard."""
-            if not _keys_disjoint(fstats):
+            unsatisfiable."""
+            view = self._logical_view(fstats, cmap)
+            if not _prover.disjoint(key_ir, view):
                 return False
             if bs is None:
                 return True
-            return bs[2] is not None and _pred_disjoint_by_stats(
-                bs[2], self._logical_view(fstats, cmap), allow_time=tz_ok
-            )
+            return cond_ir is not None and _prover.disjoint(cond_ir, view)
 
         stats = dict(snap.stats or {})
         carried: list[str] = []
@@ -4042,7 +3364,7 @@ class SnapshotTable:
 
         Copy-on-write, stats-pruned first: a file whose manifest
         [min, max] envelope PROVES no row matches
-        (:func:`_pred_disjoint_by_stats`) is carried verbatim — a
+        (:func:`stats_prover.disjoint`) is carried verbatim — a
         provably-disjoint delete on a 100 TB table is METADATA-ONLY
         (zero read tasks, zero rewrites, one manifest write; pinned by
         ``test_delete_disjoint_predicate_is_metadata_only``). Only
@@ -4089,20 +3411,13 @@ class SnapshotTable:
         snap = self.snapshot(cur)
         stats = dict(snap.stats or {})
         cmap = dict(snap.column_mapping or {})
-        tz_ok = _utc_session(spark)  # ADVICE r12: time-family pruning
-        touched = [
-            f
-            for f in snap.files
-            if not _pred_disjoint_by_stats(
-                predicate,
-                self._logical_view(stats.get(f, {}), cmap),
-                allow_time=tz_ok,
-            )
-        ]
+        ir = self._resolve(spark, snap, predicate)
+
+        def guard(rel: str, fstats: dict) -> bool:
+            return _prover.disjoint(ir, self._logical_view(fstats, cmap))
+
+        touched = [f for f in snap.files if not guard(f, stats.get(f, {}))]
         extra = {"delete_predicate": predicate}
-        guard = lambda rel, fstats: _pred_disjoint_by_stats(  # noqa: E731
-            predicate, self._logical_view(fstats, cmap), allow_time=tz_ok
-        )
         if not touched:
             return self._commit_rewrite(
                 "delete",
@@ -4283,7 +3598,7 @@ class SnapshotTable:
 
         Copy-on-write, stats-pruned first, like :meth:`delete`: a file
         whose manifest [min, max] envelope PROVES no row matches
-        (:func:`_pred_disjoint_by_stats`) is carried verbatim — a
+        (:func:`stats_prover.disjoint`) is carried verbatim — a
         provably-disjoint update on a 100 TB table is METADATA-ONLY
         (zero read tasks, zero rewrites, one manifest write). Only
         intersecting files are read (with the LOG schema, so an
@@ -4337,16 +3652,12 @@ class SnapshotTable:
             change_data = _cdf_enabled(snap)
         stats = dict(snap.stats or {})
         cmap = dict(snap.column_mapping or {})
-        tz_ok = _utc_session(spark)  # ADVICE r12: time-family pruning
-        touched = [
-            f
-            for f in snap.files
-            if not _pred_disjoint_by_stats(
-                predicate,
-                self._logical_view(stats.get(f, {}), cmap),
-                allow_time=tz_ok,
-            )
-        ]
+        ir = self._resolve(spark, snap, predicate)
+
+        def guard(rel: str, fstats: dict) -> bool:
+            return _prover.disjoint(ir, self._logical_view(fstats, cmap))
+
+        touched = [f for f in snap.files if not guard(f, stats.get(f, {}))]
         extra: dict = {
             "update_predicate": predicate,
             "update_set": dict(set_exprs),
@@ -4356,9 +3667,6 @@ class SnapshotTable:
             # CDF must not fall back to re-deriving what the property
             # promised was materialized
             extra["cdc_files"] = []
-        guard = lambda rel, fstats: _pred_disjoint_by_stats(  # noqa: E731
-            predicate, self._logical_view(fstats, cmap), allow_time=tz_ok
-        )
         if not touched:
             # validate SET names even when nothing rewrites — a typo'd
             # column must fail loudly, not commit a bogus update_set
@@ -4709,7 +4017,7 @@ class SnapshotTable:
         per-file min/max envelopes `_collect_stats` records at commit
         time become tight in EVERY clustered dimension at once — which is
         what turns the manifest-stats file skipping the readers already
-        do (``snapshot_datasource._file_may_match``, ``replace_where``,
+        do (the Data Source's pushed filters, ``replace_where``,
         ``merge``) from a no-op on scattered layouts into real
         multi-column pruning. Data-neutral like ``compact``: the change
         feed and the streaming source skip it; time travel to older
@@ -4839,20 +4147,22 @@ class SnapshotTable:
             # ``test_restore_metadata_proven_skips_scan``).
             rstats = snap.stats or {}
             rmap = dict(snap.column_mapping or {})
-            # spark=None has no session zone in play (no scan can run
-            # either way): the manifest's UTC envelope model — the
-            # engine contract — applies
-            tz_ok = spark is None or _utc_session(spark)
+            # spark=None proves with the active session, if any (with
+            # none, nothing is proven); only a row scan needs spark
+            session = spark or SparkSession.getActiveSession()
+            irs = (
+                [self._resolve(session, snap, e) for e in cons.values()]
+                if session is not None
+                else [_prover.UNKNOWN]
+            )
             need_scan = [
                 f
                 for f in snap.files
                 if not all(
-                    _check_proven_by_stats(
-                        expr,
-                        self._logical_view(rstats.get(f, {}), rmap),
-                        allow_time=tz_ok,
+                    _prover.proven(
+                        ir, self._logical_view(rstats.get(f, {}), rmap)
                     )
-                    for expr in cons.values()
+                    for ir in irs
                 )
             ]
             if need_scan:
@@ -5019,14 +4329,12 @@ class SnapshotTable:
             # stats-first, like restore(): validate only the files whose
             # manifest envelope cannot prove the new constraint — adding
             # an in-bounds constraint to a 100 TB table is metadata-only
-            tz_ok = _utc_session(spark)
+            ir = self._resolve(spark, snap, expr)
             need_scan = [
                 f
                 for f in files
-                if not _check_proven_by_stats(
-                    expr,
-                    self._logical_view(stats.get(f, {}), cmap),
-                    allow_time=tz_ok,
+                if not _prover.proven(
+                    ir, self._logical_view(stats.get(f, {}), cmap)
                 )
             ]
             if need_scan:

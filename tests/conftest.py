@@ -26,3 +26,22 @@ def oracle():
         )
     yield con
     con.close()
+
+
+@pytest.fixture()
+def verdict(spark):
+    """``verdict(predicate, envelopes, schema)`` -> ``(disjoint,
+    proven)`` from the stats prover, resolved by Catalyst against
+    ``schema`` under the engine's UTC session pin."""
+    from nyc_taxi_data_pipeline_elt_spark.session import tune
+    from nyc_taxi_data_pipeline_elt_spark.sources import stats_prover
+
+    tune(spark)
+
+    def _verdict(predicate, fstats, schema):
+        ir = stats_prover.resolve(spark, predicate, schema)
+        return stats_prover.disjoint(ir, fstats), stats_prover.proven(
+            ir, fstats
+        )
+
+    return _verdict

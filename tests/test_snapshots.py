@@ -684,12 +684,13 @@ def test_distributed_stats_no_driver_loop(spark, table, monkeypatch):
     assert {"id", "v"} <= set(next(iter(snap.stats.values())))
 
 
-def test_stats_prover_unit():
-    """Envelope prover: sound on the covered grammar, conservatively
+def test_stats_prover_unit(verdict):
+    """Envelope prover: sound on what Catalyst hands back, conservatively
     inconclusive everywhere else."""
-    from nyc_taxi_data_pipeline_elt_spark.sources.snapshots import (
-        _check_proven_by_stats as prove,
-    )
+    from pyspark.errors import AnalysisException
+
+    def prove(p, st):
+        return verdict(p, st, "v BIGINT, d DOUBLE, s STRING, b BOOLEAN")[1]
 
     st = {"v": [0, 9], "d": [1.5, 2.5], "s": ["a", "z"], "b": [True, True]}
     assert prove("v >= 0", st)
@@ -715,11 +716,15 @@ def test_stats_prover_unit():
     assert not prove("v >= 1 AND v <= 9", st)
     assert prove("v >= 0 OR v <= 9", st)
     assert not prove("v >= 1 OR v >= 5", st)
-    # outside the grammar / bool stats: inconclusive, never proven
-    assert not prove("b = true", st)
+    # a boolean envelope of [true, true] proves b = true (NULL passes)
+    assert prove("b = true", st)
+    assert not prove("b = false", st)
+    # a function over the column is outside the IR: never proven
     assert not prove("abs(v) >= 0", st)
     assert not prove("v + 1 >= 1", st)
-    assert not prove("missing >= 0", st)
+    # an unknown column is the row-level filter's analysis error
+    with pytest.raises(AnalysisException):
+        prove("missing >= 0", st)
 
 
 def test_restore_metadata_proven_skips_scan(spark, table, monkeypatch):
@@ -973,12 +978,11 @@ def test_timestamp_time_travel_and_detail(spark, table):
     assert d["constraints"] == []
 
 
-def test_stats_prover_exact_int64_boundaries():
+def test_stats_prover_exact_int64_boundaries(verdict):
     """Review r8: integer comparisons stay exact past 2^53 (float()
     routing made the prover claim PROVEN for a violated constraint)."""
-    from nyc_taxi_data_pipeline_elt_spark.sources.snapshots import (
-        _check_proven_by_stats as prove,
-    )
+    def prove(p, st):
+        return verdict(p, st, "v BIGINT")[1]
 
     two53 = 9007199254740992  # 2**53
     st = {"v": [two53, two53]}
@@ -1337,12 +1341,11 @@ def test_delete_on_missing_table_raises(spark, table):
         table.delete(spark, "v > 0")
 
 
-def test_pred_disjoint_prover_unit():
+def test_pred_disjoint_prover_unit(verdict):
     """Envelope-disjointness prover: every operator, both literal
     orders, BETWEEN, empty files, and conservative inconclusives."""
-    from nyc_taxi_data_pipeline_elt_spark.sources.snapshots import (
-        _pred_disjoint_by_stats as dis,
-    )
+    def dis(p, st):
+        return verdict(p, st, "v BIGINT, w BIGINT")[0]
 
     st = {"v": [10, 20], "__num_rows__": 5}
     assert dis("v > 20", st) and not dis("v > 19", st)
@@ -1353,8 +1356,8 @@ def test_pred_disjoint_prover_unit():
     assert dis("21 <= v", st) and not dis("15 = v", st)  # flipped forms
     assert dis("v BETWEEN 21 AND 30", st) and dis("v BETWEEN 0 AND 9", st)
     assert not dis("v BETWEEN 20 AND 30", st)
-    assert dis("anything at all", {"__num_rows__": 0})  # empty file
-    # inconclusive: no stats, non-numeric envelope, unparsed grammar
+    assert dis("v < 0 OR w > 1", {"__num_rows__": 0})  # empty file
+    # inconclusive: no stats, envelopes of the wrong type
     assert not dis("v > 20", {})
     assert not dis("v > 20", {"v": ["a", "z"], "__num_rows__": 3})
     assert not dis("v > 20", {"v": [True, True], "__num_rows__": 3})
@@ -3810,50 +3813,59 @@ def test_stat_key_normalizes_tz_aware_datetimes():
 # ---------------------------------------------------------------------------
 
 
-def test_prover_grammar_time_literals_unit():
-    from nyc_taxi_data_pipeline_elt_spark.sources.snapshots import (
-        _check_proven_by_stats,
-        _pred_disjoint_by_stats,
-    )
+def test_prover_grammar_time_literals_unit(verdict):
+    from pyspark.errors.exceptions.base import DateTimeException
+
+    schema = "ts TIMESTAMP, s STRING, d DATE, v BIGINT"
+
+    def disjoint(p, st):
+        return verdict(p, st, schema)[0]
+
+    def proven(p, st):
+        return verdict(p, st, schema)[1]
 
     ts_env = {
         "ts": ["2023-01-05T00:00:00", "2023-01-09T23:59:59"],
         "__num_rows__": 10,
     }
     # disjoint: cutoff below the envelope (space sep normalizes to T)
-    assert _pred_disjoint_by_stats("ts < '2023-01-05 00:00:00'", ts_env)
-    assert _pred_disjoint_by_stats("ts < '2023-01-05'", ts_env)
+    assert disjoint("ts < '2023-01-05 00:00:00'", ts_env)
+    assert disjoint("ts < '2023-01-05'", ts_env)
     # date-only literal pads to midnight: NOT disjoint from a file whose
     # min is exactly midnight under >= (boundary row matches)
-    assert not _pred_disjoint_by_stats("ts >= '2023-01-05'", ts_env)
-    assert _pred_disjoint_by_stats("ts > '2023-01-10'", ts_env)
-    assert _pred_disjoint_by_stats(
+    assert not disjoint("ts >= '2023-01-05'", ts_env)
+    assert disjoint("ts > '2023-01-10'", ts_env)
+    assert disjoint(
         "ts BETWEEN '2023-02-01' AND '2023-03-01'", ts_env
     )
-    assert not _pred_disjoint_by_stats(
+    assert not disjoint(
         "ts BETWEEN '2023-01-09' AND '2023-03-01'", ts_env
     )
     # flip form + typed literal keyword
-    assert _pred_disjoint_by_stats("TIMESTAMP '2023-01-04 10:00:00' >= ts", ts_env)
+    assert disjoint("TIMESTAMP '2023-01-04 10:00:00' >= ts", ts_env)
     # proving: every row in range
-    assert _check_proven_by_stats("ts >= '2023-01-05'", ts_env)
-    assert _check_proven_by_stats("ts < '2023-01-10'", ts_env)
-    assert not _check_proven_by_stats("ts >= '2023-01-06'", ts_env)
+    assert proven("ts >= '2023-01-05'", ts_env)
+    assert proven("ts < '2023-01-10'", ts_env)
+    assert not proven("ts >= '2023-01-06'", ts_env)
     # string equality proving refused (truncation hazard); disjoint ok
     s_env = {"s": ["alpha", "alpha"], "__num_rows__": 3}
-    assert not _check_proven_by_stats("s = 'alpha'", s_env)
-    assert _pred_disjoint_by_stats("s = 'zeta'", s_env)
-    assert _check_proven_by_stats("s <= 'beta'", s_env)
-    # date column vs literal with a time part: inconclusive (Spark casts)
+    assert not proven("s = 'alpha'", s_env)
+    assert disjoint("s = 'zeta'", s_env)
+    assert proven("s <= 'beta'", s_env)
+    # date column vs literal with a time part: Spark casts the literal
+    # to DATE '2023-01-01', so the file is disjoint
     d_env = {"d": ["2023-01-05", "2023-01-09"], "__num_rows__": 4}
-    assert not _pred_disjoint_by_stats("d < '2023-01-01 10:00:00'", d_env)
-    assert _pred_disjoint_by_stats("d < '2023-01-01'", d_env)
-    # non-date string against a time envelope: Spark would cast — refuse
-    assert not _pred_disjoint_by_stats("ts < 'garbage'", ts_env)
+    assert disjoint("d < '2023-01-01 10:00:00'", d_env)
+    assert not disjoint("d <= '2023-01-05 10:00:00'", d_env)
+    assert disjoint("d < '2023-01-01'", d_env)
+    # non-date string against a time column: the cast error the
+    # row-level filter raises propagates
+    with pytest.raises(DateTimeException):
+        disjoint("ts < 'garbage'", ts_env)
     # numeric grammar unchanged
     n_env = {"v": [5, 9], "__num_rows__": 4}
-    assert _pred_disjoint_by_stats("v < 5", n_env)
-    assert _check_proven_by_stats("v BETWEEN 5 AND 9", n_env)
+    assert disjoint("v < 5", n_env)
+    assert proven("v BETWEEN 5 AND 9", n_env)
 
 
 def test_retention_delete_prunes_time_disjoint_files(spark, table):
@@ -3967,16 +3979,17 @@ def test_merge_ts_key_pruning_correct_on_non_utc_driver(spark, table):
     assert len(got) == 17
 
 
-def test_prover_unanimous_over_string_vs_timestamp_interpretation():
+def test_prover_unanimous_over_string_vs_timestamp_interpretation(verdict):
     """Review r12 pass 1: an ISO-datetime-shaped envelope can belong to
     a STRING column holding ISO text, which Spark compares lexically
     against the RAW literal — padding a date-only literal to midnight
-    is only right for a true timestamp column. The prover must be
-    unanimous across both interpretations."""
-    from nyc_taxi_data_pipeline_elt_spark.sources.snapshots import (
-        _check_proven_by_stats,
-        _pred_disjoint_by_stats,
-    )
+    is only right for a true timestamp column. The column's type, not
+    the envelope's shape, picks the comparison."""
+    def disjoint(p, st):
+        return verdict(p, st, "s STRING")[0]
+
+    def proven(p, st):
+        return verdict(p, st, "s STRING")[1]
 
     env = {
         "s": ["2023-01-04T00:00:00", "2023-01-05T00:00:00"],
@@ -3984,12 +3997,12 @@ def test_prover_unanimous_over_string_vs_timestamp_interpretation():
     }
     # string reading: '2023-01-05T00:00:00' > '2023-01-05' lexically —
     # the row WOULD match, so the file must NOT be pruned
-    assert not _pred_disjoint_by_stats("s > '2023-01-05'", env)
+    assert not disjoint("s > '2023-01-05'", env)
     # and the CHECK twin must not be proven either
-    assert not _check_proven_by_stats("s <= '2023-01-05'", env)
+    assert not proven("s <= '2023-01-05'", env)
     # both interpretations agree here: safe to prune / prove
-    assert _pred_disjoint_by_stats("s > '2023-01-06'", env)
-    assert _check_proven_by_stats("s <= '2023-01-06'", env)
+    assert disjoint("s > '2023-01-06'", env)
+    assert proven("s <= '2023-01-06'", env)
 
 
 def test_merge_by_source_set_map_validated_without_touched_files(
@@ -4175,32 +4188,37 @@ def test_merge_condition_determinism_is_expression_scoped(spark, table):
         )
 
 
-def test_prover_fractional_second_literals_canonicalized():
+def test_prover_fractional_second_literals_canonicalized(verdict):
     """Review r12 pass 2 #4: '...00.5' must compare as isoformat's
     '...00.500000' — boundary-equal rows were wrongly pruned/proven."""
-    from nyc_taxi_data_pipeline_elt_spark.sources.snapshots import (
-        _check_proven_by_stats,
-        _pred_disjoint_by_stats,
-    )
+    def disjoint(p, st):
+        return verdict(p, st, "ts TIMESTAMP")[0]
+
+    def proven(p, st):
+        return verdict(p, st, "ts TIMESTAMP")[1]
 
     env = {
         "ts": ["2023-01-05T00:00:00.500000", "2023-01-05T00:00:00.500000"],
         "__num_rows__": 1,
     }
     # boundary-equal: the row MATCHES <= — must not be pruned
-    assert not _pred_disjoint_by_stats("ts <= '2023-01-05 00:00:00.5'", env)
+    assert not disjoint("ts <= '2023-01-05 00:00:00.5'", env)
     # and the CHECK twin must not be proven
-    assert not _check_proven_by_stats("ts > '2023-01-05 00:00:00.5'", env)
+    assert not proven("ts > '2023-01-05 00:00:00.5'", env)
     # sound prunes still work with fractions
-    assert _pred_disjoint_by_stats("ts < '2023-01-05 00:00:00.5'", env)
-    assert _check_proven_by_stats("ts >= '2023-01-05 00:00:00.5'", env)
+    assert disjoint("ts < '2023-01-05 00:00:00.5'", env)
+    assert proven("ts >= '2023-01-05 00:00:00.5'", env)
     # all-zero fraction folds to isoformat's omitted form
     env0 = {"ts": ["2023-01-05T00:00:00", "2023-01-05T00:00:00"],
             "__num_rows__": 1}
-    assert _check_proven_by_stats("ts >= '2023-01-05 00:00:00.000'", env0)
-    # beyond-micros precision: inconclusive, never pruned
-    assert not _pred_disjoint_by_stats(
+    assert proven("ts >= '2023-01-05 00:00:00.000'", env0)
+    # beyond-micros precision: Spark truncates the literal to
+    # ...00.499999, below the row, so the file is disjoint
+    assert disjoint(
         "ts < '2023-01-05 00:00:00.4999999'", env
+    )
+    assert not disjoint(
+        "ts < '2023-01-05 00:00:00.5000011'", env
     )
 
 
