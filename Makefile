@@ -1,7 +1,7 @@
 # Driver targets for the engine (the reference's Makefile deploys AWS
 # infra; this one runs the engine locally).
 
-.PHONY: test prover-gate bench bench-small demo smoke perfbench perfbench-selftest
+.PHONY: test prover-gate dml-gate bench bench-small demo smoke perfbench perfbench-selftest
 
 # The ROADMAP tier-1 command.
 test:
@@ -12,6 +12,11 @@ test:
 # Spark's evaluation plus the verdict table and pruning integration tests.
 prover-gate:
 	python -m pytest tests/test_prover_properties.py tests/test_conjunctive_prover.py -q -p no:cacheprovider
+
+# The row-level DML gate on its own: the delete/update cell contract, the
+# snapshot table's DML/CDF tests and the change-feed stream tests.
+dml-gate:
+	python -m pytest tests/test_row_dml.py tests/test_snapshots.py tests/test_snapshot_stream.py -q -p no:cacheprovider
 
 bench:
 	python bench.py

@@ -116,131 +116,6 @@ def write_range_clustered(
     )
 
 
-def write_zorder_clustered(
-    df: DataFrame,
-    path: str,
-    cols: Sequence[str],
-    files: int = 8,
-    bits: int = 16,
-) -> None:
-    """Multi-column Z-ORDER clustering: sort by the bit-interleaved
-    (Morton) key of the given numeric columns before writing, so parquet
-    footer min/max stats stay tight on EVERY clustered column at once —
-    a pushed-down predicate on any one of them skips row groups/files.
-    This is what single-key range clustering (:func:`write_range_clustered`)
-    cannot do: sorting on col A alone leaves col B spanning its full range
-    in every file.
-
-    Mechanics: each column is linearly scaled to a ``bits``-bit integer
-    using its min/max (one aggregate; two driver scalars per column —
-    metadata, not data), then the scaled values' bits are interleaved
-    into one long. Integer shift/mask expressions stay inside whole-stage
-    codegen. Cost at write: one range exchange on the z-key, same as any
-    global sort; reads pay nothing.
-    """
-    from pyspark.sql import functions as F
-
-    if not 1 <= bits * len(cols) <= 63:
-        raise ValueError("bits * len(cols) must fit a signed 64-bit key")
-    stats = df.agg(
-        *[F.min(c).cast("double").alias(f"min_{c}") for c in cols],
-        *[F.max(c).cast("double").alias(f"max_{c}") for c in cols],
-    ).first()
-    top = (1 << bits) - 1
-    scaled = []
-    for c in cols:
-        lo, hi = stats[f"min_{c}"], stats[f"max_{c}"]
-        if lo is None or hi is None or hi == lo:
-            scaled.append(F.lit(0).cast("long"))
-        else:
-            scaled.append(
-                ((F.col(c).cast("double") - F.lit(lo)) * F.lit(top / (hi - lo)))
-                .cast("long")
-            )
-    z = F.lit(0).cast("long")
-    for i in range(bits):
-        for ci, s in enumerate(scaled):
-            z = z.bitwiseOR(
-                F.shiftleft(
-                    F.shiftright(s, i).bitwiseAND(F.lit(1)),
-                    i * len(cols) + ci,
-                )
-            )
-    (
-        df.withColumn("_zkey", z)
-        .repartitionByRange(files, "_zkey")
-        .sortWithinPartitions("_zkey")
-        .drop("_zkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def _hive_partition_keys(p: Path) -> list[str]:
-    """Partition columns of a Hive-layout directory, outermost first,
-    read off the ``key=value`` subdirectory chain (empty if unpartitioned)."""
-    keys: list[str] = []
-    cur = p
-    while True:
-        subs = [
-            d
-            for d in cur.iterdir()
-            if d.is_dir() and "=" in d.name and not d.name.startswith((".", "_"))
-        ]
-        if not subs:
-            return keys
-        keys.append(subs[0].name.split("=", 1)[0])
-        cur = subs[0]
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_files: int | None = None,
-    target_mb: int = 128,
-) -> int:
-    """Small-files compaction: rewrite a parquet directory into
-    ~``target_mb``-sized files (or an explicit ``target_files`` count).
-    Streaming sinks and per-partition incremental writes accumulate
-    thousands of tiny files; every one costs a listing call, a footer
-    read, and a scheduler task — the classic data-lake tax. Returns the
-    new file count.
-
-    Hive-partitioned inputs keep their layout: partition keys are read
-    off the ``key=value`` directory chain, sized recursively, and the
-    rewrite re-applies ``partitionBy`` on the same keys.
-
-    Swap discipline: the rewrite lands in a ``.compact-tmp`` sibling,
-    the live dir is *renamed* to a ``.compact-old`` sibling (atomic on a
-    POSIX filesystem), tmp is moved into place, and ``.compact-old`` is
-    deleted last. A crash at any step leaves the data recoverable — the
-    window where the live path is briefly absent is between the two
-    renames; true no-gap atomicity needs a metastore/table-format commit
-    (Delta/Iceberg), which this layout intentionally stops short of.
-    """
-    p = Path(path)
-    keys = _hive_partition_keys(p)
-    if target_files is None:
-        total = sum(f.stat().st_size for f in p.rglob("*.parquet"))
-        target_files = max(1, -(-total // (target_mb * 1024 * 1024)))
-    tmp = p.with_name(p.name + ".compact-tmp")
-    old = p.with_name(p.name + ".compact-old")
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.rmtree(old, ignore_errors=True)
-    df = spark.read.parquet(path)
-    # co-locate each partition value in as few tasks as possible so
-    # partitionBy doesn't fan one task out into a file per value
-    df = df.repartition(target_files, *keys) if keys else df.repartition(target_files)
-    writer = df.write.mode("overwrite")
-    if keys:
-        writer = writer.partitionBy(*keys)
-    writer.parquet(str(tmp))
-    p.rename(old)
-    shutil.move(str(tmp), str(p))
-    shutil.rmtree(old)
-    return len(list(p.rglob("*.parquet")))
-
-
 def read_table(
     spark: SparkSession,
     path: str,

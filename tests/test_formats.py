@@ -88,10 +88,12 @@ def test_zorder_tightens_stats_on_both_columns(spark, tmp_path):
     """Z-ORDER vs single-key range clustering: sorting on l_orderkey alone
     leaves l_partkey spanning its full range in every file (no skipping on
     partkey predicates); the Morton layout keeps BOTH columns' footer
-    min/max windows a fraction of their full range."""
+    min/max windows a fraction of their full range. The Morton key is
+    ``zorder_key``, the one ``SnapshotTable.optimize(zorder_by=)`` uses,
+    over bounds from one min/max aggregate."""
+    from nyc_taxi_data_pipeline_elt_spark.operators.indexing import zorder_key
     from nyc_taxi_data_pipeline_elt_spark.sources.writers import (
         write_range_clustered,
-        write_zorder_clustered,
     )
 
     li = load_table(spark, SF_DIR, "lineitem").select(
@@ -100,7 +102,22 @@ def test_zorder_tightens_stats_on_both_columns(spark, tmp_path):
     rng = str(tmp_path / "rng")
     zrd = str(tmp_path / "zrd")
     write_range_clustered(li, rng, "l_orderkey", files=8)
-    write_zorder_clustered(li, zrd, ["l_orderkey", "l_partkey"], files=8)
+    cols = ["l_orderkey", "l_partkey"]
+    b = li.agg(
+        *[F.min(c).alias(f"lo_{c}") for c in cols],
+        *[F.max(c).alias(f"hi_{c}") for c in cols],
+    ).first()
+    (
+        li.withColumn(
+            "_zkey",
+            zorder_key(cols, [(b[f"lo_{c}"], b[f"hi_{c}"]) for c in cols]),
+        )
+        .repartitionByRange(8, "_zkey")
+        .sortWithinPartitions("_zkey")
+        .drop("_zkey")
+        .write.mode("overwrite")
+        .parquet(zrd)
+    )
 
     # column 0 = l_orderkey, 1 = l_partkey in both layouts
     full_order = _stat_widths(rng, 0) * 8  # range layout tiles the key space

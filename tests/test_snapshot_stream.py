@@ -281,8 +281,8 @@ def test_cdf_stream_matches_batch_feed_across_mutations(spark, tmp_path):
 
 def test_cdf_stream_serves_materialized_cdc_files(spark, tmp_path):
     """update/delete under delta.enableChangeDataFeed materialize cdc
-    files; the stream serves them verbatim (authoritative, exact even
-    for non-deterministic expressions)."""
+    files; the stream serves them verbatim (authoritative: nothing is
+    re-evaluated at replay)."""
     table = SnapshotTable(str(tmp_path / "tbl"))
     ck = str(tmp_path / "ck")
     table.append(_df(spark, 0, 6).coalesce(1))               # v0

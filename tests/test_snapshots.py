@@ -2270,8 +2270,10 @@ def test_update_cdf_derived_replay_pairs(spark, table):
 
 def test_update_cdf_materialized_change_data(spark, table):
     """update(change_data=True) materializes the pre/post pairs under
-    _change_data (authoritative for non-deterministic SET exprs); the
-    delta.enableChangeDataFeed property enables it without the flag."""
+    _change_data (served verbatim by the feed; copy-on-write refuses
+    non-deterministic SET exprs, which only merge-on-read replays
+    exactly); the delta.enableChangeDataFeed property enables it without
+    the flag."""
     table.append(_kv(spark, [(1, 10), (2, 200)]))              # v0
     table.update(spark, "v >= 100", {"v": "v + 7"}, change_data=True)
     assert (table.root / "_change_data").exists()
