@@ -1,7 +1,7 @@
 # Driver targets for the engine (the reference's Makefile deploys AWS
 # infra; this one runs the engine locally).
 
-.PHONY: test prover-gate dml-gate bench bench-small demo smoke perfbench perfbench-selftest
+.PHONY: test prover-gate dml-gate bench bench-small demo smoke perfbench perfbench-selftest perfbench-ab
 
 # The ROADMAP tier-1 command.
 test:
@@ -35,6 +35,14 @@ perfbench:
 
 perfbench-selftest:
 	python3 perfbench/selftest.py
+
+# Interleaved A/B against another checkout (scripts/perfbench_ab.py), e.g.
+# `make perfbench-ab PARENT=../parent W=snapshot_dml SEEDS=1101-1110`.
+SEEDS ?= 1-10
+
+perfbench-ab:
+	@test -n "$(PARENT)" || { echo "perfbench-ab: set PARENT=<checkout>"; exit 2; }
+	python3 scripts/perfbench_ab.py --parent $(PARENT) --workload $(W) --seeds $(SEEDS)
 
 demo:
 	python examples/taxi_pipeline_demo.py

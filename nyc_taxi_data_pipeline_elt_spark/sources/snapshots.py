@@ -578,25 +578,29 @@ class SnapshotTable:
         return c
 
     def _read_files(
-        self, spark: SparkSession, rel_files, schema=None, mapping=None
+        self,
+        spark: SparkSession,
+        rel_files,
+        schema=None,
+        mapping=None,
+        merge_schema: bool = True,
     ) -> DataFrame:
-        """mergeSchema read over specific table files. Every REWRITE
-        path (delete survivors, update target, replace_where remainder,
-        merge target, compact/optimize input) and the CDF replays must
-        read with the UNION schema: a plain read sniffs one footer, and
-        on a name-evolved table that silently DROPS later-added columns
-        from the rewritten rows (or crashes when the sniffed footer
-        lacks the predicate column) — review r9, data-loss class.
-        Rewrites read data pages anyway, so the extra footer union is
-        noise.
+        """The one read over specific table files: every read path
+        (snapshot reads, rewrite inputs, change feeds) plans here.
 
         ``schema`` — a manifest-recorded (name, type) pair list — makes
-        the read use the LOG schema, Delta's posture (ADVICE r9): a
-        column added by name evolution that NO listed file contains
-        then reads as typed NULLs, so a predicate referencing it
-        evaluates (to NULL -> no match) instead of raising
-        AnalysisException. The footer union can only see columns some
-        listed file has; the log schema is authoritative.
+        the read use the LOG schema, Delta's posture (ADVICE r9): the
+        plan needs no footer, and a column added by name evolution that
+        NO listed file contains reads as typed NULLs, so a predicate
+        referencing it evaluates (to NULL -> no match) instead of
+        raising AnalysisException. Without a record (a legacy manifest,
+        or a type-evolved one) the footers decide: a mergeSchema union
+        by default, since a plain read sniffs one footer and on a
+        name-evolved table silently DROPS later-added columns (review
+        r9, data-loss class); ``merge_schema=False`` is that one-footer
+        read, kept for ``read()``'s legacy contract. Either footer read
+        starts one Spark job before any data is read (~75 ms per call
+        on a 4-core host) — the cost the recorded schema avoids.
 
         ``mapping`` (the snapshot's ``column_mapping``) reads the files
         under their PHYSICAL column names and returns LOGICAL columns —
@@ -626,7 +630,19 @@ class SnapshotTable:
             return spark.read.schema(
                 ", ".join(f"`{n}` {t}" for n, t in schema)
             ).parquet(*paths)
-        return spark.read.option("mergeSchema", "true").parquet(*paths)
+        reader = spark.read
+        if merge_schema:
+            reader = reader.option("mergeSchema", "true")
+        return reader.parquet(*paths)
+
+    def _read_positions(self, spark: SparkSession, rel_files) -> DataFrame:
+        """The (file, pos) rows of position sidecars — deletion-vector
+        entries, frozen ``dv_new`` sets, consolidated dvs — under the
+        schema :meth:`_write_dv` always writes, so planning reads no
+        footer."""
+        return spark.read.schema("file STRING, pos BIGINT").parquet(
+            *[str(self.root / f) for f in rel_files]
+        )
 
     # ---------------- deletion vectors (merge-on-read) ----------------
     # Every dv parquet holds (file string, pos long) rows: file-absolute
@@ -656,9 +672,7 @@ class SnapshotTable:
         other-file rows behind in older dv files, so the filter is
         load-bearing, not an optimization)."""
         dv_files = sorted({e[0] for e in dv_entries.values()})
-        return spark.read.parquet(
-            *[str(self.root / f) for f in dv_files]
-        ).filter(
+        return self._read_positions(spark, dv_files).filter(
             F_col("file").isin([self._file_tail(f) for f in dv_entries])
         )
 
@@ -794,7 +808,7 @@ class SnapshotTable:
         by_tail = {self._file_tail(f): f for f in touched}
         counts: dict = {}
         for r in (
-            spark.read.parquet(*[str(self.root / f) for f in frozen])
+            self._read_positions(spark, frozen)
             .groupBy("file")
             .count()
             .collect()
@@ -842,13 +856,8 @@ class SnapshotTable:
         old_affected = {f: pdv[f] for f in affected if f in pdv}
         written: list[str] = []
         if old_affected:
-            merged = (
-                spark.read.parquet(str(self.root / frozen_rel))
-                .unionByName(
-                    self._dv_frame(spark, old_affected).select(
-                        "file", "pos"
-                    )
-                )
+            merged = self._read_positions(spark, [frozen_rel]).unionByName(
+                self._dv_frame(spark, old_affected)
             )
             written = self._write_dv(merged)
             if len(written) != 1:
@@ -2633,11 +2642,9 @@ class SnapshotTable:
                     spark,
                     self._read_files(
                         spark, touched, schema=snap.schema, mapping=cmap
-                    )
-                    if cmap
-                    else self._read_files(spark, touched),
+                    ),
                     touched,
-                    snap.dv if snap else None,
+                    snap.dv,
                 ).filter(~F_coalesce(constraint, F_lit(False)))
                 # remainder rows are verbatim copies of already-committed
                 # rows: they passed their CHECK at the original write, so
@@ -3050,9 +3057,7 @@ class SnapshotTable:
                     spark,
                     self._read_files(
                         spark, touched, schema=snap.schema, mapping=cmap
-                    )
-                    if cmap
-                    else self._read_files(spark, touched),
+                    ),
                     touched,
                     snap.dv,
                 )
@@ -3652,8 +3657,8 @@ class SnapshotTable:
                 if op == "update":
                     # post-images of exactly the frozen rows (a
                     # semi-join, not a predicate re-evaluation)
-                    frozen_pos = spark.read.parquet(
-                        str(self.root / frozen[0])
+                    frozen_pos = self._read_positions(
+                        spark, frozen[:1]
                     ).selectExpr("file AS __dv_file__", "pos AS __dv_pos__")
                     matched = tagged.join(
                         F_broadcast(frozen_pos),
@@ -3669,9 +3674,9 @@ class SnapshotTable:
             elif op == "delete":
                 # no broadcast hint: a large COW delete freezes a large
                 # position set, and AQE broadcasts only when it fits
-                pos = spark.read.parquet(
-                    *[str(self.root / f) for f in frozen]
-                ).selectExpr("file AS __dv_file__", "pos AS __dv_pos__")
+                pos = self._read_positions(spark, frozen).selectExpr(
+                    "file AS __dv_file__", "pos AS __dv_pos__"
+                )
                 survivors = tagged.join(
                     pos, ["__dv_file__", "__dv_pos__"], "left_anti"
                 ).drop("__dv_file__", "__dv_pos__")
@@ -4673,10 +4678,13 @@ class SnapshotTable:
         commits/compactions/vacuums of later versions cannot tear this
         read.
 
-        ``merge_schema=True`` unions the footers of every listed file, so
-        a table whose appends evolved the schema (added columns) reads
-        with the full union schema, older rows null-padded — pay the
-        per-file footer union only when evolution actually happened.
+        The plan comes from the manifest: the recorded schema is the
+        union of every column the snapshot's appends added, so an
+        evolved table reads null-padded with no footer read and no
+        Spark job, whatever ``merge_schema`` says. Only a manifest
+        without a recorded schema (legacy, or type-evolved) reads
+        footers: ``merge_schema=True`` unions every listed file's, the
+        default sniffs one.
 
         Deletion vectors are honored transparently: rows a
         merge-on-read delete soft-removed are anti-joined out (a
@@ -4692,21 +4700,15 @@ class SnapshotTable:
         )
         if not snap.files:
             raise FileNotFoundError(f"{self.root}: snapshot v{snap.version} is empty")
-        if snap.column_mapping or snap.dropped_physical:
-            # column-mapped table: the log schema + mapping are
-            # authoritative (renamed columns translate, dropped
-            # physicals project away) — merge_schema is implied
-            df = self._read_files(
-                spark,
-                snap.files,
-                schema=snap.schema,
-                mapping=dict(snap.column_mapping or {}),
-            )
-            return self._apply_dv(spark, df, snap.files, snap.dv)
-        reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        df = reader.parquet(*[str(self.root / f) for f in snap.files])
+        # a column-mapped table's log schema + mapping translate renamed
+        # columns and project dropped physicals away
+        df = self._read_files(
+            spark,
+            snap.files,
+            schema=snap.schema,
+            mapping=dict(snap.column_mapping or {}),
+            merge_schema=merge_schema,
+        )
         return self._apply_dv(spark, df, snap.files, snap.dv)
 
     def process_changes(
@@ -4988,7 +4990,7 @@ class SnapshotTable:
         dead = None
         for sc, key in pairs:
             part = (
-                spark.read.parquet(str(self.root / sc))
+                self._read_positions(spark, [sc])
                 .filter(F_col("file") == key)
                 .selectExpr("file AS __dv_file__", "pos AS __dv_pos__")
             )
@@ -5049,21 +5051,16 @@ class SnapshotTable:
                 spark, until, merge_schema=merge_schema
             ).limit(0)
         snap = self.snapshot(until)
-        if snap.column_mapping or snap.dropped_physical:
-            # added_files refused any in-range rename/drop, so the
-            # until-version mapping is uniform over every added file
-            # (physical names never change once written)
-            out = self._read_files(
-                spark,
-                added,
-                schema=snap.schema,
-                mapping=dict(snap.column_mapping or {}),
-            )
-        else:
-            reader = spark.read
-            if merge_schema:
-                reader = reader.option("mergeSchema", "true")
-            out = reader.parquet(*[str(self.root / f) for f in added])
+        # added_files refused any in-range rename/drop, so the
+        # until-version schema and mapping are uniform over every added
+        # file (physical names never change once written)
+        out = self._read_files(
+            spark,
+            added,
+            schema=snap.schema,
+            mapping=dict(snap.column_mapping or {}),
+            merge_schema=merge_schema,
+        )
         if ignore_deletes or skip_change_commits:
             # the tolerance flags let row-removing commits land INSIDE
             # the range: mask the added files' rows killed by in-range
@@ -5170,12 +5167,8 @@ class SnapshotTable:
             )
 
         def _added(rel_files, sch, mp) -> DataFrame:
-            """The rows of files a commit added, under its mapping."""
-            if mp:
-                return self._read_files(
-                    spark, rel_files, schema=sch, mapping=mp
-                )
-            return self._read_files(spark, rel_files)
+            """The rows of files a commit added, under its schema."""
+            return self._read_files(spark, rel_files, schema=sch, mapping=mp)
 
         def _live(rel_files, sch, dv_entries, mp=None) -> DataFrame:
             """A replay read that honors the files' dv entries AS OF
@@ -5184,9 +5177,7 @@ class SnapshotTable:
             removals/updates must not replay them."""
             return self._apply_dv(
                 spark,
-                self._read_files(
-                    spark, rel_files, schema=sch, mapping=mp
-                ),
+                _added(rel_files, sch, mp),
                 rel_files,
                 {f: e for f, e in (dv_entries or {}).items() if e},
             )
@@ -5202,13 +5193,9 @@ class SnapshotTable:
             its FULL matched set — AQE broadcasts only when it fits.
             ``dv_new_rel`` may be a str (MoR / single-file freeze) or a
             list (sharded COW freeze)."""
-            df = self._tag_dv_cols(
-                self._read_files(
-                    spark, rel_files, schema=sch, mapping=mp
-                )
-            )
-            pos = spark.read.parquet(
-                *[str(self.root / f) for f in _dv_new_list(dv_new_rel)]
+            df = self._tag_dv_cols(_added(rel_files, sch, mp))
+            pos = self._read_positions(
+                spark, _dv_new_list(dv_new_rel)
             ).selectExpr("file AS __dv_file__", "pos AS __dv_pos__")
             return df.join(
                 pos, ["__dv_file__", "__dv_pos__"], "left_semi"
@@ -5248,10 +5235,11 @@ class SnapshotTable:
             mp = raw.get("column_mapping") or {}
             if "cdc_files" in raw:
                 # explicit change-data files (merge/update
-                # change_data=True): authoritative, already typed;
-                # empty list = no changes
+                # change_data=True): authoritative, written in LOGICAL
+                # names with their _change_type; empty list = no changes
                 if raw["cdc_files"]:
-                    _emit(self._read_files(spark, raw["cdc_files"]), v, ts)
+                    cdc_sch = sch and [*sch, ["_change_type", "string"]]
+                    _emit(_added(raw["cdc_files"], cdc_sch, None), v, ts)
                 continue
             if op in ("replace", "overwrite_partitions"):
                 pred = raw.get("replace_predicate")
