@@ -32,16 +32,18 @@ The stream reader supports Delta-style per-trigger admission control:
 restarted stream over a deep backlog drains in bounded steps instead of
 one giant batch.
 
-The change-feed stream (``readChangeFeed``) PACKS its replay artifacts
-in version order with Spark's file-source split rule (``_pack``): every
-partition is one Python worker task and one sink file, and a mutation
-commit replays several small artifacts. The batch reader and the
-insert-only stream keep one partition per data file.
+The change-feed stream (``readChangeFeed``) serves the replay artifacts
+``change_plan`` plans, PACKED in version order with Spark's file-source
+split rule (``_pack``): every partition is one Python worker task and
+one sink file, and a mutation commit replays several small artifacts.
+The batch reader and the insert-only stream keep one partition per
+data file.
 """
 
 from __future__ import annotations
 
 import os
+from pathlib import Path
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -56,6 +58,7 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
 )
 
+from nyc_taxi_data_pipeline_elt_spark.sources import change_plan as _plan
 from nyc_taxi_data_pipeline_elt_spark.sources import stats_prover
 
 _PUSHABLE = {
@@ -105,19 +108,6 @@ def _tz_fit(v, arrow_type):
         if arrow_type.tz is not None and v.tzinfo is None:
             return v.astimezone()
     return v
-
-
-def _file_bytes(root, stats: dict, rel: str) -> int:
-    """Bytes of table file ``rel``: the manifest's ``__size_bytes__``
-    stat (recorded at write — Delta's AddFile.size), else one os.stat;
-    0 when the file is gone."""
-    b = (stats.get(rel) or {}).get("__size_bytes__")
-    if b is None:
-        try:
-            b = os.stat(str(root / rel)).st_size
-        except OSError:
-            b = 0
-    return int(b)
 
 
 def _planner_cores() -> int:
@@ -201,27 +191,34 @@ def _project_parquet(path: str, arrow_schema, filters=None, phys=None):
     return table.select(want).cast(arrow_schema)
 
 
-def _mask_dv(table, dv_sources):
-    """Drop the rows whose file-absolute positions appear in ANY of the
-    ``(sidecar_path, file_key)`` sources — the ONE deletion-vector mask
-    all three Arrow read paths share (review r11: it had been written
-    three times). Sidecar reads prune on the ``file`` column's footer
+def _positions(sources):
+    """The file-absolute row positions the ``(sidecar_path, file_key)``
+    sources record. Sidecar reads prune on the ``file`` column's footer
     min/max, so non-matching shards of a sharded freeze cost one footer
     read each."""
     import numpy as np
-    import pyarrow as pa
     import pyarrow.parquet as pq
 
-    if not dv_sources:
-        return table
-    dead = np.concatenate(
+    return np.concatenate(
         [
             pq.read_table(
                 p, columns=["pos"], filters=[("file", "=", k)]
             )["pos"].to_numpy()
-            for p, k in dv_sources
+            for p, k in sources
         ]
     )
+
+
+def _mask_dv(table, dv_sources):
+    """Drop the rows whose file-absolute positions appear in ANY of the
+    ``(sidecar_path, file_key)`` sources — the ONE deletion-vector mask
+    all three Arrow read paths share."""
+    import numpy as np
+    import pyarrow as pa
+
+    if not dv_sources:
+        return table
+    dead = _positions(dv_sources)
     mask = np.ones(table.num_rows, dtype=bool)
     mask[dead[dead < table.num_rows].astype(np.int64)] = False
     return table.filter(pa.array(mask))
@@ -645,39 +642,6 @@ class _SnapshotStreamReader(DataSourceStreamReader):
 
         return SnapshotTable(self.path)
 
-    def _mapping_consistent(self, table, sv0, end_mapping, end_schema):
-        """True when this batch's declared columns still MEAN the same
-        thing across the range: every declared name exists in the
-        range-END logical schema AND resolves to the same physical
-        slot as at the range START — the start-version mapping is what
-        every row already delivered to the sink was served under, so
-        the check survives reader restarts (review r11 pass 2: a
-        construction-time capture re-read the CURRENT mapping on
-        restart and silently accepted a name-preserving 3-rename
-        column SWAP that happened while the query was stopped). A
-        fresh stream (start=-1) compares end against itself —
-        trivially consistent, so mapping history before the stream
-        began never blocks it. ONE implementation for both readers
-        (review r11 pass 3)."""
-        if end_schema is None:
-            return True
-        declared = set(self.arrow_schema.names) - set(_CDF_META)
-        if not declared <= {n for n, _ in end_schema}:
-            return False
-        if sv0 >= 0:
-            try:
-                start_mapping = dict(
-                    table._raw_manifest(sv0).get("column_mapping") or {}
-                )
-            except (OSError, KeyError):
-                start_mapping = end_mapping
-        else:
-            start_mapping = end_mapping
-        return all(
-            end_mapping.get(c, c) == start_mapping.get(c, c)
-            for c in declared
-        )
-
     def initialOffset(self) -> dict:
         # teach the admission bound its start on a FRESH stream — but
         # never move an already-learned frontier backward (Spark calls
@@ -693,25 +657,20 @@ class _SnapshotStreamReader(DataSourceStreamReader):
 
     @staticmethod
     def _version_added_cost(table, v: int, want_bytes: bool):
-        """(files, bytes) an append at version ``v`` added — O(1)
-        raw-manifest metadata for the admission bound. Non-append ops
-        cost 0 (they are either skipped by ``added_files`` or raise at
-        planning); a legacy inline append at v>0 also costs 0 (its
-        add-diff needs a chain walk — conservative: it may overshoot a
-        cap by one commit, never undershoot progress). Bytes come from
-        :func:`_file_bytes` (a legacy manifest without size stats pays
-        one os.stat per file), only when a bytes cap is actually set."""
+        """(files, bytes) an append at version ``v`` added — raw-manifest
+        metadata for the admission bound (a legacy inline append at v>0
+        also walks to its parent for the diff). Non-append ops cost 0
+        (they are either skipped by ``added_files`` or raise at
+        planning). Bytes come from :func:`change_plan.file_bytes` (a legacy
+        manifest without size stats pays one os.stat per file), only
+        when a bytes cap is actually set."""
         raw = table._raw_manifest(v)
         if raw.get("op") != "append":
             return 0, 0
-        if "add" in raw:
-            added, stats = raw["add"], raw.get("stats_add", {})
-        elif raw.get("parent") is None:
-            added, stats = raw.get("files", []), raw.get("stats", {})
-        else:
-            return 0, 0
+        added = _plan.added_by(table, raw)
+        stats = raw.get("stats_add") or raw.get("stats") or {}
         size = (
-            sum(_file_bytes(table.root, stats, f) for f in added)
+            sum(_plan.file_bytes(table.root, stats, f) for f in added)
             if want_bytes
             else 0
         )
@@ -769,7 +728,9 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         raw = table._raw_manifest(ev)
         sch = raw.get("schema")
         end_mapping = dict(raw.get("column_mapping") or {})
-        if not self._mapping_consistent(table, sv0, end_mapping, sch):
+        if not _plan.mapping_consistent(
+            table, sv0, self.arrow_schema.names, end_mapping, sch
+        ):
             raise ValueError(
                 f"snapshot_table: the stream's declared schema is stale "
                 f"for range ({sv0}, {ev}] of {self.path} — a RENAME/"
@@ -932,29 +893,21 @@ class _SnapshotCDFStreamReader(_SnapshotStreamReader):
     ``_change_type`` / ``_commit_version`` / ``_commit_timestamp``,
     the same shape as ``SnapshotTable.read_changes_cdf``.
 
-    Executor-side reads cannot run Spark jobs, so every partition must
-    be servable from MATERIALIZED artifacts with pyarrow alone:
-
-    - appends / clone-v0 / ``replace_added`` -> data files as inserts
-      (a clone's carried deletion vectors are masked per file);
-    - explicit ``cdc_files`` (merge; update/delete under
-      ``delta.enableChangeDataFeed`` or ``change_data=True``) are
-      served verbatim — they already carry ``_change_type``;
-    - merge-on-read AND copy-on-write delete/update replay from the
-      commit's frozen ``dv_new`` position sidecar (a pyarrow position
-      take — the r10 single-evaluation artifact), pre-images tagged
-      ``delete``/``update_preimage``, ``update_added`` files served as
-      ``update_postimage``;
-    - ``replace_where`` removals apply the recorded partition-value
-      predicate as an Arrow IN-filter after dv masking.
-
-    A version whose changes have NO materialized replay artifact — a
-    legacy COW update/delete without cdc files or a frozen sidecar, an
-    ``overwrite``/``restore`` — fails planning with Delta's posture
-    ("change data was not recorded"): enable
-    ``delta.enableChangeDataFeed`` (or keep this library's frozen
-    sidecars) before streaming the feed. Compactions / OPTIMIZE /
-    constraint and property commits are row-neutral and skipped."""
+    The microbatch serves the artifacts :func:`change_plan.change_plan`
+    plans for the range — the plan ``read_changes_cdf`` builds its
+    frames from, so both readers serve the same rows and refuse the
+    same versions for the same reason. Executor-side reads cannot run
+    Spark jobs, so every artifact is served from a MATERIALIZED file
+    with pyarrow alone: a data file's rows minus the deletion-vector
+    entry it had before the commit (added files as inserts or
+    post-images, a replace's removed files as deletes, filtered by
+    replace_where's recorded partition predicate), ``cdc_files``
+    verbatim, and the rows at the positions a merge-on-read commit or
+    a copy-on-write delete froze in ``dv_new`` (a copy-on-write update
+    freezes none). A ``derive`` artifact — a copy-on-write update
+    without change data, a legacy delete without a frozen sidecar —
+    needs Spark: planning refuses it, naming what helps, rather than
+    serve half a commit."""
 
     _META = _CDF_META
 
@@ -970,187 +923,20 @@ class _SnapshotCDFStreamReader(_SnapshotStreamReader):
         ev = int(end["version"])
         if self._last_end is None or ev > self._last_end:
             self._last_end = ev
-        root = table.root
-        tail = type(table)._file_tail
-        parts: list[dict] = []
-        sizes: list[int] = []
-
-        def _emit(kind: str, path: str, v: int, ts: float, **kw):
-            parts.append(
-                dict(kind=kind, path=str(root / path), version=v, ts=ts, **kw)
-            )
-            # ``raw`` is the version being planned (the loop below)
-            stats = raw.get("stats_add") or raw.get("stats") or {}
-            sizes.append(_file_bytes(root, stats, path))
-
-        def _no_artifact(v: int, why: str):
-            return ValueError(
-                f"snapshot_table[readChangeFeed]: change data was not "
-                f"recorded for version {v} of {self.path} ({why}); set "
-                f"'delta.enableChangeDataFeed' = 'true' (or pass "
-                f"change_data=True) so mutations materialize their "
-                f"feed, or consume SnapshotTable.read_changes_cdf in "
-                f"batch"
-            )
-
-        sv0 = int(start["version"])
-        end_raw = table._raw_manifest(ev)
-        end_schema = end_raw.get("schema")
-        end_mapping = dict(end_raw.get("column_mapping") or {})
-        # batch-drain resume point for the refusal message: a LEADING
-        # skipped rename advances it, because the advised
-        # read_changes_cdf call refuses any in-range rename too — the
-        # recipe must start after the last skipped one to be runnable
-        # (review r11 pass 2)
-        resume_since = sv0
-        for v in range(sv0 + 1, ev + 1):
-            raw = end_raw if v == ev else table._raw_manifest(v)
-            op = raw["op"]
-            if op in (
-                "compact",
-                "optimize",
-                "add_constraint",
-                "drop_constraint",
-                "set_property",
-                "unset_property",
-            ):
-                continue
-            if op in ("rename_column", "drop_column"):
-                # row-neutral but a SCHEMA change. The CDF replays each
-                # version under ITS OWN logical names, so change rows
-                # emitted before the rename would misalign with those
-                # after it — refuse as soon as anything precedes it in
-                # the range, and whenever a declared column's physical
-                # slot differs between range start and range end (a
-                # name-preserving 3-rename column SWAP changes meanings
-                # without changing names; comparing against the RANGE
-                # START survives reader restarts — review r11 pass 2).
-                # A LEADING rename/drop that keeps declared slots
-                # stable is skipped as row-neutral, so a fresh stream
-                # over a table with mapping history drains. Keyed off
-                # the OP, never the mapping fields: an identity-revert
-                # rename drops the column_mapping key entirely (ADVICE
-                # r10). Not a missing-artifact case: enabling change
-                # data cannot fix a schema change, so say what helps.
-                if not parts and self._mapping_consistent(
-                    table, sv0, end_mapping, end_schema
-                ):
-                    resume_since = v
-                    continue
-                raise ValueError(
-                    f"snapshot_table[readChangeFeed]: the streamed "
-                    f"range crosses a column-mapping schema change at "
-                    f"version {v} of {self.path} (op={op!r}). Change "
-                    f"rows committed BEFORE it in this range were not "
-                    f"delivered: drain them in batch with "
-                    f"SnapshotTable.read_changes_cdf(since_version="
-                    f"{resume_since}, until_version={v - 1}), then "
-                    f"restart the stream with startingVersion {v + 1} "
-                    f"(new checkpoint)"
-                )
-            # a mapping ESTABLISHED at or before the range start is
-            # uniform across it (no in-range rename/drop survives the
-            # check above): serve logical names via per-version
-            # physical translation, exactly like the batch connector
-            # (VERDICT r10 task #4)
-            mp = dict(raw.get("column_mapping") or {}) or None
-            ts = float(raw.get("ts", 0.0))
-            if "cdc_files" in raw:
-                for f in raw["cdc_files"]:
-                    _emit("cdc", f, v, ts)
-                continue
-            if op in ("append", "clone"):
-                if "add" in raw:
-                    added = raw["add"]
-                elif raw.get("parent") is None:
-                    added = raw.get("files", [])
-                else:  # legacy inline append at v>0: parent diff
-                    parent_files = set(table.snapshot(raw["parent"]).files)
-                    added = [
-                        f
-                        for f in raw.get("files", [])
-                        if f not in parent_files
-                    ]
-                dv = raw.get("dv") if op == "clone" else None
-                for f in added:
-                    e = (dv or {}).get(f)
-                    _emit(
-                        "insert",
-                        f,
-                        v,
-                        ts,
-                        dv_path=str(root / e[0]) if e else None,
-                        dv_key=tail(f) if e else None,
-                        phys=mp,
-                    )
-                continue
-            if op == "replace":
-                pred = raw.get("replace_predicate")
-                repl = raw.get("replace_added")
-                if pred is None or repl is None:
-                    raise _no_artifact(v, "replace without a predicate")
-                dvr = raw.get("dv_removed") or {}
-                for f in raw.get("remove", []):
-                    e = dvr.get(f)
-                    _emit(
-                        "replace_del",
-                        f,
-                        v,
-                        ts,
-                        ctype="delete",
-                        pred={c: list(vals) for c, vals in pred.items()},
-                        dv_path=str(root / e[0]) if e else None,
-                        dv_key=tail(f) if e else None,
-                        phys=mp,
-                    )
-                for f in repl:
-                    _emit("file_as", f, v, ts, ctype="insert", phys=mp)
-                continue
-            if op in ("delete", "update"):
-                mor = raw.get(f"{op}_mode") == "merge-on-read"
-                affected = (
-                    raw.get("dv_touched", []) if mor else raw.get("remove", [])
-                )
-                from nyc_taxi_data_pipeline_elt_spark.sources.snapshots import (
-                    _dv_new_list,
-                )
-
-                dv_new = _dv_new_list(raw.get("dv_new"))
-                if affected and not dv_new:
-                    raise _no_artifact(
-                        v, f"legacy {op} without a frozen position sidecar"
-                    )
-                pre_type = "delete" if op == "delete" else "update_preimage"
-                for f in affected:
-                    _emit(
-                        "mor",
-                        f,
-                        v,
-                        ts,
-                        # a sharded COW freeze records several sidecar
-                        # files; the file key's positions live in
-                        # exactly one (hash-sharded by key), and the
-                        # read side prunes the rest on footer min/max
-                        dv_paths=[str(root / d) for d in dv_new],
-                        dv_key=tail(f),
-                        ctype=pre_type,
-                        phys=mp,
-                    )
-                if op == "update":
-                    for f in raw.get("update_added", []):
-                        _emit(
-                            "file_as",
-                            f,
-                            v,
-                            ts,
-                            ctype="update_postimage",
-                            phys=mp,
-                        )
-                continue
-            raise _no_artifact(v, f"op={op!r} is not replayable")
-        if not parts:
+        plan = _plan.change_plan(
+            table, int(start["version"]), ev, self._base_schema().names
+        )
+        for a in plan:
+            if a["kind"] == "derive":
+                raise _plan.refusal(table.root, a["version"], a["why"])
+            # the sidecars key their rows by the file's root-independent tail
+            a["key"] = type(table)._file_tail(a["path"])
+        if not plan:
             return [InputPartition(None)]
-        return [InputPartition(group) for group in _pack(parts, sizes)]
+        return [
+            InputPartition(group)
+            for group in _pack(plan, [a["bytes"] for a in plan])
+        ]
 
     def read(self, partition: InputPartition):
         # a packed partition: its artifacts in version order, one at a
@@ -1158,65 +944,45 @@ class _SnapshotCDFStreamReader(_SnapshotStreamReader):
         for p in partition.value or ():
             yield from self._serve(p).to_batches()
 
-    def _serve(self, p: dict):
+    def _serve(self, a: dict):
         """One replay artifact as an Arrow table in the reader schema."""
         import numpy as np
         import pyarrow as pa
-        import pyarrow.parquet as pq
+        import pyarrow.compute as pc
 
+        root = Path(self.path)
         base = self._base_schema()
-        kind = p["kind"]
-        if kind == "cdc":
+        if a["kind"] == "cdc":
             # cdc parquet already carries _change_type
             sch = pa.schema(
                 list(base) + [pa.field("_change_type", pa.string())]
             )
-            table = _project_parquet(p["path"], sch)
+            table = _project_parquet(str(root / a["path"]), sch)
         else:
-            table = _project_parquet(p["path"], base, phys=p.get("phys"))
-            # prior/clone-carried deletion vector: mask dead rows before
-            # anything else. NOT for "mor" — there dv_path is the FROZEN
-            # new-dead sidecar consumed by the position take below, and
-            # frozen positions were computed over then-live rows only.
-            if kind != "mor" and p.get("dv_path"):
-                table = _mask_dv(table, [(p["dv_path"], p["dv_key"])])
-            if kind == "mor":
-                # the commit's frozen positions: exactly the rows this
-                # version deleted / updated (single-evaluation
-                # artifact). A sharded COW freeze spreads keys over
-                # several sidecar files; the filter prunes via footer
-                # min/max on `file`, so non-matching shards cost one
-                # footer read each.
-                pos = np.concatenate(
-                    [
-                        pq.read_table(
-                            pth,
-                            columns=["pos"],
-                            filters=[("file", "=", p["dv_key"])],
-                        )["pos"].to_numpy()
-                        for pth in p["dv_paths"]
-                    ]
+            table = _project_parquet(
+                str(root / a["path"]), base, phys=a["mapping"] or None
+            )
+            if a["kind"] == "frozen":
+                # exactly the rows this version deleted / updated, frozen
+                # over then-live rows: no prior mask on top
+                pos = _positions(
+                    [(str(root / s), a["key"]) for s in a["frozen"]]
                 )
                 table = table.take(pa.array(np.sort(pos)))
-            elif kind == "replace_del":
-                import pyarrow.compute as pc
-
-                expr = None
-                for c, vals in p["pred"].items():
-                    e = pc.field(c).isin(vals)
-                    expr = e if expr is None else expr & e
-                table = table.filter(expr)
-            ctype = "insert" if kind == "insert" else p["ctype"]
+            elif a["mask"]:
+                table = _mask_dv(table, [(str(root / a["mask"][0]), a["key"])])
+            for c, vals in (a.get("where") or {}).items():
+                table = table.filter(pc.field(c).isin(vals))
             table = table.append_column(
-                "_change_type", pa.array([ctype] * table.num_rows)
+                "_change_type", pa.array([a["ctype"]] * table.num_rows)
             )
         n = table.num_rows
         table = table.append_column(
-            "_commit_version", pa.array([p["version"]] * n, pa.int64())
+            "_commit_version", pa.array([a["version"]] * n, pa.int64())
         ).append_column(
             "_commit_timestamp",
             pa.array(
-                [int(p["ts"] * 1_000_000)] * n, pa.int64()
+                [int(a["ts"] * 1_000_000)] * n, pa.int64()
             ).cast(pa.timestamp("us")),
         )
         return table.select(self.arrow_schema.names).cast(self.arrow_schema)

@@ -51,6 +51,7 @@ transactions.
 
 from __future__ import annotations
 
+import itertools
 import json
 import logging
 import os
@@ -71,7 +72,11 @@ from pyspark.sql.functions import max as F_max
 from pyspark.sql.functions import min as F_min
 from pyspark.sql.functions import when as F_when
 
+from nyc_taxi_data_pipeline_elt_spark.sources import change_plan as _plan
 from nyc_taxi_data_pipeline_elt_spark.sources import stats_prover as _prover
+from nyc_taxi_data_pipeline_elt_spark.sources.change_plan import (
+    dv_new_list as _dv_new_list,
+)
 from nyc_taxi_data_pipeline_elt_spark.sources.stats_prover import _stat_key
 
 _log = logging.getLogger(__name__)
@@ -188,17 +193,6 @@ def _vacuum_subdir(root: str, subdir: str, live: frozenset) -> list[str]:
         except OSError:
             pass
     return removed
-
-
-def _dv_new_list(value) -> list[str]:
-    """Normalize a manifest's ``dv_new`` record to a rel-path list: a
-    merge-on-read freeze (and a single-file COW freeze) records the
-    plain string r10 manifests used; a sharded copy-on-write freeze
-    records the file LIST (``_write_dv(single=False)``). Falsy →
-    empty."""
-    if not value:
-        return []
-    return [value] if isinstance(value, str) else list(value)
 
 
 def _set_projection(df: DataFrame, set_exprs: dict, when=None) -> list:
@@ -4752,15 +4746,32 @@ class SnapshotTable:
         :meth:`process_changes_cdf`: read-or-default the checkpoint,
         idle-exit, feed ``reader(spark, since, until)``'s frame to
         ``handle``, then advance via atomic tmp-write + ``os.replace``
-        — one implementation so a future protocol fix (fsync policy,
-        ahead-of-table checkpoints, corruption handling) cannot
-        silently diverge between the two consumers."""
+        — one implementation so a protocol fix cannot silently diverge
+        between the two consumers. A missing checkpoint starts from the
+        first version. One that does not parse, or that is past the
+        table's current version, raises: replaying the whole feed
+        would hand the consumer every row again as new, and idling
+        would never deliver another change."""
         ck = Path(checkpoint)
         try:
-            last = int(ck.read_text().strip())
-        except (FileNotFoundError, ValueError):
-            last = -1
+            text = ck.read_text()
+        except FileNotFoundError:
+            text = "-1"
+        try:
+            last = int(text.strip())
+        except ValueError:
+            raise ValueError(
+                f"{self.root}: consumer checkpoint {ck} holds {text!r}, "
+                "not a table version; restore it or delete it to replay "
+                "the whole feed"
+            ) from None
         cur = self.current_version()
+        if last > (-1 if cur is None else cur):
+            raise ValueError(
+                f"{self.root}: consumer checkpoint {ck} is at version "
+                f"{last}, past the table's current version {cur}; it "
+                "belongs to another table or to a recreated one"
+            )
         if cur is None or cur <= last:
             return None
         handle(reader(spark, since_version=last, until_version=cur), cur)
@@ -4806,15 +4817,16 @@ class SnapshotTable:
     ) -> list[str]:
         """Relative paths of data files ADDED by append snapshots in
         ``(since_version, until_version]`` — the manifest-diff core of
-        the change feed, O(files) metadata. ``compact``/``optimize``
-        snapshots rewrite rows without changing them and
-        ``add_constraint``/``drop_constraint`` are metadata-only — all
-        four are skipped, as is a NO-OP ``delete`` (its stats pruning
-        touched zero files, so no row changed); any other non-append op
-        (overwrite, restore, a row-removing delete) invalidates
-        append-only lineage and raises (the same contract as Delta CDF
-        without update/delete vectors — :meth:`read_changes_cdf` is the
-        reader that understands deletes).
+        the change feed, O(files) metadata. Row-neutral commits
+        (``change_plan.ROW_NEUTRAL``: ``compact``/``optimize`` rewrite
+        rows without changing them, constraint and property commits are
+        metadata-only) are skipped, as is a NO-OP ``delete`` (its stats
+        pruning touched zero files, so no row changed); any other
+        non-append op (overwrite, restore, a row-removing delete)
+        invalidates append-only lineage and raises (the same contract
+        as Delta CDF without update/delete vectors —
+        :meth:`read_changes_cdf` is the reader that understands
+        deletes).
 
         Opt-outs (VERDICT r10 task #3 — Delta's stream-source
         options): ``ignore_deletes`` skips a row-removing DELETE that
@@ -4841,16 +4853,9 @@ class SnapshotTable:
         added: list[str] = []
         for v in range(since_version + 1, until_version + 1):
             s = self.snapshot(v)
-            if s.op in (
-                "compact",
-                "optimize",
-                "add_constraint",
-                "drop_constraint",
-                "set_property",
-                "unset_property",
-            ):
+            if s.op in _plan.ROW_NEUTRAL:
                 continue
-            if s.op in ("rename_column", "drop_column"):
+            if s.op in _plan.MAPPING_OPS:
                 if allow_mapping_ops:
                     continue  # metadata-only: no row, no file changed
                 raise ValueError(
@@ -4889,18 +4894,15 @@ class SnapshotTable:
                 # remove-only delete (MoR soft delete / whole files
                 # dropped): no file added, nothing to duplicate
                 continue
-            if s.op == "clone" and s.parent is None:
-                if s.dv:
-                    # the carried deletion vectors make 'added rows' a
-                    # filtered set plain file reads cannot express
-                    raise ValueError(
-                        f"{self.root}: clone snapshot v{v} carries "
-                        "deletion vectors; read_changes_cdf is the "
-                        "reader that honors them"
-                    )
-                added.extend(s.files)  # every referenced row is new here
-                continue
-            if s.op != "append":
+            if s.op == "clone" and s.dv:
+                # the carried deletion vectors make 'added rows' a
+                # filtered set plain file reads cannot express
+                raise ValueError(
+                    f"{self.root}: clone snapshot v{v} carries "
+                    "deletion vectors; read_changes_cdf is the "
+                    "reader that honors them"
+                )
+            if s.op not in ("append", "clone"):
                 hint = (
                     "; a remove-only delete can be skipped with "
                     "ignoreDeletes, any row-changing commit with "
@@ -4920,12 +4922,7 @@ class SnapshotTable:
                     f"{self.root}: change feed crosses non-append snapshot "
                     f"v{v} (op={s.op!r}){hint}"
                 )
-            parent_files = (
-                set(self.snapshot(s.parent).files)
-                if s.parent is not None
-                else set()
-            )
-            added.extend(f for f in s.files if f not in parent_files)
+            added.extend(_plan.added_by(self, self._raw_manifest(v)))
         return added
 
     def _range_delete_masks(
@@ -5106,257 +5103,87 @@ class SnapshotTable:
         since_version: int,
         until_version: int | None = None,
     ) -> DataFrame:
-        """Delta-shaped change data feed WITH delete replay: every row
-        change in ``(since_version, until_version]`` tagged with
-        ``_change_type`` (``insert`` | ``delete``) and
-        ``_commit_version`` — the reader downstream CDC consumers use
-        when the table mutates, where the insert-only
-        :meth:`read_changes` must refuse.
+        """Delta-shaped change data feed WITH delete and update replay:
+        every row change in ``(since_version, until_version]`` tagged
+        with ``_change_type`` (``insert`` | ``delete`` |
+        ``update_preimage`` | ``update_postimage``), ``_commit_version``
+        and ``_commit_timestamp`` (the manifest's commit ts) — the
+        reader downstream CDC consumers use when the table mutates,
+        where the insert-only :meth:`read_changes` must refuse.
 
-        - a commit that recorded explicit ``cdc_files`` (a
-          ``merge``/``update`` with ``change_data=True`` — Delta's cdc
-          actions) serves them verbatim: ``update_preimage`` /
-          ``update_postimage`` / ``delete`` / ``insert`` rows as
-          materialized at commit time;
-        - ``append`` -> its added files' rows as ``insert``;
-        - ``delete`` / ``update`` -> pre-images (``delete`` /
-          ``update_preimage``) re-read from the removed or soft-deleted
-          parent files (immutable until vacuumed — same retention
-          contract as Delta CDF): exactly the positions the commit
-          froze (``dv_new``), else — a legacy manifest or a
-          copy-on-write update, which refuses non-deterministic
-          expressions — the rows the recorded predicate selects.
-          Post-images (``update_postimage``) are the files the commit
-          added (``update_added``), else the recorded SET projection of
-          the pre-images. A no-op contributes nothing;
-        - ``replace`` (replace_where) -> fully DERIVED, no extra
-          writes: deletes = the removed files' predicate-matching rows,
-          inserts = the recorded replacement files (the rewritten
-          remainder rows are carried copies, not changes);
-        - ``compact`` / ``optimize`` / constraint commits are
-          row-neutral and skipped;
-        - ``overwrite`` / ``restore`` / a merge without change_data
-          still raise (full-snapshot re-read).
-
-        Replays of removed files read with the LOG schema the manifest
-        recorded (ADVICE r9): an evolution-added predicate column no
-        removed file contains evaluates as NULL instead of raising.
-        Every row also carries ``_commit_timestamp`` (the manifest's
-        commit ts — Delta's third CDF metadata column, ADVICE r9)
-        alongside ``_commit_version``.
+        What each commit replays, and which commits refuse, is decided
+        by :func:`change_plan.change_plan`, the planner the
+        ``readChangeFeed`` stream serves as well. This method builds
+        Spark frames from its artifacts: one read per version and
+        artifact group, each under the schema and mapping its commit
+        recorded (an evolution-added predicate column no removed file
+        contains evaluates as NULL), unioned by name so schema
+        evolution across the range reads null-padded. Only this reader
+        serves ``derive`` artifacts: a copy-on-write update without
+        change data (which refuses non-deterministic expressions) or a
+        legacy delete without a frozen sidecar, re-derived from the
+        recorded predicate and SET projection.
 
         O(changed files) metadata + one scan over exactly the changed
-        files; versions are unioned by name so schema evolution across
-        the range reads null-padded."""
+        files."""
         until = (
             self.current_version() if until_version is None else until_version
         )
         if until is None:
             raise FileNotFoundError(f"{self.root}: no committed snapshot")
         parts: list[DataFrame] = []
-
-        def _emit(df: DataFrame, v: int, ts: float, ctype=None) -> None:
-            """Queue one replayed slice, tagged with its ``ctype`` (cdc
-            files carry their own) and its commit's version and ts."""
-            if ctype is not None:
-                df = df.withColumn("_change_type", F_lit(ctype))
-            parts.append(
-                df.withColumn("_commit_version", F_lit(v)).withColumn(
-                    "_commit_timestamp", F_lit(ts).cast("timestamp")
+        for (v, kind, ctype), group in itertools.groupby(
+            _plan.change_plan(self, since_version, until),
+            key=lambda a: (a["version"], a["kind"], a["ctype"]),
+        ):
+            arts = list(group)
+            a, files = arts[0], [x["path"] for x in arts]
+            sch, mp = a["schema"], a["mapping"]
+            if kind == "cdc":  # logical names, plus its own _change_type
+                sch, mp = sch and [*sch, ["_change_type", "string"]], None
+            rows = self._read_files(spark, files, schema=sch, mapping=mp)
+            if a.get("frozen"):
+                # exactly the positions the commit froze: a semi-join,
+                # nothing re-evaluated, and no prior mask (they were
+                # frozen over then-live rows). No broadcast hint: a
+                # copy-on-write delete freezes its full matched set.
+                pos = self._read_positions(spark, a["frozen"]).selectExpr(
+                    "file AS __dv_file__", "pos AS __dv_pos__"
                 )
-            )
-
-        def _added(rel_files, sch, mp) -> DataFrame:
-            """The rows of files a commit added, under its schema."""
-            return self._read_files(spark, rel_files, schema=sch, mapping=mp)
-
-        def _live(rel_files, sch, dv_entries, mp=None) -> DataFrame:
-            """A replay read that honors the files' dv entries AS OF
-            the replayed commit's parent — rows already soft-deleted
-            before the commit were not part of the table, so its
-            removals/updates must not replay them."""
-            return self._apply_dv(
-                spark,
-                _added(rel_files, sch, mp),
-                rel_files,
-                {f: e for f, e in (dv_entries or {}).items() if e},
-            )
-
-        def _frozen_rows(rel_files, sch, dv_new_rel, mp=None) -> DataFrame:
-            """Replay of a merge-on-read commit: EXACTLY the rows whose
-            positions its frozen new-dead sidecar recorded — a position
-            semi-join, no predicate re-evaluation, exact even when the
-            predicate was non-deterministic. (The frozen set was
-            computed over then-live rows, so no dv_before exclusion is
-            needed on top.) No broadcast hint: merge-on-read sidecars
-            are small by contract, but a copy-on-write delete freezes
-            its FULL matched set — AQE broadcasts only when it fits.
-            ``dv_new_rel`` may be a str (MoR / single-file freeze) or a
-            list (sharded COW freeze)."""
-            df = self._tag_dv_cols(_added(rel_files, sch, mp))
-            pos = self._read_positions(
-                spark, _dv_new_list(dv_new_rel)
-            ).selectExpr("file AS __dv_file__", "pos AS __dv_pos__")
-            return df.join(
-                pos, ["__dv_file__", "__dv_pos__"], "left_semi"
-            ).drop("__dv_file__", "__dv_pos__")
-
-        for v in range(since_version + 1, until + 1):
-            # the raw manifest carries everything this loop needs (op,
-            # deltas, predicates, cdc refs) — resolving the full
-            # snapshot per version would re-walk the delta chain up to
-            # checkpoint_every times per step for nothing (review r9);
-            # only the rare legacy-inline-append fallback resolves one
-            raw = self._raw_manifest(v)
-            op = raw["op"]
-            if op in (
-                "compact",
-                "optimize",
-                "add_constraint",
-                "drop_constraint",
-                "set_property",
-                "unset_property",
-            ):
-                continue
-            if op in ("rename_column", "drop_column"):
-                # row-neutral, but a SCHEMA change: parts before and
-                # after it would carry misaligned column names (ADVICE
-                # r10: an identity-revert rename carries no
-                # column_mapping key, so keying this off the mapping
-                # fields missed it and fell to the generic
-                # not-replayable error)
-                raise ValueError(
-                    f"{self.root}: change feed crosses a column-mapping "
-                    f"schema change at v{v} (op={op!r}); restart the "
-                    f"feed from version {v} or later"
+                rows = (
+                    self._tag_dv_cols(rows)
+                    .join(pos, ["__dv_file__", "__dv_pos__"], "left_semi")
+                    .drop("__dv_file__", "__dv_pos__")
                 )
-            ts = float(raw.get("ts", 0.0))
-            sch = raw.get("schema")
-            mp = raw.get("column_mapping") or {}
-            if "cdc_files" in raw:
-                # explicit change-data files (merge/update
-                # change_data=True): authoritative, written in LOGICAL
-                # names with their _change_type; empty list = no changes
-                if raw["cdc_files"]:
-                    cdc_sch = sch and [*sch, ["_change_type", "string"]]
-                    _emit(_added(raw["cdc_files"], cdc_sch, None), v, ts)
-                continue
-            if op in ("replace", "overwrite_partitions"):
-                pred = raw.get("replace_predicate")
-                repl = raw.get("replace_added")
-                if repl is None or (op == "replace" and pred is None):
-                    raise ValueError(
-                        f"{self.root}: {op} snapshot v{v} recorded no "
-                        "replayable predicate; read the full snapshot "
-                        "instead"
+            elif kind != "cdc":
+                # rows soft-deleted before the commit were not part of
+                # the table, so it did not change them
+                rows = self._apply_dv(
+                    spark,
+                    rows,
+                    files,
+                    {x["path"]: x["mask"] for x in arts if x["mask"]},
+                )
+            for c, vals in (a.get("where") or {}).items():
+                rows = rows.filter(F_col(c).isin(*vals))
+            if a.get("predicate"):
+                rows = rows.filter(F_expr(a["predicate"]))
+            frames = [(rows, ctype)]
+            if a.get("sets"):
+                frames.append(
+                    (
+                        rows.select(*_set_projection(rows, a["sets"])),
+                        "update_postimage",
                     )
-                removed = raw.get("remove", [])
-                if removed:
-                    live_rows = _live(
-                        removed, sch, raw.get("dv_removed"), mp
+                )
+            for df, ct in frames:
+                if ct is not None:
+                    df = df.withColumn("_change_type", F_lit(ct))
+                parts.append(
+                    df.withColumn("_commit_version", F_lit(v)).withColumn(
+                        "_commit_timestamp", F_lit(a["ts"]).cast("timestamp")
                     )
-                    if op == "replace":
-                        match = None
-                        for c, vals in pred.items():
-                            cond = F_col(c).isin(*vals)
-                            match = (
-                                cond if match is None else (match & cond)
-                            )
-                        live_rows = live_rows.filter(
-                            F_coalesce(match, F_lit(False))
-                        )
-                    # overwrite_partitions removes files by EXACT
-                    # partition membership: every live row of a removed
-                    # file was replaced — whole-file deletes, no filter
-                    _emit(live_rows, v, ts, "delete")
-                if repl:
-                    _emit(_added(repl, sch, mp), v, ts, "insert")
-                continue
-            if op in ("append", "clone"):
-                # a clone's v0 is inline (parent None): every referenced
-                # row is new TO THIS TABLE, replayed as inserts
-                if "add" in raw:
-                    added = raw["add"]  # delta manifest: the common case
-                elif raw.get("parent") is None:
-                    # inline v0 (a since=-1 range): everything is new
-                    added = raw.get("files", [])
-                else:
-                    # legacy/hand-written INLINE append at v>0 (review
-                    # r9: trusting its full file list would replay every
-                    # CARRIED pre-existing row as an insert): fall back
-                    # to the parent diff, paying the chain walk only for
-                    # this rare manifest shape
-                    parent_files = set(
-                        self.snapshot(raw["parent"]).files
-                    )
-                    added = [
-                        f
-                        for f in raw.get("files", [])
-                        if f not in parent_files
-                    ]
-                if added:
-                    rows = _added(added, sch, mp)
-                    if op == "clone":
-                        # the clone carried its source's deletion
-                        # vectors: soft-deleted rows were never part of
-                        # this table, so they must not replay as inserts
-                        rows = self._apply_dv(
-                            spark, rows, added, raw.get("dv")
-                        )
-                    _emit(rows, v, ts, "insert")
-                continue
-            if op in ("delete", "update"):
-                # the Data Source's replay shape: pre-images are the
-                # frozen positions over the affected files, post-images
-                # the materialized added files
-                mor = raw.get(f"{op}_mode") == "merge-on-read"
-                affected = raw.get("dv_touched" if mor else "remove", [])
-                pred = raw.get(f"{op}_predicate")
-                sets = raw.get("update_set")
-                added = raw.get("update_added")
-                derive_post = op == "update" and added is None
-                if affected:
-                    dv_new = raw.get("dv_new")
-                    if dv_new:
-                        # the commit's single predicate evaluation:
-                        # exact even for non-deterministic predicates
-                        pre = _frozen_rows(affected, sch, dv_new, mp)
-                    elif pred is None or (derive_post and sets is None):
-                        raise ValueError(
-                            f"{self.root}: {op} snapshot v{v} recorded no "
-                            "predicate/SET; cannot replay its changes"
-                        )
-                    else:
-                        # no frozen sidecar (a legacy manifest, or a
-                        # copy-on-write update, which refuses
-                        # non-deterministic expressions): derive
-                        pre = _live(
-                            affected,
-                            sch,
-                            raw.get("dv_before" if mor else "dv_removed"),
-                            mp,
-                        ).filter(F_coalesce(F_expr(pred), F_lit(False)))
-                    _emit(
-                        pre,
-                        v,
-                        ts,
-                        "delete" if op == "delete" else "update_preimage",
-                    )
-                    if derive_post:
-                        _emit(
-                            pre.select(*_set_projection(pre, sets)),
-                            v,
-                            ts,
-                            "update_postimage",
-                        )
-                if added:
-                    _emit(_added(added, sch, mp), v, ts, "update_postimage")
-                continue
-            raise ValueError(
-                f"{self.root}: change feed crosses snapshot v{v} "
-                f"(op={op!r}) whose row changes are not replayable; "
-                "read the full snapshot instead"
-            )
+                )
         if not parts:
             return (
                 self._snapshot_frame_or_empty(spark, until)

@@ -174,7 +174,7 @@ def test_cdf_stream_packs_artifacts_in_version_order(
     arts = parts[0].value
     assert len(arts) == 12
     assert [a["version"] for a in arts] == sorted(a["version"] for a in arts)
-    assert [a["kind"] for a in arts] == ["insert"] * 6 + ["mor"] * 6
+    assert [a["kind"] for a in arts] == ["rows"] * 6 + ["frozen"] * 6
     packed = _served(reader, parts)
     assert packed == _served(reader, [InputPartition([a]) for a in arts])
     batch = cdf_feed.read_changes_cdf(spark, since_version=-1)

@@ -242,41 +242,153 @@ def _drain_cdf(spark, path, ck):
     return out
 
 
-def test_cdf_stream_matches_batch_feed_across_mutations(spark, tmp_path):
-    """The streaming change feed (readChangeFeed=true) delivers the
-    SAME rows as read_changes_cdf across every replayable op class —
-    appends, merge cdc files, MoR delete, MoR update, COW delete
-    (frozen sidecar), compaction skipped — exactly once across two
-    availableNow cycles."""
+def _mutations(spark, tmp_path):
+    """Appends, MoR delete, COW delete (frozen sidecar); then MoR update,
+    compaction (skipped) and append."""
     table = SnapshotTable(str(tmp_path / "tbl"))
-    ck = str(tmp_path / "ck")
     table.append(_df(spark, 0, 8).coalesce(1))               # v0
     table.delete(spark, "id = 1", mode="merge-on-read")      # v1
     table.delete(spark, "id = 2")                            # v2 COW frozen
-    first = _drain_cdf(spark, str(table.root), ck)
-    batch1 = {
-        (r["id"], r["v"], r["_change_type"], r["_commit_version"])
-        for r in table.read_changes_cdf(spark, since_version=-1).collect()
-    }
-    assert set(first) == batch1 and len(first) == len(batch1)
-    # second cycle: MoR update + compaction (skipped) + append
-    v2 = table.current_version()
+    yield table, {"insert", "delete"}
     table.update(
         spark, "id = 3", {"v": "v + 100"}, mode="merge-on-read"
     )                                                        # v3
     table.compact(spark, target_files=1)                     # v4 skipped
     table.append(_df(spark, 8, 10))                          # v5
-    second = _drain_cdf(spark, str(table.root), ck)
-    batch2 = {
+    yield table, {"update_preimage", "update_postimage", "insert"}
+
+
+def _overwrite_partitions(spark, tmp_path):
+    """A dynamic partition overwrite replaces a partition one of whose
+    rows was already soft-deleted: that row is not deleted again."""
+    table = SnapshotTable(str(tmp_path / "tbl"), partition_by=["p"])
+    table.append(
+        spark.range(8).selectExpr("id", "id * 2 AS v", "id % 2 AS p")
+    )
+    table.delete(spark, "id = 2", mode="merge-on-read")
+    table.overwrite_partitions(
+        spark, spark.createDataFrame([(100, 0, 0)], "id long, v long, p long")
+    )
+    yield table, {"insert", "delete"}
+
+
+def _replace_where(spark, tmp_path):
+    """replace_where deletes the removed files' live rows its predicate
+    matches, after an earlier soft delete of one of them."""
+    table = SnapshotTable(str(tmp_path / "tbl"))
+    table.append(_df(spark, 0, 10).coalesce(1))
+    table.delete(spark, "id = 4", mode="merge-on-read")
+    table.replace_where(
+        spark,
+        spark.createDataFrame([(100, 0)], "id long, v long"),
+        column="v",
+        values=[0, 8],
+    )
+    yield table, {"insert", "delete"}
+
+
+def _clone_with_dv(spark, tmp_path):
+    """A clone carrying its source's deletion vectors, then a COW delete
+    of one of the source files it references."""
+    src = SnapshotTable(str(tmp_path / "src"))
+    src.append(_df(spark, 0, 10).coalesce(1))
+    src.delete(spark, "id < 3", mode="merge-on-read")
+    clone = src.shallow_clone(str(tmp_path / "clone"))
+    clone.delete(spark, "id = 5")
+    yield clone, {"insert", "delete"}
+
+
+def _leading_drop_column(spark, tmp_path):
+    """A range that starts with a drop of a column the consumer no
+    longer reads: skipped, the append after it is served."""
+    table = SnapshotTable(str(tmp_path / "tbl"))
+    table.append(_df(spark, 0, 3).selectExpr("*", "'x' AS tag"))
+    yield table, {"insert"}
+    table.drop_column("tag")
+    table.append(_df(spark, 3, 5))
+    yield table, {"insert"}
+
+
+@pytest.mark.parametrize(
+    "history",
+    [
+        _mutations,
+        _overwrite_partitions,
+        _replace_where,
+        _clone_with_dv,
+        _leading_drop_column,
+    ],
+    ids=[
+        "mutations",
+        "overwrite_partitions",
+        "replace_where",
+        "clone_dv",
+        "leading_drop_column",
+    ],
+)
+def test_cdf_stream_matches_batch_feed_across_mutations(
+    spark, tmp_path, history
+):
+    """The streaming change feed (readChangeFeed=true) delivers the
+    SAME rows as read_changes_cdf for every op class, exactly once
+    across availableNow cycles: each cycle serves what the batch feed
+    serves since the previous one, with the change types expected."""
+    ck, since = str(tmp_path / "ck"), -1
+    for table, types in history(spark, tmp_path):
+        got = _drain_cdf(spark, str(table.root), ck)
+        batch = [
+            (r["id"], r["v"], r["_change_type"], r["_commit_version"])
+            for r in table.read_changes_cdf(spark, since_version=since).collect()
+        ]
+        assert sorted(got) == sorted(batch)
+        assert {t for _, _, t, _ in got} == types
+        since = table.current_version()
+
+
+def test_cdf_stream_refuses_half_an_update(spark, tmp_path):
+    """An update manifest that froze its pre-images but records no
+    post-image files: batch derives the post-images from the recorded
+    SET, the stream refuses instead of serving the pre-images alone."""
+    import json
+
+    table = SnapshotTable(str(tmp_path / "tbl"))
+    table.append(_df(spark, 0, 8).coalesce(1))               # v0
+    table.update(
+        spark, "id < 4", {"v": "v + 100"}, mode="merge-on-read"
+    )                                                        # v1
+    manifest = table.manifest_dir / f"v{1:08d}.json"
+    raw = json.loads(manifest.read_text())
+    del raw["update_added"]
+    manifest.write_text(json.dumps(raw))
+    batch = {
+        (r["id"], r["v"], r["_change_type"])
+        for r in table.read_changes_cdf(spark, since_version=0).collect()
+    }
+    assert batch == {(i, 2 * i, "update_preimage") for i in range(4)} | {
+        (i, 2 * i + 100, "update_postimage") for i in range(4)
+    }
+    with pytest.raises(Exception, match="post-images were not materialized"):
+        _drain_cdf(spark, str(table.root), str(tmp_path / "ck"))
+
+
+def test_cdf_stream_refuses_cow_update_without_change_data(spark, tmp_path):
+    """A copy-on-write update without change data: batch derives its
+    pre/post images from the recorded predicate and SET; the stream
+    refuses, advising change data, not calling the manifest legacy."""
+    table = SnapshotTable(str(tmp_path / "tbl"))
+    table.append(_df(spark, 0, 6).coalesce(1))               # v0
+    table.update(spark, "id = 4", {"v": "v + 7"})            # v1
+    batch = {
         (r["id"], r["v"], r["_change_type"], r["_commit_version"])
-        for r in table.read_changes_cdf(spark, since_version=v2).collect()
+        for r in table.read_changes_cdf(spark, since_version=0).collect()
     }
-    assert set(second) == batch2 and len(second) == len(batch2)
-    assert {t for _, _, t, _ in second} == {
-        "update_preimage",
-        "update_postimage",
-        "insert",
-    }
+    assert batch == {(4, 8, "update_preimage", 1), (4, 15, "update_postimage", 1)}
+    with pytest.raises(
+        Exception,
+        match="not recorded for this copy-on-write update; set "
+        "'delta.enableChangeDataFeed'",
+    ):
+        _drain_cdf(spark, str(table.root), str(tmp_path / "ck"))
 
 
 def test_cdf_stream_serves_materialized_cdc_files(spark, tmp_path):

@@ -5,6 +5,7 @@ batch commits, and optimistic-concurrency conflict detection."""
 from __future__ import annotations
 
 import json
+import re
 
 import pytest
 
@@ -251,6 +252,34 @@ def test_process_changes_chains_tables_exactly_once(spark, tmp_path):
     _os.remove(ck)
     assert src.process_changes(spark, ck, copy) == 2
     assert dst.read(spark).count() == 18
+
+
+@pytest.mark.parametrize("consumer", ["process_changes", "process_changes_cdf"])
+def test_consumer_checkpoint_that_does_not_parse_raises(
+    spark, table, tmp_path, consumer
+):
+    """A corrupt consumer checkpoint raises, naming its path, instead of
+    replaying the whole feed into the consumer as new rows."""
+    table.append(_df(spark, 0, 3))
+    ck = tmp_path / "consumer.ckpt"
+    ck.write_text("v0\n")
+    seen = []
+    with pytest.raises(ValueError, match=re.escape(str(ck))):
+        getattr(table, consumer)(spark, str(ck), lambda df, v: seen.append(v))
+    assert seen == [] and ck.read_text() == "v0\n"
+
+
+@pytest.mark.parametrize("consumer", ["process_changes", "process_changes_cdf"])
+def test_consumer_checkpoint_past_the_table_raises(
+    spark, table, tmp_path, consumer
+):
+    """A checkpoint above the table's current version (another table's,
+    or a recreated table's) raises instead of idling forever."""
+    table.append(_df(spark, 0, 3))
+    ck = tmp_path / "consumer.ckpt"
+    ck.write_text("5")
+    with pytest.raises(ValueError, match=re.escape(str(ck))):
+        getattr(table, consumer)(spark, str(ck), lambda df, v: None)
 
 
 def test_python_datasource_reads_snapshots(spark, table, tmp_path):
