@@ -1,7 +1,7 @@
 # Driver targets for the engine (the reference's Makefile deploys AWS
 # infra; this one runs the engine locally).
 
-.PHONY: test prover-gate dml-gate bench bench-small demo smoke perfbench perfbench-selftest perfbench-ab
+.PHONY: test prover-gate dml-gate pipeline-gate bench bench-small demo smoke perfbench perfbench-selftest perfbench-ab
 
 # The ROADMAP tier-1 command.
 test:
@@ -19,6 +19,13 @@ prover-gate:
 dml-gate:
 	python -m pytest tests/test_row_dml.py tests/test_snapshots.py tests/test_snapshot_stream.py \
 	  tests/test_log_planned_reads.py tests/test_partitioned_table.py -q -p no:cacheprovider
+
+# The landing -> consumer gate on its own: the batch pipeline, the
+# incremental runner, and the parity suite over the batch, incremental
+# and snapshot-committed modes, which share one transform.
+pipeline-gate:
+	python -m pytest tests/test_pipeline.py tests/test_pipeline_modes.py tests/test_incremental.py \
+	  -q -p no:cacheprovider
 
 bench:
 	python bench.py

@@ -22,6 +22,10 @@ The processing stage is the reference's landing->consumer transform
 - no log-only ``count()`` actions — the reference triggers 3 full
   recomputations per run (SURVEY.md §4 anti-patterns); here a stage's
   only actions are its two writes
+
+The scan (``read_landing_files``) and the transform
+(``landing_to_consumer``) are shared with ``streaming.incremental``;
+the batch and incremental runners differ only in their sinks.
 """
 
 from __future__ import annotations
@@ -123,47 +127,34 @@ def _visible(path: Path) -> bool:
     return not path.name.startswith(("_", "."))
 
 
-def read_landing_conformed(
-    spark: SparkSession, landing_dir: str, trip_type: str
+def read_landing_files(
+    spark: SparkSession, files: list[Path]
 ) -> tuple[DataFrame | None, int]:
-    """Read one fleet's landing partition, drift-safe.
+    """Conformed scan of landing files, planned from their footers.
 
-    The scan is planned from the Parquet footers on the driver: every
-    ``partition_date=`` batch's files are grouped by footer schema, each
-    group is one Spark scan conformed to ``RAW_UNIFIED_SCHEMA``, and the
-    groups are unioned by name. Files in one group share a footer schema,
-    so Spark infers the same type for each of them, and a type drift
+    The files are grouped by footer schema on the driver, each group is
+    one Spark scan conformed to ``RAW_UNIFIED_SCHEMA``, and the groups
+    are unioned by name. Files in one group share a footer schema, so
+    Spark infers the same type for each of them, and a type drift
     between months (int<->double, exactly README.md:146) only adds a
-    group. TLC publishes one file per fleet-month, so the driver reads one
-    footer per month.
+    group.
 
-    A batch is quarantined (file-level dead-letter) when one of its
-    footers cannot be read, when it has no data files, or when
-    ``conform_to_schema`` rejects its group. Returns
-    ``(df_or_None, n_quarantined)``. Raises when every batch quarantined
-    — a fleet that is entirely unreadable is a systemic failure, not an
-    empty input, and must fail the stage (the reference's fail-fast
-    contract, process_data_glue.py:140-143).
+    A file's ``partition_date=`` batch directory is quarantined
+    (file-level dead-letter) when one of its footers cannot be read or
+    when ``conform_to_schema`` rejects its group; the batch's other files
+    are dropped with it. Returns ``(df_or_None, n_quarantined)``: None
+    when no file survives.
     """
-    base = Path(landing_dir) / f"trip_type={trip_type}"
-    if not base.exists():
-        return None, 0
-    batches = sorted(p for p in base.iterdir() if p.is_dir() and _visible(p))
-    if not batches:
-        return None, 0
-
     failed: dict[Path, Exception] = {}
-    groups: dict[tuple[str, bytes | None], list[Path]] = {}
-    for batch in batches:
-        files = sorted(f for f in batch.iterdir() if f.is_file() and _visible(f))
+    keys: dict[Path, tuple[str, bytes | None]] = {}
+    for f in files:
         try:
-            if not files:
-                raise FileNotFoundError(f"no data files in {batch}")
-            keys = [_footer_key(f) for f in files]
+            keys[f] = _footer_key(f)
         except Exception as exc:
-            failed[batch] = exc
-            continue
-        for key, f in zip(keys, files):
+            failed.setdefault(f.parent, exc)
+    groups: dict[tuple[str, bytes | None], list[Path]] = {}
+    for f, key in keys.items():
+        if f.parent not in failed:
             groups.setdefault(key, []).append(f)
 
     def _scan(files: list[Path]) -> DataFrame:
@@ -175,35 +166,103 @@ def read_landing_conformed(
         )
 
     scans: list[tuple[list[Path], DataFrame]] = []
-    for files in groups.values():
+    for group in groups.values():
         try:
-            scans.append((files, _scan(files)))
+            scans.append((group, _scan(group)))
         except Exception as exc:
-            for f in files:
+            for f in group:
                 failed.setdefault(f.parent, exc)
     parts = []
-    for files, df in scans:
-        keep = [f for f in files if f.parent not in failed]
+    for group, df in scans:
+        keep = [f for f in group if f.parent not in failed]
         if keep:
             # a batch quarantined by another group loses its files here too
-            parts.append(df if len(keep) == len(files) else _scan(keep))
+            parts.append(df if len(keep) == len(group) else _scan(keep))
 
     for batch, exc in failed.items():
         _quarantine(batch, exc)
     if not parts:
+        return None, len(failed)
+    return reduce(DataFrame.unionByName, parts), len(failed)
+
+
+def read_landing_conformed(
+    spark: SparkSession, landing_dir: str, trip_type: str
+) -> tuple[DataFrame | None, int]:
+    """Read one fleet's landing partition, drift-safe.
+
+    Lists every ``partition_date=`` batch and scans their files with
+    ``read_landing_files``. TLC publishes one file per fleet-month, so
+    the driver reads one footer per month. A batch with no data files is
+    quarantined as well. Returns ``(df_or_None, n_quarantined)``. Raises
+    when every batch quarantined — a fleet that is entirely unreadable is
+    a systemic failure, not an empty input, and must fail the stage (the
+    reference's fail-fast contract, process_data_glue.py:140-143).
+    """
+    base = Path(landing_dir) / f"trip_type={trip_type}"
+    if not base.exists():
+        return None, 0
+    batches = sorted(p for p in base.iterdir() if p.is_dir() and _visible(p))
+    if not batches:
+        return None, 0
+
+    files = []
+    n_empty = 0
+    for batch in batches:
+        found = sorted(f for f in batch.iterdir() if f.is_file() and _visible(f))
+        if not found:
+            _quarantine(batch, FileNotFoundError(f"no data files in {batch}"))
+            n_empty += 1
+        files += found
+    raw, n_failed = read_landing_files(spark, files)
+    if raw is None:
         # every batch unreadable: systemic, not empty — fail the stage
         raise RuntimeError(
-            f"all {len(failed)} landing batches for trip_type="
+            f"all {n_empty + n_failed} landing batches for trip_type="
             f"{trip_type!r} were quarantined; see "
             f"{base.parent / '_quarantine.jsonl'}"
         )
-    return reduce(DataFrame.unionByName, parts), len(failed)
+    return raw, n_empty + n_failed
+
+
+def landing_to_consumer(
+    raw: DataFrame, trip_type: str
+) -> tuple[DataFrame, DataFrame]:
+    """The processing job's transform (process_data_glue.py:127-205) on a
+    conformed landing frame: unify the fleets' pickup/dropoff columns,
+    apply the trips DQ rules, and project both sides. Returns
+    ``(consumer, dead_letters)``; writes nothing."""
+    unified = raw.withColumn(
+        "pickup_time",
+        F.coalesce("tpep_pickup_datetime", "lpep_pickup_datetime"),
+    ).withColumn(
+        "dropoff_time",
+        F.coalesce("tpep_dropoff_datetime", "lpep_dropoff_datetime"),
+    )
+    good, bad = apply_quality(unified, trips_rules())
+    # DLQ: the reference's missing to-do (README.md:146)
+    dead_letters = bad.withColumn("trip_type", F.lit(trip_type)).select(
+        *[c for c in unified.columns if not c.endswith("_time")],
+        "trip_type",
+        F.col("dq_violations").cast("array<string>"),
+    )
+    consumer = (
+        good.withColumn("trip_type", F.lit(trip_type))  # P7
+        .withColumn("trip_year", F.year("pickup_time"))  # F1
+        .withColumn("trip_month", F.month("pickup_time"))  # F2
+        .select(*CONSUMER_COLUMNS)  # P9
+    )
+    return consumer, dead_letters
 
 
 def process_trips(
     spark: SparkSession, cfg: PipelineConfig, trip_type: str
 ) -> dict[str, int] | None:
-    """Landing -> consumer for one fleet (EP2, process_data_glue.py).
+    """Landing -> consumer for one fleet (EP2, process_data_glue.py):
+    ``read_landing_conformed`` then ``landing_to_consumer``, the transform
+    ``streaming.incremental`` runs too. Both tables are written with a
+    dynamic partition overwrite, partition-scoped so re-runs stay
+    incremental.
 
     Returns observability metrics. The reference logs row counts with 6
     eager ``count()`` calls, each re-executing the full lineage (SURVEY.md
@@ -221,29 +280,10 @@ def process_trips(
     raw, n_quarantined = read_landing_conformed(spark, cfg.landing_dir, trip_type)
     if raw is None:
         return None
+    consumer, dead_letters = landing_to_consumer(raw, trip_type)
 
-    unified = raw.withColumn(
-        "pickup_time",
-        F.coalesce("tpep_pickup_datetime", "lpep_pickup_datetime"),
-    ).withColumn(
-        "dropoff_time",
-        F.coalesce("tpep_dropoff_datetime", "lpep_dropoff_datetime"),
-    )
-
-    good, bad = apply_quality(unified, trips_rules())
-
-    # DLQ: the reference's missing to-do (README.md:146), partition-scoped
-    # like the consumer table so re-runs stay incremental.
     dlq_obs = Observation(f"dlq_{trip_type}")
-    bad_out = (
-        bad.withColumn("trip_type", F.lit(trip_type))
-        .select(
-            *[c for c in unified.columns if not c.endswith("_time")],
-            "trip_type",
-            F.col("dq_violations").cast("array<string>"),
-        )
-        .observe(dlq_obs, F.count(F.lit(1)).alias("n_rows"))
-    )
+    bad_out = dead_letters.observe(dlq_obs, F.count(F.lit(1)).alias("n_rows"))
     dlq_box: dict = {}
 
     def _dlq_write() -> None:
@@ -253,13 +293,7 @@ def process_trips(
             dlq_box["err"] = exc
 
     consumer_obs = Observation(f"consumer_{trip_type}")
-    consumer = (
-        good.withColumn("trip_type", F.lit(trip_type))  # P7
-        .withColumn("trip_year", F.year("pickup_time"))  # F1
-        .withColumn("trip_month", F.month("pickup_time"))  # F2
-        .select(*CONSUMER_COLUMNS)  # P9
-        .observe(consumer_obs, F.count(F.lit(1)).alias("n_rows"))
-    )
+    consumer = consumer.observe(consumer_obs, F.count(F.lit(1)).alias("n_rows"))
     dlq_thread = InheritableThread(target=_dlq_write, daemon=True)
     dlq_thread.start()
     try:

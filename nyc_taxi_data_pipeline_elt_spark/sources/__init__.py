@@ -2,7 +2,6 @@
 
 from nyc_taxi_data_pipeline_elt_spark.sources.readers import (  # noqa: F401
     load_table,
-    read_landing,
     read_layer,
 )
 from nyc_taxi_data_pipeline_elt_spark.sources.writers import (  # noqa: F401

@@ -1,9 +1,9 @@
-"""Scans (SURVEY.md §2.1: S3, S4, S5).
+"""Scans (SURVEY.md §2.1: S4, S5).
 
-The reference reads landing parquet with schema merging
-(``/root/reference/src/process_data_glue.py:137-139``) and prunes
-partitions *by path surgery* (``:25``; ``reporting_etl_job.py:27-28``).
-Here pruning is expressed the idiomatic way — a filter on the partition
+The reference prunes partitions *by path surgery*
+(``/root/reference/src/process_data_glue.py:25``;
+``reporting_etl_job.py:27-28``). Its landing scan with schema merging
+(S3) is ``pipeline.read_landing_conformed``. Here pruning is expressed the idiomatic way — a filter on the partition
 column of a partitioned read — so Catalyst's PartitionPruning does it,
 and the same plan holds when the table is 100 TB across a million files.
 """
@@ -111,25 +111,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
         elif field.name == "ts" and isinstance(field.dataType, TimestampNTZType):
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
-
-
-def read_landing(
-    spark: SparkSession,
-    landing_path: str,
-    trip_type: str | None = None,
-    merge_schema: bool = True,
-) -> DataFrame:
-    """Landing scan with schema merge (S3) + partition pruning (S4).
-
-    Mirrors ``spark.read.format("parquet").option("mergeSchema","true")``
-    at process_data_glue.py:137-139, but replaces the reference's path
-    pre-filtering with a partition-column filter that Catalyst prunes.
-    """
-    reader = spark.read.option("mergeSchema", str(merge_schema).lower())
-    df = reader.parquet(landing_path)
-    if trip_type is not None and "trip_type" in df.columns:
-        df = df.filter(F.col("trip_type") == trip_type)
     return df
 
 

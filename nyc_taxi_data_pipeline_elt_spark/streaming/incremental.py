@@ -7,12 +7,15 @@ Streaming query whose checkpoint tracks which landing files have been
 processed, so each run handles only new arrivals.
 
 Design: the stream is a *file-discovery* stream, not a data stream. It
-declares only one never-drifting column and immediately projects to
-``input_file_name()`` — the reader prunes every data column, so drifted
-files (the int<->double passenger_count months, README.md:146) never
-decode through a fixed stream schema. ``foreachBatch`` then batch-reads
-exactly the new files with per-file schema conformance — the same drift
-path as the batch pipeline — and commits both sinks (consumer + DLQ).
+is a ``binaryFile`` stream projected to ``path``: each new file is listed
+once and never opened, so discovery is O(new files) and a drifted or
+corrupt file cannot fail it. ``foreachBatch`` then runs the batch
+pipeline's own scan and transform on exactly the new files
+(``pipeline.read_landing_files`` and ``pipeline.landing_to_consumer``):
+the same footer-planned drift path, and the same file-level quarantine
+into ``_quarantine.jsonl``. A quarantined file counts as processed — the
+checkpoint advances past it — so re-land it under a new name to retry
+it.
 
 Exactly-once: file-source checkpointing guarantees each file is delivered
 to exactly one batch, and when ``consumer_table`` is set the consumer
@@ -23,40 +26,40 @@ reconcilable. The DLQ sink and the path-sink consumer fallback (no
 table) remain plain appends stamping ``_batch_id`` on every row, so a
 retried batch's duplicates there stay reconcilable by keeping one copy
 per (_batch_id, key).
-At scale this pattern is the autoloader shape: discovery is
-O(new files), decode is a normal batch job per trigger.
+At scale this pattern is the autoloader shape: discovery lists files,
+decode is a normal batch job per trigger.
 """
 
 from __future__ import annotations
 
-from functools import reduce
 from pathlib import Path
+from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nyc_taxi_data_pipeline_elt_spark.operators.conform import conform_to_schema
-from nyc_taxi_data_pipeline_elt_spark.operators.quality import apply_quality, trips_rules
 from nyc_taxi_data_pipeline_elt_spark.pipeline import (
-    _NARROW_OK,
-    _RENAMES,
-    RAW_UNIFIED_SCHEMA,
     PipelineConfig,
+    landing_to_consumer,
+    read_landing_files,
 )
-from nyc_taxi_data_pipeline_elt_spark.schemas import (
-    CONSUMER_COLUMNS,
-    CONSUMER_PARTITION_KEYS,
-)
+from nyc_taxi_data_pipeline_elt_spark.schemas import CONSUMER_PARTITION_KEYS
 from nyc_taxi_data_pipeline_elt_spark.session import tune
+
+# binaryFile's fixed schema; the projection to path prunes content, so no
+# file is opened
+_BINARY_FILE_SCHEMA = (
+    "path string, modificationTime timestamp, length bigint, content binary"
+)
 
 
 def _discovery_stream(
     spark: SparkSession, base: Path, max_files_per_trigger: int | None = None
 ) -> DataFrame:
-    # VendorID is int64 in every TLC file; it is never actually decoded —
-    # the projection to input_file_name() prunes all data columns.
-    reader = spark.readStream.schema("VendorID long").option(
-        "recursiveFileLookup", "true"
+    reader = (
+        spark.readStream.format("binaryFile")
+        .schema(_BINARY_FILE_SCHEMA)
+        .option("recursiveFileLookup", "true")
     )
     if max_files_per_trigger is not None:
         # bounds per-batch work at scale (a backlog of thousands of landing
@@ -64,9 +67,7 @@ def _discovery_stream(
         # one giant batch); with availableNow the run still drains the
         # whole backlog, just across multiple micro-batches
         reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return (
-        reader.parquet(str(base)).select(F.input_file_name().alias("path"))
-    )
+    return reader.load(str(base)).select("path")
 
 
 def incremental_process(
@@ -81,7 +82,8 @@ def incremental_process(
 
     Each invocation handles only files not yet recorded in the checkpoint;
     ``max_files_per_trigger`` caps per-batch file count so a large backlog
-    drains as multiple right-sized commits.
+    drains as multiple right-sized commits. A batch whose every file is
+    quarantined writes nothing.
 
     With ``consumer_table`` (a ``sources.snapshots.SnapshotTable``), the
     consumer write upgrades from reconcilable-append (``_batch_id`` stamp)
@@ -94,53 +96,20 @@ def incremental_process(
         return
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # the collect is file *paths* only — O(new files), never row data
-        paths = sorted(
-            r.path for r in batch_df.select("path").distinct().collect()
+        # the discovery stream's paths are file: URIs
+        files = sorted(
+            Path(unquote(urlparse(r.path).path)) for r in batch_df.collect()
         )
-        if not paths:
+        raw, _n_quarantined = read_landing_files(spark, files)
+        if raw is None:
             return
-        parts = [
-            conform_to_schema(
-                spark.read.parquet(p),
-                RAW_UNIFIED_SCHEMA,
-                renames=_RENAMES,
-                narrow_ok=_NARROW_OK,
-            )
-            for p in paths
-        ]
-        raw = reduce(lambda a, b: a.unionByName(b), parts)
-        unified = raw.withColumn(
-            "pickup_time",
-            F.coalesce("tpep_pickup_datetime", "lpep_pickup_datetime"),
-        ).withColumn(
-            "dropoff_time",
-            F.coalesce("tpep_dropoff_datetime", "lpep_dropoff_datetime"),
-        )
-        good, bad = apply_quality(unified, trips_rules())
-
-        bad_out = (
-            bad.withColumn("trip_type", F.lit(trip_type))
-            .withColumn("_batch_id", F.lit(batch_id))
-            .select(
-                *[c for c in unified.columns if not c.endswith("_time")],
-                "trip_type",
-                F.col("dq_violations").cast("array<string>"),
-                "_batch_id",
-            )
-        )
-        bad_out.write.mode("append").partitionBy("trip_type").parquet(cfg.dlq_dir)
-
-        consumer = (
-            good.withColumn("trip_type", F.lit(trip_type))
-            .withColumn("trip_year", F.year("pickup_time"))
-            .withColumn("trip_month", F.month("pickup_time"))
-            .select(*CONSUMER_COLUMNS)
-            # same retry-reconciliation stamp as the DLQ write: a retried
-            # foreachBatch re-appends with an identical _batch_id, so
-            # duplicates are detectable and removable per batch.
-            .withColumn("_batch_id", F.lit(batch_id))
-        )
+        consumer, dead_letters = landing_to_consumer(raw, trip_type)
+        # a retried foreachBatch re-appends under an identical _batch_id,
+        # so duplicates are detectable and removable per batch
+        dead_letters.withColumn("_batch_id", F.lit(batch_id)).write.mode(
+            "append"
+        ).partitionBy("trip_type").parquet(cfg.dlq_dir)
+        consumer = consumer.withColumn("_batch_id", F.lit(batch_id))
         if consumer_table is not None:
             # manifest-committed sink: replayed batch ids are rejected at
             # commit time, so this path is exactly-once, not just

@@ -3,6 +3,11 @@ each landing file exactly once, across drifted schemas."""
 
 from __future__ import annotations
 
+import json
+
+import pytest
+from pyspark.sql import functions as F
+
 from nyc_taxi_data_pipeline_elt_spark.pipeline import PipelineConfig
 from nyc_taxi_data_pipeline_elt_spark.sources.ingest import landing_key
 from nyc_taxi_data_pipeline_elt_spark.streaming.incremental import incremental_process
@@ -79,3 +84,82 @@ def test_incremental_snapshot_sink_exactly_once(spark, tmp_path):
     incremental_process(spark, cfg, "yellow", ckpt, consumer_table=table)
     assert table.read(spark).count() == 4
     assert len(table.history()) == len(committed) + 1
+
+
+def _cfg(tmp_path) -> PipelineConfig:
+    return PipelineConfig(
+        landing_dir=str(tmp_path / "landing"),
+        consumer_dir=str(tmp_path / "consumer"),
+        reports_dir=str(tmp_path / "reports"),
+        dlq_dir=str(tmp_path / "dlq"),
+    )
+
+
+@pytest.mark.parametrize("sink", ["path", "snapshot_table"])
+def test_corrupt_file_is_quarantined_and_the_stream_moves_on(spark, tmp_path, sink):
+    """A non-Parquet landing file is quarantined like the batch pipeline
+    does it: the healthy files of its micro-batch commit, a re-run adds
+    nothing, and later files still stream."""
+    from nyc_taxi_data_pipeline_elt_spark.sources.snapshots import SnapshotTable
+
+    landing = tmp_path / "landing"
+    cfg = _cfg(tmp_path)
+    table = None if sink == "path" else SnapshotTable(str(tmp_path / "consumer_tbl"))
+    ckpt = str(tmp_path / "ckpt_yellow")
+
+    def consumer_months() -> list[int]:
+        if table is None:
+            df = spark.read.parquet(cfg.consumer_dir)
+        else:
+            df = table.read(spark)
+        return sorted(r.trip_month for r in df.select("trip_month").collect())
+
+    _write(_yellow(4), landing_key(landing, "yellow", 2023, 4))
+    bad = landing_key(landing, "yellow", 2023, 5)
+    bad.parent.mkdir(parents=True, exist_ok=True)
+    bad.write_bytes(b"this is not parquet")
+    qlog = landing / "_quarantine.jsonl"
+
+    # run 1: April commits, May's batch directory is quarantined
+    incremental_process(spark, cfg, "yellow", ckpt, consumer_table=table)
+    assert consumer_months() == [4, 4]
+    entries = [json.loads(line) for line in qlog.read_text().splitlines()]
+    assert [e["path"] for e in entries] == [str(bad.parent)]
+
+    # run 2: nothing new, nothing raised, nothing added
+    incremental_process(spark, cfg, "yellow", ckpt, consumer_table=table)
+    assert consumer_months() == [4, 4]
+    assert len(qlog.read_text().splitlines()) == 1
+
+    # run 3: a healthy June is appended, and only June
+    _write(_yellow(6), landing_key(landing, "yellow", 2023, 6))
+    incremental_process(spark, cfg, "yellow", ckpt, consumer_table=table)
+    assert consumer_months() == [4, 4, 6, 6]
+    assert spark.read.parquet(cfg.dlq_dir).count() == 6
+
+
+def test_checkpoint_of_a_parquet_discovery_stream_resumes(spark, tmp_path):
+    """A checkpoint written by a discovery stream that read the landing
+    files as Parquet and projected to ``input_file_name()`` resumes under
+    the file-listing discovery: files it recorded are not served again."""
+    landing = tmp_path / "landing"
+    cfg = _cfg(tmp_path)
+    ckpt = str(tmp_path / "ckpt_yellow")
+    _write(_yellow(4), landing_key(landing, "yellow", 2023, 4))
+
+    q = (
+        spark.readStream.schema("VendorID long")
+        .option("recursiveFileLookup", "true")
+        .parquet(str(landing / "trip_type=yellow"))
+        .select(F.input_file_name().alias("path"))
+        .writeStream.foreachBatch(lambda df, batch_id: None)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+
+    _write(_yellow(5), landing_key(landing, "yellow", 2023, 5))
+    incremental_process(spark, cfg, "yellow", ckpt)
+    consumer = spark.read.parquet(cfg.consumer_dir).select("trip_month")
+    assert sorted(r.trip_month for r in consumer.collect()) == [5, 5]

@@ -83,33 +83,16 @@ def _run_snapshot_replace(spark, cfg: PipelineConfig):
     per fleet — the snapshot-committed equivalent of the reference's
     Delta partition-scoped overwrite (re-running a fleet replaces exactly
     that fleet's rows, atomically)."""
-    from nyc_taxi_data_pipeline_elt_spark.pipeline import read_landing_conformed
-    from pyspark.sql import functions as F
+    from nyc_taxi_data_pipeline_elt_spark.pipeline import (
+        landing_to_consumer,
+        read_landing_conformed,
+    )
 
     table = SnapshotTable(f"{cfg.consumer_dir}_replace_tbl")
     for _ in range(2):  # second pass proves replace idempotence
         for fleet in FLEETS:
             raw, _n = read_landing_conformed(spark, cfg.landing_dir, fleet)
-            unified = raw.withColumn(
-                "pickup_time",
-                F.coalesce("tpep_pickup_datetime", "lpep_pickup_datetime"),
-            ).withColumn(
-                "dropoff_time",
-                F.coalesce("tpep_dropoff_datetime", "lpep_dropoff_datetime"),
-            )
-            from nyc_taxi_data_pipeline_elt_spark.operators.quality import (
-                apply_quality,
-                trips_rules,
-            )
-            from nyc_taxi_data_pipeline_elt_spark.schemas import CONSUMER_COLUMNS
-
-            good, _bad = apply_quality(unified, trips_rules())
-            consumer = (
-                good.withColumn("trip_type", F.lit(fleet))
-                .withColumn("trip_year", F.year("pickup_time"))
-                .withColumn("trip_month", F.month("pickup_time"))
-                .select(*CONSUMER_COLUMNS)
-            )
+            consumer, _dlq = landing_to_consumer(raw, fleet)
             table.replace_where(spark, consumer, {"trip_type": [fleet]})
     return table.read(spark)
 
