@@ -8,10 +8,11 @@ Why this exists: the reference leans on Delta for exactly one capability
 and compacting a plain directory by swapping it for a rewritten copy
 leaves a window where readers can observe the path mid-swap. The
 fix, as in Iceberg/Delta, is to stop treating the directory listing as
-the table: the table IS a manifest (an explicit file list) plus an
-atomically-swapped pointer to the current manifest. Readers resolve the
-pointer once and then read an immutable file set — a writer can commit,
-compact, or vacuum underneath them without ever producing a torn read.
+the table: the table IS a log of manifests (explicit file lists), and a
+version exists once its complete manifest is published. Readers resolve
+a version once and then read an immutable file set — a writer can
+commit, compact, or vacuum underneath them without ever producing a
+torn read.
 
 Layout::
 
@@ -20,26 +21,35 @@ Layout::
       _manifests/v{N:08d}.json            -- snapshot N: v0 inline, then
                                              add/remove DELTAS (Delta log)
       _manifests/c{N:08d}.json            -- periodic full checkpoints
-      _manifests/_current                 -- pointer file: just "N"
+      _manifests/_current                 -- hint: a recent version "N"
 
 Concurrency and atomicity, all via POSIX/object-store primitives:
 
-- **Commit** = write manifest ``v{N+1}`` with ``open(..., 'x')``
-  (fails if another writer took N+1 — optimistic concurrency, the
-  Iceberg model), then ``os.replace`` the pointer (atomic).
+- **Commit** = write the whole manifest to a temp name, then publish it
+  as ``v{N+1}`` with ``os.link`` — atomic put-if-absent, which fails if
+  another writer took N+1 (optimistic concurrency, Delta's log rule).
+- **Current version** = the highest published manifest. ``_current`` is
+  an untrusted hint (like Delta's ``_last_checkpoint``): resolution
+  probes forward from it, and lists the log when it is missing or its
+  version was vacuumed.
 - **Snapshot isolation**: data files are immutable and manifests never
   mutate; any resolved snapshot stays readable until vacuumed.
-- **Crash safety**: a crash before the pointer swap leaves an orphan
-  manifest/data files — invisible to readers, reclaimed by vacuum.
+- **Crash safety**: a crash before the publish leaves only a temp
+  manifest and unreferenced data files — invisible to readers, reclaimed
+  by vacuum. A crash after it leaves a committed version; the hint and
+  checkpoint written after the publish are derived data. A manifest in
+  the log is committed whatever the hint says, including one written
+  above ``_current`` by the older pointer-swap protocol; a torn one (only
+  that protocol could leave it) fails reads loudly, naming its file.
 - **Exactly-once streaming**: ``commit_batch(df, batch_id)`` records the
   batch id in the manifest and no-ops on replay, making ``foreachBatch``
   retries idempotent (the reconciliation ADVICE.md asked of
   ``streaming/incremental.py``, solved structurally).
 
 At 100 TB the design carries over unchanged: manifests list files (no
-directory listing on the read path — one pointer read + at most
+directory listing on the read path — one hint read + at most
 ``checkpoint_every`` manifest reads instead of a million-object LIST),
-pointer swap maps to a conditional PUT / metastore CAS, and compaction
+the link publish maps to a conditional PUT (If-None-Match), and compaction
 is a background rewrite that commits a new manifest without touching
 readers. Metadata cost is Delta-shaped end to end: a commit WRITES
 O(changed files) (delta manifests + amortized checkpoints), per-file
@@ -509,19 +519,43 @@ class SnapshotTable:
     checkpoint_every = 16
 
     # ---------------- metadata plumbing ----------------
-    def _pointer(self) -> Path:
+    def _hint(self) -> Path:
         return self.manifest_dir / "_current"
 
+    def _manifest_path(self, v: int) -> Path:
+        return self.manifest_dir / f"v{v:08d}.json"
+
     def current_version(self) -> int | None:
+        """The highest published version: start at the ``_current``
+        hint, then probe forward until a version is missing. A missing
+        hint, or one whose manifest a vacuum deleted, falls back to one
+        listing of the log."""
         try:
-            return int(self._pointer().read_text().strip())
+            v = int(self._hint().read_text().strip())
         except (FileNotFoundError, ValueError):
-            return None
+            v = None
+        if v is None or not self._manifest_path(v).exists():
+            listed = self._versions()
+            if not listed:
+                return None
+            v = listed[-1]
+        while self._manifest_path(v + 1).exists():
+            v += 1
+        return v
 
     def _raw_manifest(self, v: int) -> dict:
-        raw = json.loads(
-            (self.manifest_dir / f"v{v:08d}.json").read_text()
-        )
+        path = self._manifest_path(v)
+        try:
+            raw = json.loads(path.read_text())
+        except ValueError as exc:
+            # publishing is put-if-absent of a complete file, so only a
+            # writer of the older pointer-swap protocol, killed mid-write,
+            # can have left this
+            raise ValueError(
+                f"{self.root}: manifest v{v} ({path}) is not valid JSON — "
+                "torn by a writer that died mid-write; restore or remove "
+                "that file"
+            ) from exc
         # the single manifest-load choke point is where the reader
         # feature gate lives: EVERY consumer (snapshot resolution, CDF
         # replay, vacuum — which deletes files and must not run against
@@ -542,7 +576,7 @@ class SnapshotTable:
         return self.manifest_dir / f"c{v:08d}.json"
 
     def _write_checkpoint(self, v: int, files: list, stats: dict) -> None:
-        """Atomic checkpoint write (tmp + rename, like the pointer swap):
+        """Atomic checkpoint write (tmp + rename, like the hint):
         a torn half-written checkpoint must be impossible — resolution
         and vacuum treat an existing checkpoint as authoritative (review
         r8: a kill mid-json.dump would otherwise poison snapshot
@@ -1033,6 +1067,12 @@ class SnapshotTable:
             files, stats = self._materialize(v, raw)
         return _make_snapshot(raw, files, stats)
 
+    def _versions(self) -> list[int]:
+        """Every published version in the log, ascending."""
+        return sorted(
+            int(p.stem[1:]) for p in self.manifest_dir.glob("v*.json")
+        )
+
     def history(self) -> list[Snapshot]:
         """All resolvable snapshots, oldest first. Materializes delta
         manifests INCREMENTALLY along the walk (one pass over the log,
@@ -1042,21 +1082,7 @@ class SnapshotTable:
         out: list[Snapshot] = []
         files: set | None = None
         stats: dict = {}
-        cur = self.current_version()
-        if cur is None:
-            return []
-        for p in sorted(self.manifest_dir.glob("v*.json")):
-            v = int(p.stem[1:])
-            # bound by the pointer (review r8, same scenario as
-            # snapshot_at_timestamp): a manifest whose writer crashed
-            # before the pointer swap was never committed — treating it
-            # as history would let vacuum adopt the ORPHAN as the kept
-            # version and delete the real current version's data. The
-            # orphan manifest itself is left in place: it is the
-            # crashed writer's conflict tombstone for that version slot
-            # (deleting it mid-commit would break a live writer's swap).
-            if v > cur:
-                continue
+        for v in self._versions():
             raw = self._raw_manifest(v)
             if "files" in raw:
                 files = set(raw["files"])
@@ -1102,9 +1128,14 @@ class SnapshotTable:
         read here instead let a commit that landed between the caller's
         read and this write be silently ERASED — our delta would record
         the racer's files as removed, with no conflict raised). With the
-        version pinned to the caller's basis, the O_EXCL manifest create
-        is the single source of conflict truth: any intervening commit
-        owns our target version and we raise :class:`CommitConflict`.
+        version pinned to the caller's basis, the publish is the single
+        source of conflict truth: the complete manifest is written to a
+        temp name and hard-linked to ``v{N}.json`` (atomic put-if-absent),
+        so an intervening commit owns our target version and we raise
+        :class:`CommitConflict`. Once published, the version is committed:
+        the checkpoint and ``_current`` hint written after it are derived
+        data, so their failures are logged, never raised (callers' failure
+        cleanup would delete files the live version references).
         ``extra`` merges op-specific payload fields into the manifest
         (e.g. ``delete``'s predicate, which the CDF reader replays).
         ``schema`` records the table schema in the manifest: the
@@ -1181,7 +1212,7 @@ class SnapshotTable:
                 )
         files_sorted = sorted(files)
         stats = stats or {}
-        manifest = self.manifest_dir / f"v{version:08d}.json"
+        manifest = self._manifest_path(version)
         payload = {
             "version": version,
             "op": op,
@@ -1301,43 +1332,32 @@ class SnapshotTable:
                 # undercounted to 0 whenever a fully-dead file left the
                 # map in the same commit that soft-deleted other rows)
                 payload["metrics"]["rows_soft_deleted"] = soft_deleted
+        tmp = self.manifest_dir / f"._v{version:08d}.{uuid.uuid4().hex}"
+        with open(tmp, "w") as f:
+            json.dump(payload, f)
         try:
-            # O_EXCL create: the optimistic-concurrency gate. Two racing
-            # writers both target version N+1; exactly one create wins.
-            with open(manifest, "x") as f:
-                json.dump(payload, f)
+            # the optimistic-concurrency gate: two racing writers both
+            # target version N+1; exactly one link wins
+            os.link(tmp, manifest)
         except FileExistsError as exc:
-            raise self._conflict_or_recover(version) from exc
+            raise CommitConflict(
+                f"{self.root}: snapshot v{version} already committed; "
+                "re-read the table and retry"
+            ) from exc
+        finally:
+            tmp.unlink(missing_ok=True)
         if psnap is not None and version % self.checkpoint_every == 0:
-            # checkpoint AFTER the manifest wins the race: derived data,
-            # safe to lose (resolution falls back to the chain walk)
-            self._write_checkpoint(version, files_sorted, stats)
-        self._swap_pointer(version)
+            self._after_publish(
+                version,
+                "checkpoint",
+                lambda: self._write_checkpoint(version, files_sorted, stats),
+            )
+        self._after_publish(version, "hint", lambda: self._write_hint(version))
         for attempt in range(3):
             try:
                 return self.snapshot(version)
-            except FileNotFoundError as exc:
-                cur_now = self.current_version()
-                if not manifest.exists() and (
-                    cur_now is None or cur_now < version
-                ):
-                    # ADVICE r9: a recoverer quarantined OUR manifest
-                    # while we were paused between the O_EXCL create
-                    # and the pointer swap (it looked like a crashed
-                    # orphan past the grace period). The swap above
-                    # skipped (manifest gone) — this commit did NOT
-                    # land. Surface it as CommitConflict so the
-                    # caller's existing retry/cleanup path fires
-                    # instead of an unhandled FileNotFoundError
-                    # stranding the written files.
-                    raise CommitConflict(
-                        f"{self.root}: this writer's v{version} "
-                        "manifest was quarantined by orphan recovery "
-                        "before its pointer swap (paused past the "
-                        "grace period); re-read and retry"
-                    ) from exc
-                # the commit LANDED (our manifest is present / the
-                # pointer reached it) — the resolution walk raced a
+            except FileNotFoundError:
+                # the commit LANDED — the resolution walk raced a
                 # concurrent vacuum re-homing ancestors onto a fresh
                 # checkpoint (checkpoint lands BEFORE old manifests
                 # unlink, so a retry resolves). Never report a landed
@@ -1348,151 +1368,23 @@ class SnapshotTable:
                     raise
                 time.sleep(0.05)
 
-    def _swap_pointer(self, version: int) -> None:
-        """Advance the pointer to ``version`` — atomic (os.replace =
-        rename(2)): readers see the old manifest or the new one, never a
-        partial state. Forward-only: when the pointer already reads at
-        or past ``version`` (orphan recovery completed this commit on
-        our behalf while we were paused between the manifest create and
-        this swap), the swap is skipped — replacing would roll the table
-        BACK over commits that built on ours. The read-then-replace pair
-        is not atomic, but the race window is microseconds (vs the
-        recovery grace period); on a real object store this maps to a
-        conditional PUT / CAS on the pointer object."""
-        cur = self.current_version()
-        if cur is not None and cur >= version:
-            return
-        if not (self.manifest_dir / f"v{version:08d}.json").exists():
-            # our manifest was quarantined under us (review r9: a writer
-            # paused past the grace period mid-json.dump whose torn
-            # manifest a recoverer quarantined can RESUME the dump into
-            # the renamed inode and reach this swap — pointing the table
-            # at a path that no longer exists would brick every read).
-            # Narrows the race to the exists-then-swap microseconds.
-            return
+    def _after_publish(self, version: int, what: str, write) -> None:
+        """Run a derived write after ``version`` is published; a failure
+        is logged, never raised (see :meth:`_commit`)."""
+        try:
+            write()
+        except Exception:
+            _log.warning(
+                "%s: v%d committed, but its %s write failed",
+                self.root, version, what, exc_info=True,
+            )
+
+    def _write_hint(self, version: int) -> None:
+        """Best-effort ``_current`` hint (tmp + rename). Untrusted, so it
+        needs no forward-only check: resolution probes past it."""
         tmp = self.manifest_dir / f"._current.{uuid.uuid4().hex}"
         tmp.write_text(str(version))
-        os.replace(tmp, self._pointer())
-
-    #: A manifest holding slot N+1 whose pointer swap never happened is
-    #: either a LIVE writer mid-commit or a CRASHED one. Younger than
-    #: this many seconds: assume live and just report the conflict.
-    #: Older: assume crashed and recover the slot (ADVICE r8 — without
-    #: recovery the orphan owns the slot forever and every later commit
-    #: fails, a write-only-bricked table).
-    orphan_grace_seconds = 300.0
-
-    def _conflict_or_recover(self, version: int) -> CommitConflict:
-        """Build the :class:`CommitConflict` for losing slot ``version``
-        — and, when the winning manifest is an ORPHAN (pointer swap
-        never happened) past the grace period, recover it first so the
-        caller's retry loop can make progress instead of failing on the
-        same slot forever:
-
-        - valid orphan manifest -> COMPLETE the crashed commit (swap the
-          pointer; the data files it references were written before the
-          manifest, so the snapshot is whole);
-        - torn/unparseable orphan (writer died mid-``json.dump``) ->
-          QUARANTINE it (rename to ``_quarantine/``) — it can never be
-          completed, and freeing the slot lets the next attempt win it.
-
-        Either way the caller still sees CommitConflict for THIS
-        attempt: recovery changes table state, so the caller must
-        re-read and re-base exactly as for a real lost race. A live
-        writer paused past the grace period between its manifest create
-        and pointer swap is indistinguishable from a crash — recovery
-        may complete (or, torn, quarantine) its commit under it; its own
-        swap is then a no-op (:meth:`_swap_pointer` is forward-only).
-        This is the same non-atomic-store tradeoff Delta accepts:
-        correctness of the LOG is preserved, only the loser's return
-        path is surprised."""
-        cur = self.current_version()
-        if cur is not None and cur >= version:
-            return CommitConflict(
-                f"{self.root}: snapshot v{version} already committed; "
-                "re-read the table and retry"
-            )
-        manifest = self.manifest_dir / f"v{version:08d}.json"
-        try:
-            raw = json.loads(manifest.read_text())
-            if raw.get("version") != version:
-                raise json.JSONDecodeError("version mismatch", "", 0)
-            torn = False
-        except FileNotFoundError:
-            # the racer finished create+swap+? between our create attempt
-            # and the reads above, or vanished — plain conflict
-            return CommitConflict(
-                f"{self.root}: snapshot v{version} already committed; "
-                "re-read the table and retry"
-            )
-        except (json.JSONDecodeError, UnicodeDecodeError):
-            raw, torn = None, True
-        if not torn:
-            age = time.time() - float(raw.get("ts", 0.0))
-        if not torn and age <= self.orphan_grace_seconds:
-            return CommitConflict(
-                f"{self.root}: snapshot v{version} is held by another "
-                "writer (manifest created, pointer not yet swapped); "
-                "re-read and retry — if this persists past "
-                f"{self.orphan_grace_seconds:.0f}s the writer crashed "
-                "and the next commit attempt will recover the slot"
-            )
-        if torn:
-            if self._manifest_age(manifest) <= self.orphan_grace_seconds:
-                return CommitConflict(
-                    f"{self.root}: snapshot v{version} is mid-write by "
-                    "another writer; re-read and retry"
-                )
-            self._quarantine_manifest(manifest)
-            return CommitConflict(
-                f"{self.root}: quarantined a torn orphan manifest at "
-                f"v{version}; retry to take the freed slot"
-            )
-        # Valid + past grace: complete the crashed writer's commit —
-        # but only if its snapshot still RESOLVES and its data files
-        # survived. Vacuum is pointer-bounded, so an orphan's files are
-        # never in the live set: a vacuum run between the crash and this
-        # recovery reclaimed them, and completing would make the table
-        # current on missing files (review r9). Recovery is an
-        # exceptional path, so the O(files) existence sweep is
-        # acceptable; an unrecoverable orphan takes the same quarantine
-        # exit as a torn one, freeing the slot.
-        try:
-            snap = self.snapshot(version)
-            intact = all((self.root / f).exists() for f in snap.files)
-        except Exception:
-            intact = False  # ancestors vacuumed away: chain unresolvable
-        if not intact:
-            self._quarantine_manifest(manifest)
-            return CommitConflict(
-                f"{self.root}: quarantined an orphan manifest at "
-                f"v{version} whose snapshot no longer resolves (data "
-                "or ancestors vacuumed); retry to take the freed slot"
-            )
-        self._swap_pointer(version)
-        return CommitConflict(
-            f"{self.root}: completed a crashed writer's commit at "
-            f"v{version}; re-read the table and retry"
-        )
-
-    def _quarantine_manifest(self, manifest: Path) -> None:
-        """Move an unrecoverable orphan manifest out of the log dir
-        (atomic rename), freeing its version slot. Idempotent: a racing
-        recoverer winning the rename first is fine."""
-        qdir = self.manifest_dir / "_quarantine"
-        qdir.mkdir(exist_ok=True)
-        try:
-            os.replace(manifest, qdir / f"{manifest.name}.{uuid.uuid4().hex}")
-        except FileNotFoundError:
-            pass  # another recoverer got it first
-
-    @staticmethod
-    def _manifest_age(path: Path) -> float:
-        """Age of a torn manifest (no readable ts): fall back to mtime."""
-        try:
-            return time.time() - path.stat().st_mtime
-        except OSError:
-            return float("inf")
+        os.replace(tmp, self._hint())
 
     # ---------------- write path ----------------
     @staticmethod
@@ -2305,10 +2197,9 @@ class SnapshotTable:
                     raise
                 newcur = self.current_version()
                 if newcur is None or newcur == cur:
-                    # no version movement — either recovery just freed
-                    # our slot (torn-orphan quarantine: the retry will
-                    # win it) or a racer is mid-swap (the retry burns an
-                    # attempt; bounded by ``retries``)
+                    # no version movement seen (the winner's manifest
+                    # is published, so only a stale read gets here):
+                    # the retry burns an attempt, bounded by ``retries``
                     continue
                 newsnap = self.snapshot(newcur)
                 nf = set(newsnap.files)
@@ -4410,20 +4301,21 @@ class SnapshotTable:
         self,
         keep_versions: int = 1,
         spark: SparkSession | None = None,
-        grace_seconds: float | None = None,
+        grace_seconds: float = 300.0,
     ) -> list[str]:
-        """Delete data files referenced by no kept snapshot and manifests
-        older than the kept window. Run only when no reader holds a
+        """Delete data files referenced by no kept snapshot, manifests
+        older than the kept window, and temp files dead writers left in
+        ``_manifests/``. Run only when no reader holds a
         snapshot older than the window (retention contract, as in
         Delta/Iceberg VACUUM). With ``spark`` and more than
         ``vacuum_driver_max`` writer dirs, listing + deletion run as one
         Spark job — one task per uuid dir, the live set shipped once as
         a broadcast — and the driver only assembles the removed list.
 
-        ``grace_seconds`` (default :attr:`orphan_grace_seconds`) is the
-        in-flight-writer guard (ADVICE r9, Delta's retention-hours
-        posture): a writer uuid dir — data OR ``_change_data`` — whose
-        mtime is younger than the grace is SKIPPED even when no kept
+        ``grace_seconds`` is the in-flight-writer guard (ADVICE r9,
+        Delta's retention-hours posture): a writer uuid dir — data OR
+        ``_change_data`` — or a manifest temp file whose mtime is
+        younger than the grace is SKIPPED even when no kept
         manifest references it, because its writer may be between the
         file write and the manifest commit (the cdc dir of a
         ``merge(change_data=True)`` lands before the rebase-capable
@@ -4431,15 +4323,10 @@ class SnapshotTable:
         whose ``cdc_files`` point at nothing, permanently breaking that
         version's CDF). Pass ``0.0`` only when no writer can be
         in flight."""
-        grace = (
-            self.orphan_grace_seconds
-            if grace_seconds is None
-            else grace_seconds
-        )
 
         def _settled(d: Path) -> bool:
             try:
-                return time.time() - d.stat().st_mtime >= grace
+                return time.time() - d.stat().st_mtime >= grace_seconds
             except OSError:
                 return False  # vanished under us: another vacuum got it
 
@@ -4542,88 +4429,71 @@ class SnapshotTable:
                 oldest.version, list(oldest.files), dict(oldest.stats or {})
             )
         for s in hist[:-keep_versions]:
-            (self.manifest_dir / f"v{s.version:08d}.json").unlink(missing_ok=True)
+            self._manifest_path(s.version).unlink(missing_ok=True)
             self._checkpoint_path(s.version).unlink(missing_ok=True)
+        for tmp in self.manifest_dir.glob("._*"):
+            if _settled(tmp):
+                tmp.unlink(missing_ok=True)
         return removed
 
     # ---------------- read path ----------------
+    def _effective_timestamps(self) -> list[tuple[int, float]]:
+        """``(version, effective commit ts)`` for every published
+        version, ascending. Commit timestamps come from racing writers'
+        clocks, so raw ``ts`` values need not be monotonic across
+        versions (ADVICE r8: clock skew could resolve "newest v with ts
+        <= t" to a version committed AFTER one with a larger ts). Each
+        EFFECTIVE timestamp is therefore clamped to max(own ts, every
+        ancestor's) — Delta's timestamp adjustment — so a skewed commit
+        never time-travels to before its parent, and both timestamp APIs
+        agree about ordering. O(versions) manifest-header reads."""
+        versions = self._versions()
+        if not versions:
+            raise FileNotFoundError(f"{self.root}: no committed snapshot")
+        raw = (float(self._raw_manifest(v)["ts"]) for v in versions)
+        return list(zip(versions, itertools.accumulate(raw, max)))
+
     def first_version_at_or_after(self, ts: float) -> int:
         """Delta's stream ``startingTimestamp`` resolution: the EARLIEST
-        version whose EFFECTIVE commit timestamp is >= ``ts`` (unix
-        seconds). Effective = monotonized exactly like
-        :meth:`snapshot_at_timestamp` (clamped to the running ancestor
-        max), so clock-skewed commits resolve in version order and the
-        two timestamp APIs can never disagree about ordering. Raises
-        ``ValueError`` when ``ts`` is after the latest commit (Delta's
-        posture: a future start silently meaning "nothing, ever" hides
-        typos). O(versions) manifest-header reads."""
-        cur = self.current_version()
-        if cur is None:
-            raise FileNotFoundError(f"{self.root}: no committed snapshot")
-        eff = None
-        best = None
-        for p in sorted(self.manifest_dir.glob("v*.json")):
-            v = int(p.stem[1:])
-            if v > cur:
-                continue
-            raw_ts = float(self._raw_manifest(v)["ts"])
-            eff = raw_ts if eff is None else max(eff, raw_ts)
-            if best is None and eff >= ts:
-                best = v
-        if best is None:
-            raise ValueError(
-                f"{self.root}: startingTimestamp {ts} is after the "
-                f"latest commit (effective ts {eff}); pick a timestamp "
-                "at or before it, or startingVersion "
-                f"{cur + 1} for future commits only"
-            )
-        return best
+        version whose effective commit timestamp
+        (:meth:`_effective_timestamps`) is >= ``ts`` (unix seconds).
+        Raises ``ValueError`` when ``ts`` is after the latest commit
+        (Delta's posture: a future start silently meaning "nothing,
+        ever" hides typos)."""
+        walk = self._effective_timestamps()
+        for v, eff in walk:
+            if eff >= ts:
+                return v
+        last, eff = walk[-1]
+        raise ValueError(
+            f"{self.root}: startingTimestamp {ts} is after the "
+            f"latest commit (effective ts {eff}); pick a timestamp "
+            "at or before it, or startingVersion "
+            f"{last + 1} for future commits only"
+        )
 
     def snapshot_at_timestamp(self, ts: float) -> Snapshot:
-        """Delta ``TIMESTAMP AS OF``: the newest snapshot committed at or
-        before ``ts`` (unix seconds). Raises ``FileNotFoundError`` when
-        ``ts`` predates the table and ``ValueError`` when it is after
-        the latest commit (mirroring Delta's after-latest error — a
-        future timestamp silently resolving "latest" makes the read
-        non-reproducible as soon as anyone commits). O(versions)
-        manifest-header reads, no data touched.
-
-        Commit timestamps come from racing writers' clocks, so raw
-        ``ts`` values need not be monotonic across versions (ADVICE r8:
-        clock skew could resolve "newest v with ts <= t" to a version
-        committed AFTER one with a larger ts). Each manifest's EFFECTIVE
-        timestamp is therefore clamped to max(own ts, every ancestor's
-        effective ts) during the ascending scan — Delta's timestamp
-        adjustment — so a skewed commit never time-travels to before its
-        parent."""
-        cur = self.current_version()
-        if cur is None:
-            raise FileNotFoundError(f"{self.root}: no committed snapshot")
-        best = None
-        eff = None  # running max = the effective (monotonized) commit ts
-        for p in sorted(self.manifest_dir.glob("v*.json")):
-            v = int(p.stem[1:])
-            # bound by the pointer (review r8): a manifest that won the
-            # O_EXCL create but whose writer crashed before the pointer
-            # swap was never committed — version reads correctly hide
-            # it, and timestamp reads must too
-            if v > cur:
-                continue
-            raw_ts = float(self._raw_manifest(v)["ts"])
-            eff = raw_ts if eff is None else max(eff, raw_ts)
-            if eff <= ts:
-                best = v if best is None else max(best, v)
-        if best is None:
+        """Delta ``TIMESTAMP AS OF``: the newest snapshot whose effective
+        commit timestamp (:meth:`_effective_timestamps`) is at or before
+        ``ts`` (unix seconds). Raises ``FileNotFoundError`` when ``ts``
+        predates the table and ``ValueError`` when it is after the
+        latest commit (mirroring Delta's after-latest error — a future
+        timestamp silently resolving "latest" makes the read
+        non-reproducible as soon as anyone commits). No data touched."""
+        walk = self._effective_timestamps()
+        at_or_before = [v for v, eff in walk if eff <= ts]
+        if not at_or_before:
             raise FileNotFoundError(
                 f"{self.root}: no snapshot committed at or before {ts}"
             )
+        eff = walk[-1][1]
         if ts > eff:
             raise ValueError(
                 f"{self.root}: timestamp {ts} is after the latest commit "
                 f"({eff}); use read()/snapshot() without a timestamp for "
                 "the current version"
             )
-        return self.snapshot(best)
+        return self.snapshot(at_or_before[-1])
 
     def detail(self) -> dict:
         """Delta ``DESCRIBE DETAIL``, from manifest metadata alone (no
@@ -4716,7 +4586,7 @@ class SnapshotTable:
         """Incremental consumer over this table: feed every not-yet-seen
         version's delta to ``handle(df, until_version)``, then advance an
         atomically-swapped checkpoint file — the downstream half of the
-        change-data-feed story (a consumer re-run costs one pointer read
+        change-data-feed story (a consumer re-run costs one version resolution
         when nothing changed). Delivery is at-least-once across crashes
         (handle ran, checkpoint not yet written); pass the supplied
         version as a batch id into an idempotent sink — e.g.

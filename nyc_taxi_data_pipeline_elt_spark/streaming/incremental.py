@@ -40,6 +40,7 @@ from pyspark.sql import functions as F
 
 from nyc_taxi_data_pipeline_elt_spark.pipeline import (
     PipelineConfig,
+    _visible,
     landing_to_consumer,
     read_landing_files,
 )
@@ -95,10 +96,21 @@ def incremental_process(
     if not base.exists():
         return
 
+    root = base.resolve()
+
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
         # the discovery stream's paths are file: URIs
-        files = sorted(
+        found = (
             Path(unquote(urlparse(r.path).path)) for r in batch_df.collect()
+        )
+        # keep what the batch run reads: visible files directly inside a
+        # visible ``partition_date=`` batch directory of ``base``
+        files = sorted(
+            f
+            for f in found
+            if f.parent.parent.resolve() == root
+            and _visible(f.parent)
+            and _visible(f)
         )
         raw, _n_quarantined = read_landing_files(spark, files)
         if raw is None:

@@ -163,3 +163,27 @@ def test_checkpoint_of_a_parquet_discovery_stream_resumes(spark, tmp_path):
     incremental_process(spark, cfg, "yellow", ckpt)
     consumer = spark.read.parquet(cfg.consumer_dir).select("trip_month")
     assert sorted(r.trip_month for r in consumer.collect()) == [5, 5]
+
+
+def test_incremental_reads_the_batch_runs_files_only(spark, tmp_path):
+    """The incremental run consumes exactly the landing files the batch
+    run reads: a Parquet file placed directly under ``trip_type=<fleet>/``
+    (not inside a ``partition_date=`` batch) is ignored by both."""
+    from nyc_taxi_data_pipeline_elt_spark.pipeline import process_trips
+
+    landing = tmp_path / "landing"
+    _write(_yellow(4), landing_key(landing, "yellow", 2023, 4))
+    _write(_yellow(5), landing / "trip_type=yellow" / "stray.parquet")
+
+    def months(cfg) -> list[int]:
+        df = spark.read.parquet(cfg.consumer_dir).select("trip_month")
+        return sorted(r.trip_month for r in df.collect())
+
+    batch = _cfg(tmp_path / "batch")
+    batch.landing_dir = str(landing)
+    process_trips(spark, batch, "yellow")
+    incremental = _cfg(tmp_path / "incremental")
+    incremental.landing_dir = str(landing)
+    incremental_process(spark, incremental, "yellow", str(tmp_path / "ckpt"))
+    assert months(batch) == months(incremental) == [4, 4]
+    assert not (landing / "_quarantine.jsonl").exists()

@@ -70,23 +70,25 @@ def test_commit_batch_is_idempotent_on_replay(spark, table):
     assert table.read(spark).count() == 10
 
 
-def test_concurrent_commit_conflict(spark, table):
-    """A racing writer's manifest owns the slot. With retries=0 the
-    conflict surfaces (strict first-writer-wins); recovery (r9) also
-    COMPLETES the abandoned-but-valid manifest (ts far past the grace
-    period -> the writer is presumed crashed), so the table keeps
-    making progress instead of bricking on the orphaned slot."""
+def test_concurrent_commit_conflict(spark, table, monkeypatch):
+    """A racing writer's published manifest owns the slot. A writer
+    whose basis is stale loses it: with retries=0 the conflict surfaces
+    (strict first-writer-wins), and the racer's commit — current the
+    moment it is in the log, whatever the ``_current`` hint says — is
+    what the next append builds on."""
     table.append(_df(spark, 0, 5))
-    # simulate a racing writer that crashed after taking version 1
-    # (manifest created, pointer never swapped; ts=0.0 = long dead)
+    # a racing writer takes version 1 (its hint write never happened)
     (table.manifest_dir / "v00000001.json").write_text(json.dumps({
         "version": 1, "files": [], "op": "append", "parent": 0, "ts": 0.0,
     }))
+    real = SnapshotTable.current_version
+    monkeypatch.setattr(SnapshotTable, "current_version", lambda self: 0)
     with pytest.raises(CommitConflict):
         table.append(_df(spark, 5, 10), retries=0)
-    # recovery completed the crashed commit: its snapshot (an inline
-    # manifest declaring files=[], i.e. an overwrite-to-empty) is now
-    # current, and the next append rebases on top of it
+    monkeypatch.setattr(SnapshotTable, "current_version", real)
+    # the racer's snapshot (an inline manifest declaring files=[], i.e.
+    # an overwrite-to-empty) is current, and the next append rebases on
+    # top of it
     assert table.current_version() == 1
     snap = table.append(_df(spark, 5, 10))
     assert snap.version == 2
@@ -927,7 +929,7 @@ def test_append_rebases_after_conflict(spark, table, monkeypatch):
 
     The stale read is injected into the retry LOOP's basis read (calls
     1-2: _write_data enforcement, then the loop), so attempt 0 commits
-    against expected_parent=0, hits the O_EXCL conflict on the racer's
+    against expected_parent=0, hits the publish conflict on the racer's
     v1 manifest, and MUST retry — and the racer's rows must survive
     (the lost-update regression the r8 review caught: before
     expected_parent, the stale-based commit silently erased them)."""
@@ -947,11 +949,11 @@ def test_append_rebases_after_conflict(spark, table, monkeypatch):
     assert snap.version == 2
     got = sorted(r.id for r in table.read(spark).collect())
     assert got == [0, 1, 2, 3, 4, 100, 101, 102, 200, 201]
-    # strict mode still raises on a stale-manifest conflict
+    # strict mode still raises on a stale-basis conflict
     (table.manifest_dir / "v00000003.json").write_text(json.dumps({
         "version": 3, "files": [], "op": "append", "parent": 2, "ts": 0.0,
     }))
-    monkeypatch.setattr(SnapshotTable, "current_version", real)
+    monkeypatch.setattr(SnapshotTable, "current_version", lambda self: 2)
     with pytest.raises(CommitConflict):
         table.append(_df(spark, 300, 301), retries=0)
 
@@ -1019,26 +1021,6 @@ def test_stats_prover_exact_int64_boundaries(verdict):
     assert prove(f"v >= {two53}", st)
     assert prove(f"v <= {two53}", st)
     assert not prove(f"v = {two53 + 1}", st)
-
-
-def test_timestamp_travel_ignores_uncommitted_manifest(spark, table):
-    """Review r8: a manifest that won O_EXCL but whose writer crashed
-    before the pointer swap was never committed — timestamp reads must
-    hide it exactly like version reads do."""
-    import time as _t
-
-    table.append(_df(spark, 0, 5))                    # v0, committed
-    # crashed writer: manifest exists, pointer still points at v0
-    (table.manifest_dir / "v00000001.json").write_text(json.dumps({
-        "version": 1, "files": [], "op": "append", "parent": 0,
-        "ts": _t.time() + 10_000, "add": [], "remove": [], "stats_add": {},
-    }))
-    # exactly v0's commit ts resolves v0 — the orphan's (future) ts was
-    # not adopted; and the orphan must not count as "the latest commit"
-    # for the after-latest error either
-    assert table.snapshot_at_timestamp(table.snapshot(0).ts).version == 0
-    with pytest.raises(ValueError, match="after the latest commit"):
-        table.snapshot_at_timestamp(_t.time() + 20_000)
 
 
 def test_torn_checkpoint_falls_back_to_chain_walk(spark, table):
@@ -1119,26 +1101,6 @@ def test_distributed_vacuum_parity(spark, table):
         for p in table.data_dir.rglob("*.parquet")
     }
     assert on_disk == set(table.snapshot().files)
-
-
-def test_vacuum_ignores_uncommitted_orphan_manifest(spark, table):
-    """Review r8: a crashed writer's manifest (won O_EXCL, never swapped
-    the pointer) must not be adopted as the kept version — vacuum would
-    have deleted the real current version's data and bricked the
-    table."""
-    import time as _t
-
-    table.append(_df(spark, 0, 5))                    # v0, committed
-    (table.manifest_dir / "v00000001.json").write_text(json.dumps({
-        "version": 1, "files": [], "op": "overwrite", "parent": 0,
-        "ts": _t.time(), "add": [], "remove": [], "stats_add": {},
-    }))
-    removed = table.vacuum(keep_versions=1, grace_seconds=0.0)
-    assert removed == []                              # v0's files live
-    assert table.read(spark).count() == 5             # table intact
-    assert [s.version for s in table.history()] == [0]
-    # the orphan stays as that slot's conflict tombstone
-    assert (table.manifest_dir / "v00000001.json").exists()
 
 
 def test_misshaped_checkpoint_falls_back(spark, table):
@@ -1573,38 +1535,6 @@ def test_delete_rebase_guard(spark, table, monkeypatch):
         table.delete(spark, "v >= 100")
 
 
-def test_torn_orphan_manifest_quarantined(spark, table, monkeypatch):
-    """A writer that died mid-json.dump leaves a torn manifest owning
-    the slot. Recovery quarantines it (it can never be completed) so the
-    next attempt wins the freed slot — the table is no longer
-    write-bricked (ADVICE r8)."""
-    table.append(_df(spark, 0, 5))                              # v0
-    (table.manifest_dir / "v00000001.json").write_text('{"version": 1, "fi')
-    monkeypatch.setattr(SnapshotTable, "orphan_grace_seconds", -1.0)
-    snap = table.append(_df(spark, 5, 10))
-    assert snap.version == 1, "freed slot must be retaken"
-    assert table.read(spark).count() == 10
-    q = list((table.manifest_dir / "_quarantine").iterdir())
-    assert len(q) == 1 and q[0].name.startswith("v00000001")
-
-
-def test_live_writer_slot_not_recovered(spark, table):
-    """A manifest younger than the grace period is presumed a LIVE
-    writer mid-commit: no recovery, conflict message says so, table
-    state untouched."""
-    import time as _t
-
-    table.append(_df(spark, 0, 5))                              # v0
-    (table.manifest_dir / "v00000001.json").write_text(json.dumps({
-        "version": 1, "files": [], "op": "append", "parent": 0,
-        "ts": _t.time(),
-    }))
-    with pytest.raises(CommitConflict, match="held by another writer"):
-        table.append(_df(spark, 5, 10))
-    assert table.current_version() == 0
-    assert (table.manifest_dir / "v00000001.json").exists()
-
-
 def test_threaded_appends_with_concurrent_compaction(spark, table):
     """Stress the reconciliation end to end (VERDICT r8 task #3 'done'
     bar): N appender threads (idempotent commit_batch, unique batch ids)
@@ -1824,34 +1754,6 @@ def test_cdf_replay_on_evolved_table(spark, table):
         (1, None, "delete"),
         (2, "x2", "delete"),
     }
-
-
-def test_vacuumed_orphan_quarantined_not_completed(spark, table, monkeypatch):
-    """Review r9: vacuum is pointer-bounded, so a crashed writer's
-    orphan data files are never in the live set — a vacuum between the
-    crash and recovery reclaims them, and COMPLETING the orphan then
-    would point the table at missing files. Recovery must quarantine
-    such an orphan instead, and the table keeps working."""
-    table.append(_df(spark, 0, 5))                              # v0
-    # crashed writer: wrote data, created manifest v1, never swapped
-    racer = SnapshotTable(str(table.root))
-    real_swap = SnapshotTable._swap_pointer
-    monkeypatch.setattr(SnapshotTable, "_swap_pointer", lambda self, v: None)
-    try:
-        racer.append(_df(spark, 100, 105), retries=0)
-    except Exception:
-        pass
-    monkeypatch.setattr(SnapshotTable, "_swap_pointer", real_swap)
-    assert (table.manifest_dir / "v00000001.json").exists()
-    assert table.current_version() == 0
-    removed = table.vacuum(keep_versions=1, grace_seconds=0.0)  # reclaims the orphan's files
-    assert removed, "orphan data should have been vacuumed"
-    monkeypatch.setattr(SnapshotTable, "orphan_grace_seconds", -1.0)
-    snap = table.append(_df(spark, 5, 10))
-    assert snap.version == 1, "slot must be freed by quarantine"
-    assert sorted(r.id for r in table.read(spark).collect()) == list(range(10))
-    q = list((table.manifest_dir / "_quarantine").iterdir())
-    assert len(q) == 1
 
 
 def test_operation_metrics_recorded(spark, table):
@@ -2415,33 +2317,6 @@ def test_vacuum_grace_protects_inflight_writer_dirs(spark, table):
     removed = table.vacuum(keep_versions=1, grace_seconds=0.0)
     assert set(removed) == set(inflight_data + inflight_cdc)
     assert table.read(spark).count() == 1  # committed data untouched
-
-
-def test_commit_conflict_when_manifest_quarantined_under_writer(
-    spark, table, monkeypatch
-):
-    """ADVICE r9: a writer whose manifest was quarantined by orphan
-    recovery between its O_EXCL create and pointer swap must see
-    CommitConflict (firing append's retry/cleanup), not an unhandled
-    FileNotFoundError from snapshot()."""
-    table.append(_kv(spark, [(1, 10)]))                        # v0
-    real_swap = SnapshotTable.__dict__["_swap_pointer"]
-
-    def quarantine_then_swap(self, version):
-        m = self.manifest_dir / f"v{version:08d}.json"
-        if version == 1 and m.exists():
-            self._quarantine_manifest(m)  # recoverer got us mid-pause
-        real_swap(self, version)
-
-    monkeypatch.setattr(SnapshotTable, "_swap_pointer", quarantine_then_swap)
-    with pytest.raises(CommitConflict, match="quarantined"):
-        table._commit(list(table.snapshot().files), "append",
-                      expected_parent=0)
-    monkeypatch.setattr(SnapshotTable, "_swap_pointer", real_swap)
-    # the table is intact and writable afterwards
-    assert table.current_version() == 0
-    table.append(_kv(spark, [(2, 20)]))
-    assert table.read(spark).count() == 2
 
 
 def test_update_metadata_only_validates_set_on_legacy_table(spark, table):
