@@ -22,9 +22,10 @@ dml-gate:
 	  tests/test_snapshot_stream.py tests/test_log_planned_reads.py tests/test_partitioned_table.py \
 	  -q -p no:cacheprovider
 
-# The landing -> consumer gate on its own: the batch pipeline, the
-# incremental runner, and the parity suite over the batch, incremental
-# and snapshot-committed modes, which share one transform.
+# The landing -> consumer gate on its own: the batch pipeline (with its
+# job-free planning pins, the driver-side schema parity and the overlapped
+# write failures), the incremental runner, and the parity suite over the
+# batch, incremental and snapshot-committed modes, which share one transform.
 pipeline-gate:
 	python -m pytest tests/test_pipeline.py tests/test_pipeline_modes.py tests/test_incremental.py \
 	  -q -p no:cacheprovider

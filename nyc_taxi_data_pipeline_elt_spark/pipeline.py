@@ -21,7 +21,11 @@ The processing stage is the reference's landing->consumer transform
   (the README's own to-do), written alongside the consumer table
 - no log-only ``count()`` actions — the reference triggers 3 full
   recomputations per run (SURVEY.md §4 anti-patterns); here a stage's
-  only actions are its two writes
+  only actions are its two writes: the landing and consumer scans take
+  their schemas from footers read on the driver
+  (``sources.readers.parquet_schema``) and the empty-layer guard from
+  footer row counts, so planning starts no Spark job, and each stage's
+  two writes run overlapped (``_alongside``)
 
 The scan (``read_landing_files``) and the transform
 (``landing_to_consumer``) are shared with ``streaming.incremental``;
@@ -31,6 +35,7 @@ the batch and incremental runners differ only in their sinks.
 from __future__ import annotations
 
 import json
+from collections.abc import Callable
 from dataclasses import dataclass, field
 from functools import reduce
 from pathlib import Path
@@ -54,7 +59,7 @@ from nyc_taxi_data_pipeline_elt_spark.schemas import (
     Q2_SCHEMA,
 )
 from nyc_taxi_data_pipeline_elt_spark.session import tune
-from nyc_taxi_data_pipeline_elt_spark.sources.readers import read_layer
+from nyc_taxi_data_pipeline_elt_spark.sources.readers import parquet_schema, read_layer
 from nyc_taxi_data_pipeline_elt_spark.sources.writers import (
     write_empty_report,
     write_partitioned,
@@ -137,7 +142,8 @@ def read_landing_files(
     are unioned by name. Files in one group share a footer schema, so
     Spark infers the same type for each of them, and a type drift
     between months (int<->double, exactly README.md:146) only adds a
-    group.
+    group. Each group's schema is ``parquet_schema`` of its first file,
+    so planning starts no Spark job.
 
     A file's ``partition_date=`` batch directory is quarantined
     (file-level dead-letter) when one of its footers cannot be read or
@@ -158,8 +164,11 @@ def read_landing_files(
             groups.setdefault(key, []).append(f)
 
     def _scan(files: list[Path]) -> DataFrame:
+        # the group shares one footer schema: its first file's is the
+        # schema Spark would infer, read without a job
+        schema = parquet_schema(spark, str(files[0]))
         return conform_to_schema(
-            spark.read.parquet(*map(str, files)),
+            spark.read.schema(schema).parquet(*map(str, files)),
             RAW_UNIFIED_SCHEMA,
             renames=_RENAMES,
             narrow_ok=_NARROW_OK,
@@ -255,6 +264,32 @@ def landing_to_consumer(
     return consumer, dead_letters
 
 
+def _alongside(side: Callable[[], None], main: Callable[[], None]) -> None:
+    """Run ``side`` on an ``InheritableThread`` while ``main`` runs on the
+    calling thread, so two independent Spark writes overlap.
+
+    The side thread inherits the caller's job group. It is joined before
+    this returns or raises: an error from ``main`` propagates, otherwise
+    one from ``side`` is re-raised here.
+    """
+    box: dict = {}
+
+    def _side() -> None:
+        try:
+            side()
+        except BaseException as exc:  # re-raised on the calling thread
+            box["err"] = exc
+
+    thread = InheritableThread(target=_side, daemon=True)
+    thread.start()
+    try:
+        main()
+    finally:
+        thread.join()
+    if "err" in box:
+        raise box["err"]
+
+
 def process_trips(
     spark: SparkSession, cfg: PipelineConfig, trip_type: str
 ) -> dict[str, int] | None:
@@ -270,11 +305,11 @@ def process_trips(
     side effect of the single write action — zero extra scans.
 
     The dead-letter write runs on a side thread while the consumer write
-    runs here: the two writer jobs are independent and each has only a
-    few tasks, so they share the cores. The side thread inherits the
-    caller's job group. The two commits are not ordered; if either write
-    fails the stage fails, and a re-run repairs both tables because the
-    dynamic partition overwrite is idempotent.
+    runs here (``_alongside``): the two writer jobs are independent and
+    each has only a few tasks, so they share the cores. The two commits
+    are not ordered; if either write fails the stage fails, and a re-run
+    repairs both tables because the dynamic partition overwrite is
+    idempotent.
     """
     tune(spark)
     raw, n_quarantined = read_landing_conformed(spark, cfg.landing_dir, trip_type)
@@ -284,24 +319,12 @@ def process_trips(
 
     dlq_obs = Observation(f"dlq_{trip_type}")
     bad_out = dead_letters.observe(dlq_obs, F.count(F.lit(1)).alias("n_rows"))
-    dlq_box: dict = {}
-
-    def _dlq_write() -> None:
-        try:
-            write_partitioned(bad_out, cfg.dlq_dir, ["trip_type"])
-        except BaseException as exc:  # re-raised on the calling thread
-            dlq_box["err"] = exc
-
     consumer_obs = Observation(f"consumer_{trip_type}")
     consumer = consumer.observe(consumer_obs, F.count(F.lit(1)).alias("n_rows"))
-    dlq_thread = InheritableThread(target=_dlq_write, daemon=True)
-    dlq_thread.start()
-    try:
-        write_partitioned(consumer, cfg.consumer_dir, CONSUMER_PARTITION_KEYS)
-    finally:
-        dlq_thread.join()
-    if "err" in dlq_box:
-        raise dlq_box["err"]
+    _alongside(
+        lambda: write_partitioned(bad_out, cfg.dlq_dir, ["trip_type"]),
+        lambda: write_partitioned(consumer, cfg.consumer_dir, CONSUMER_PARTITION_KEYS),
+    )
     return {
         "rows_written": consumer_obs.get["n_rows"],
         "rows_dead_lettered": dlq_obs.get["n_rows"],
@@ -310,24 +333,34 @@ def process_trips(
 
 
 def build_reports(spark: SparkSession, cfg: PipelineConfig) -> None:
-    """Consumer -> reporting (EP3, reporting_etl_job.py)."""
+    """Consumer -> reporting (EP3, reporting_etl_job.py).
+
+    Both fleets' scans are planned without a job (``read_layer``). Q1 is
+    written on a side thread while Q2 is planned and written here
+    (``_alongside``): each report is a small aggregate, so the two writes
+    share the cores. A failed write fails the stage; a re-run overwrites
+    both reports.
+    """
     tune(spark)
     yellow = read_layer(spark, cfg.consumer_dir, trip_type="yellow")
     green = read_layer(spark, cfg.consumer_dir, trip_type="green")
 
-    q1 = q1_monthly_revenue(yellow)
-    q1_path = f"{cfg.reports_dir}/q1_monthly_revenue"
-    if q1 is None:
-        write_empty_report(spark, Q1_SCHEMA, q1_path)
-    else:
-        write_report(q1, q1_path)
+    def _write(report: DataFrame | None, schema: T.StructType, name: str) -> None:
+        path = f"{cfg.reports_dir}/{name}"
+        if report is None:
+            write_empty_report(spark, schema, path)
+        else:
+            write_report(report, path)
 
-    q2 = q2_hourly_passengers(yellow, green, month=cfg.q2_month)
-    q2_path = f"{cfg.reports_dir}/q2_hourly_passengers"
-    if q2 is None:
-        write_empty_report(spark, Q2_SCHEMA, q2_path)
-    else:
-        write_report(q2, q2_path)
+    q1 = q1_monthly_revenue(yellow)
+    _alongside(
+        lambda: _write(q1, Q1_SCHEMA, "q1_monthly_revenue"),
+        lambda: _write(
+            q2_hourly_passengers(yellow, green, month=cfg.q2_month),
+            Q2_SCHEMA,
+            "q2_hourly_passengers",
+        ),
+    )
 
 
 def run(spark: SparkSession, cfg: PipelineConfig) -> None:

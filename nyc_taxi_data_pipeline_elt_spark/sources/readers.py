@@ -6,16 +6,27 @@ The reference prunes partitions *by path surgery*
 (S3) is ``pipeline.read_landing_conformed``. Here pruning is expressed the idiomatic way — a filter on the partition
 column of a partitioned read — so Catalyst's PartitionPruning does it,
 and the same plan holds when the table is 100 TB across a million files.
+Scans of the pipeline's layers take their schema from one Parquet footer
+read on the driver (``parquet_schema``), so planning them starts no
+Spark job.
 """
 
 from __future__ import annotations
 
 import os
 import stat
+from pathlib import Path
 
+import pyarrow.parquet as pq
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, TimestampNTZType
+from pyspark.sql.types import (
+    LongType,
+    StructType,
+    TimestampNTZType,
+    _parse_datatype_json_string,
+)
 
 TESTDATA_TABLES = (
     "region",
@@ -31,6 +42,24 @@ TESTDATA_TABLES = (
 )
 
 
+def _listed(name: str) -> bool:
+    # the names Spark's file index keeps (InMemoryFileIndex.shouldFilterOutPathName)
+    hidden = (name.startswith("_") and "=" not in name) or name.startswith(".")
+    return not (hidden or name.endswith("._COPYING_"))
+
+
+def _data_files(root: Path) -> list[Path]:
+    """The data files Spark lists under ``root``, in the order its
+    Parquet inference takes them: by path."""
+    if root.is_file():
+        return [root]
+    found = []
+    for parent, dirs, files in os.walk(root):
+        dirs[:] = [d for d in dirs if _listed(d)]
+        found += [Path(parent, f) for f in files if _listed(f)]
+    return sorted(found, key=str)
+
+
 def _memo_key(path: str) -> tuple[str, int, int]:
     """(path, mtime_ns, size) of a fixture file. A directory fixture is
     keyed on its data files' newest mtime and total size: rewriting a
@@ -38,15 +67,7 @@ def _memo_key(path: str) -> tuple[str, int, int]:
     st = os.stat(path)
     if not stat.S_ISDIR(st.st_mode):
         return path, st.st_mtime_ns, st.st_size
-    parts = []
-    for root, dirs, files in os.walk(path):
-        # the names Spark's file index skips
-        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
-        parts += [
-            os.stat(os.path.join(root, f))
-            for f in files
-            if not f.startswith(("_", "."))
-        ]
+    parts = [os.stat(f) for f in _data_files(Path(path))]
     return (
         path,
         max((p.st_mtime_ns for p in parts), default=st.st_mtime_ns),
@@ -114,6 +135,41 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` infers for the Parquet
+    file ``path``, computed on the driver.
+
+    Spark's inference reads one footer inside a Spark job (~77 ms warm).
+    This runs Spark's own code for it, ``ParquetFileFormat.readSchema``
+    over ``readParquetFootersInParallel`` under the session's conf
+    (``nanosAsLong``, NTZ inference, binary-as-string), through py4j:
+    ~10 ms and no job. The result is nullable, as a relation's data
+    schema is. An unreadable footer raises a ``ValueError`` naming the
+    file.
+    """
+    jvm, jss = spark._jvm, spark._jsparkSession
+    conf = jss.sessionState().newHadoopConf()
+    jpath = jvm.org.apache.hadoop.fs.Path(path)
+    status = jpath.getFileSystem(conf).getFileStatus(jpath)
+    package = jvm.org.apache.spark.sql.execution.datasources.parquet
+    parquet = getattr(getattr(package, "ParquetFileFormat$"), "MODULE$")
+    try:
+        footers = parquet.readParquetFootersInParallel(
+            conf, jvm.PythonUtils.toSeq([status]), False
+        )
+    except Py4JJavaError as exc:
+        raise ValueError(f"unreadable Parquet footer: {path}") from exc
+    schema = parquet.readSchema(footers, jss).get().asNullable()
+    return _parse_datatype_json_string(schema.json())
+
+
+def _footer_rows(path: Path) -> int:
+    try:
+        return pq.read_metadata(path).num_rows
+    except (OSError, ValueError) as exc:  # ArrowIOError, ArrowInvalid
+        raise ValueError(f"unreadable Parquet footer: {path}") from exc
+
+
 def read_layer(
     spark: SparkSession, path: str, trip_type: str | None = None
 ) -> DataFrame | None:
@@ -125,16 +181,29 @@ def read_layer(
     (Delta jars are not in this environment; the reference uses no
     Delta feature beyond partitioned overwrite — SURVEY.md §7.5).
 
-    Uses ``isEmpty()`` (one-row probe) instead of the reference's full
-    ``count()`` action, which rescans the entire table just to log it.
+    Planned on the driver and starts no Spark job. The data schema is
+    ``parquet_schema`` of the file Spark's inference would read (the
+    layer's first data file by path); Spark's partition discovery adds
+    the partition columns. ``trip_type`` selects the layer's
+    ``trip_type=`` partition, and the guard reads the footer row counts
+    of that partition's files instead of running an ``isEmpty()`` probe.
+
+    Only a missing directory or a selection with no rows reads as
+    ``None``; an unreadable footer raises, naming the file.
     """
-    try:
-        df = spark.read.parquet(path)
-    except Exception:
+    root = Path(path)
+    files = _data_files(root)
+    if not files:
         return None
+    schema = parquet_schema(spark, str(files[0]))
+    df = spark.read.schema(schema).parquet(path)
     if trip_type is not None and "trip_type" in df.columns:
+        if "trip_type" in schema.fieldNames():
+            raise ValueError(f"{path} is not partitioned by trip_type")
         df = df.filter(F.col("trip_type") == trip_type)
-    if df.isEmpty():
+        part = f"trip_type={trip_type}"
+        files = [f for f in files if part in f.relative_to(root).parts]
+    if not any(_footer_rows(f) for f in files):
         return None
     return df
 

@@ -5,9 +5,11 @@ and empty inputs (reporting_etl_job.py:65-70)."""
 from __future__ import annotations
 
 import json
+import re
 import threading
 import uuid
 from datetime import datetime
+from pathlib import Path
 
 import pandas as pd
 import pyarrow as pa
@@ -23,7 +25,12 @@ from nyc_taxi_data_pipeline_elt_spark.pipeline import (
     run,
 )
 from nyc_taxi_data_pipeline_elt_spark.schemas import Q1_SCHEMA, Q2_SCHEMA
+from nyc_taxi_data_pipeline_elt_spark.session import tune
 from nyc_taxi_data_pipeline_elt_spark.sources.ingest import landing_key
+from nyc_taxi_data_pipeline_elt_spark.sources.readers import parquet_schema, read_layer
+
+# the Q1 and Q2 writes on the ``lake`` fixture; planning adds none
+BUILD_REPORTS_JOBS = 4
 
 
 def _write(df: pd.DataFrame, path) -> None:
@@ -199,25 +206,129 @@ def test_partition_scoped_rerun_preserves_siblings(spark, lake):
     }
 
 
-def test_footer_planned_read_runs_one_job_per_footer_schema(spark, lake):
-    """The drifted yellow fleet has two footer schemas (January's float64
-    passenger_count, April's and May's int64): the read runs exactly one
-    schema-inference job per schema and none of them fails."""
+def _jobs_started(spark, build):
+    """``build()``'s result and the Spark jobs it started, side threads
+    included (they inherit the job group)."""
     sc = spark.sparkContext
-    group = f"landing-read-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, "footer-planned landing read")
+    group = f"pipeline-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "pipeline job count")
     try:
-        raw, n_quarantined = read_landing_conformed(spark, lake.landing_dir, "yellow")
+        out = build()
     finally:
         sc._jsc.clearJobGroup()
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
-    jobs = [tracker.getJobInfo(i) for i in tracker.getJobIdsForGroup(group)]
-    assert len(jobs) == 2
-    assert all(j.status == "SUCCEEDED" for j in jobs)
+    return out, [tracker.getJobInfo(i) for i in tracker.getJobIdsForGroup(group)]
+
+
+def test_footer_planned_read_starts_no_job(spark, lake):
+    """The drifted yellow fleet has two footer schemas (January's float64
+    passenger_count, April's and May's int64): the read plans one scan
+    per schema from footers read on the driver and starts no Spark job."""
+    (raw, n_quarantined), jobs = _jobs_started(
+        spark, lambda: read_landing_conformed(spark, lake.landing_dir, "yellow")
+    )
+    assert jobs == []
     assert n_quarantined == 0
     assert raw.count() == 15
     assert dict(raw.dtypes)["passenger_count"] == "bigint"
+
+
+def _write_arrow(table):
+    return lambda path: pq.write_table(table, path)
+
+
+_MAY_1 = [datetime(2023, 5, 1, 6)]
+_SCHEMA_CASES = {
+    "int64": (_write_arrow(pa.table({"n": pa.array([1, 2], pa.int64())})), "n", "bigint"),
+    "float64_nulls_drift_month": (
+        lambda path: _write(_yellow(1, drift=True), Path(path)),
+        "passenger_count",
+        "double",
+    ),
+    "timestamp_us_ntz": (
+        _write_arrow(pa.table({"t": pa.array(_MAY_1, pa.timestamp("us"))})),
+        "t",
+        "timestamp_ntz",
+    ),
+    "timestamp_ns_as_long": (
+        _write_arrow(pa.table({"t": pa.array(_MAY_1, pa.timestamp("ns"))})),
+        "t",
+        "bigint",
+    ),
+}
+
+
+@pytest.mark.parametrize("case", [*_SCHEMA_CASES, "spark_consumer_dir"])
+def test_parquet_schema_matches_spark_inference(spark, lake, tmp_path, case):
+    """The driver-side schema equals what ``spark.read.parquet`` infers,
+    under the session's conf (``nanosAsLong`` for the ns case)."""
+    tune(spark)
+    if case == "spark_consumer_dir":
+        process_trips(spark, lake, "yellow")
+        process_trips(spark, lake, "green")
+        path = lake.consumer_dir
+        first = min(Path(path).rglob("*.parquet"), key=str)
+        got = spark.read.schema(parquet_schema(spark, str(first))).parquet(path).schema
+        column, want = "trip_month", "int"  # a partition column from discovery
+    else:
+        write, column, want = _SCHEMA_CASES[case]
+        path = str(tmp_path / f"{case}.parquet")
+        write(path)
+        got = parquet_schema(spark, path)
+    assert got == spark.read.parquet(path).schema
+    assert got[column].dataType.simpleString() == want
+
+
+def test_read_layer_starts_no_job(spark, lake):
+    """The consumer scan takes its schema from one footer and its empty
+    guard from footer row counts: no inference job, no isEmpty probe."""
+    process_trips(spark, lake, "yellow")
+    process_trips(spark, lake, "green")
+    frames, jobs = _jobs_started(
+        spark,
+        lambda: [read_layer(spark, lake.consumer_dir, t) for t in ("yellow", "green")],
+    )
+    assert jobs == []
+    assert [df.count() for df in frames] == [6, 2]
+
+
+def test_build_reports_job_count(spark, lake):
+    """Building both reports starts only the jobs of their two writes."""
+    process_trips(spark, lake, "yellow")
+    process_trips(spark, lake, "green")
+    _, jobs = _jobs_started(spark, lambda: build_reports(spark, lake))
+    assert len(jobs) == BUILD_REPORTS_JOBS
+    assert all(j.status == "SUCCEEDED" for j in jobs)
+
+
+def test_read_layer_none_only_for_missing_or_rowless(spark, lake, tmp_path):
+    """A missing layer and a fleet whose files hold no rows read as None;
+    an unreadable footer raises, naming the file, and fails the reports
+    stage instead of writing empty reports."""
+    assert read_layer(spark, str(tmp_path / "absent"), trip_type="yellow") is None
+    run(spark, lake)
+    consumer = Path(lake.consumer_dir)
+    # the file Spark's inference reads: the first green one
+    first = min(consumer.rglob("*.parquet"), key=str)
+    rowless = consumer / "trip_type=white" / "trip_year=2023" / "trip_month=5"
+    rowless.mkdir(parents=True)
+    pq.write_table(pq.read_table(first).slice(0, 0), rowless / "part-0.parquet")
+    assert read_layer(spark, lake.consumer_dir, trip_type="white") is None
+    assert read_layer(spark, lake.consumer_dir, trip_type="yellow").count() == 6
+
+    # a fleet's own file, read for the row-count guard
+    yellow_first = min((consumer / "trip_type=yellow").rglob("*.parquet"), key=str)
+    yellow_first.write_bytes(b"corrupted")
+    with pytest.raises(ValueError, match=re.escape(f"footer: {yellow_first}")):
+        read_layer(spark, lake.consumer_dir, trip_type="yellow")
+    assert read_layer(spark, lake.consumer_dir, trip_type="green").count() == 2
+
+    first.write_bytes(b"corrupted")
+    with pytest.raises(ValueError, match=re.escape(f"footer: {first}")):
+        read_layer(spark, lake.consumer_dir, trip_type="green")
+    with pytest.raises(ValueError, match=re.escape(f"footer: {first}")):
+        build_reports(spark, lake)
 
 
 def test_unreadable_batches_quarantined_in_fleet_without_drift(spark, tmp_path):
@@ -286,3 +397,40 @@ def test_failed_dlq_write_fails_stage_and_rerun_repairs(spark, lake, monkeypatch
     }
     assert spark.read.parquet(lake.consumer_dir).count() == 6
     assert spark.read.parquet(lake.dlq_dir).count() == 9
+
+
+def test_failed_q1_write_fails_stage_and_rerun_repairs(spark, lake, monkeypatch):
+    """The Q1 report write runs on a side thread: its failure must
+    surface on the calling thread after the thread ended, and a re-run
+    must restore both reports."""
+    run(spark, lake)
+    q1_path = f"{lake.reports_dir}/q1_monthly_revenue"
+    real_write = pipeline.write_report
+    side: dict = {}
+
+    def failing_write(df, path):
+        if path == q1_path:
+            side["thread"] = threading.current_thread()
+            raise OSError("report sink unavailable")
+        real_write(df, path)
+
+    monkeypatch.setattr(pipeline, "write_report", failing_write)
+    with pytest.raises(OSError, match="report sink unavailable"):
+        build_reports(spark, lake)
+    assert side["thread"] is not threading.main_thread()
+    assert not side["thread"].is_alive()
+
+    monkeypatch.setattr(pipeline, "write_report", real_write)
+    build_reports(spark, lake)
+    q1 = spark.read.parquet(q1_path)
+    assert {r.report_month: r.avg_total_amount for r in q1.collect()} == {
+        "2023-01": 15.0,
+        "2023-04": 15.0,
+        "2023-05": 15.0,
+    }
+    q2 = spark.read.parquet(f"{lake.reports_dir}/q2_hourly_passengers")
+    assert {r.report_hour: r.avg_passenger_count for r in q2.collect()} == {
+        6: 2.5,
+        7: 2.0,
+        18: 6.0,
+    }
