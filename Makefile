@@ -14,13 +14,13 @@ prover-gate:
 	python -m pytest tests/test_prover_properties.py tests/test_conjunctive_prover.py -q -p no:cacheprovider
 
 # The row-level DML gate on its own: the delete/update cell contract, the
-# snapshot table's DML/CDF tests, the commit protocol's crash points, the
-# change-feed stream tests, and the log-planned and partitioned-table
-# reads of the change feed.
+# snapshot table's DML/CDF tests, the merge clause matrix, the commit
+# protocol's crash points, the change-feed stream tests, and the
+# log-planned and partitioned-table reads of the change feed.
 dml-gate:
-	python -m pytest tests/test_row_dml.py tests/test_snapshots.py tests/test_commit_protocol.py \
-	  tests/test_snapshot_stream.py tests/test_log_planned_reads.py tests/test_partitioned_table.py \
-	  -q -p no:cacheprovider
+	python -m pytest tests/test_row_dml.py tests/test_snapshots.py tests/test_merge_matrix.py \
+	  tests/test_commit_protocol.py tests/test_snapshot_stream.py tests/test_log_planned_reads.py \
+	  tests/test_partitioned_table.py -q -p no:cacheprovider
 
 # The landing -> consumer gate on its own: the batch pipeline (with its
 # job-free planning pins, the driver-side schema parity and the overlapped

@@ -80,6 +80,7 @@ from pyspark.sql.functions import expr as F_expr
 from pyspark.sql.functions import lit as F_lit
 from pyspark.sql.functions import max as F_max
 from pyspark.sql.functions import min as F_min
+from pyspark.sql.functions import sum as F_sum
 from pyspark.sql.functions import when as F_when
 
 from nyc_taxi_data_pipeline_elt_spark.sources import change_plan as _plan
@@ -1665,15 +1666,15 @@ class SnapshotTable:
         self,
         data: DataFrame | None,
         changes: DataFrame | None,
-        warm: list,
+        warm: DataFrame | None,
         enforced: dict,
     ) -> tuple[list[str], dict, list[str]]:
         """Write a rewrite's data rows (``data``, CHECK-enforced into
         ``enforced``) and its change-data rows (``changes``, when given)
         as two overlapping writer jobs: the change-data write runs on an
         ``InheritableThread`` (its jobs keep the caller's job group), the
-        data write on the caller. The persisted frames both writes read
-        (``warm``) are materialized first — r13's parallel-CDC revert
+        data write on the caller. The persisted frame both writes read
+        (``warm``) is materialized first — r13's parallel-CDC revert
         traced its loss to the two jobs racing first evaluation of a
         shared cache (cache-lock serialization), which a materialized
         cache cannot exhibit.
@@ -1690,8 +1691,8 @@ class SnapshotTable:
                     data, enforced_out=enforced
                 )
             return fresh, fresh_stats, []
-        for df in warm:
-            df.count()
+        if warm is not None:
+            warm.count()
         box: dict = {}
 
         def _cdc_write() -> None:
@@ -2578,10 +2579,12 @@ class SnapshotTable:
         condition") unless it is deterministic across queries. Delta
         parity (review r12): MERGE clause conditions, and a
         copy-on-write update's predicate and SET expressions, are
-        evaluated by more than one query per commit (keep side and
-        incoming-keys side, rewrite and change-data write, the CDF
-        re-derive), so a non-deterministic expression could commit a
-        table that disagrees with itself and its change feed. ``remedy``
+        evaluated by more than one query per commit (the data write and
+        the change-data write each evaluate them, and a persisted
+        relation evicted under memory pressure is recomputed; the CDF
+        re-derives an update without change data), so a
+        non-deterministic expression could commit a table that
+        disagrees with itself and its change feed. ``remedy``
         is appended to the error.
 
         Checked on the analyzed EXPRESSION only — the root Project's
@@ -2716,10 +2719,18 @@ class SnapshotTable:
         a CDC batch touching one day's keys rewrites that day's files
         only. The source-side key range is one tiny aggregate over the
         (small, by CDC construction) batch — O(#key_cols) driver scalars;
-        matching is a distributed anti/semi join on the touched files
-        only, which is complete because pruned files provably hold no
-        matching key. Rows with NULL keys never equal any source key and
-        flow through the anti-join untouched (SQL MERGE semantics).
+        matching is one distributed left-outer join of the touched files
+        with the source, which is complete because pruned files provably
+        hold no matching key. Rows with NULL keys never equal any source
+        key and stay unmatched (SQL MERGE semantics).
+
+        Every clause combination runs the same plan; the clauses only
+        change its expressions. The join marks each target row matched
+        (and passing the matched condition); one CASE projection gives
+        it its fate (kept, updated, deleted, or updated/deleted by
+        source); the source rows, joined with the per-key summary of
+        the matches, give the inserts and exactly one post-image per
+        updated key. The change feed is read off the same relations.
 
         ``when_not_matched_by_source`` INVERTS what pruning may assume:
         a file disjoint from the source's key range holds ONLY
@@ -2744,8 +2755,9 @@ class SnapshotTable:
         keys, ``insert`` for unmatched — are materialized under
         ``_change_data/`` at commit time and referenced by the manifest;
         :meth:`read_changes_cdf` serves them directly. Off by default
-        (two extra joins over the touched slice + one write, the same
-        cost Delta charges); a merge committed without it still RAISES
+        (one more write over the same joined relation, plus a join of
+        its changed rows with the per-key summary — the cost Delta
+        charges); a merge committed without it still RAISES
         in the CDF, as before. Change files follow manifest retention:
         vacuum reclaims them with their manifest.
         """
@@ -2898,7 +2910,7 @@ class SnapshotTable:
             """True when the file provably needs no rewrite: key-disjoint
             (holds no matched row — also the rebase guard for
             concurrently-appended files, whose matching keys escaped this
-            merge's anti-join), AND — pruning inversion under a
+            merge's join), AND — pruning inversion under a
             by-source clause, whose scope is exactly the key-disjoint
             rows — the clause has a condition the file's stats prove
             unsatisfiable."""
@@ -2915,26 +2927,16 @@ class SnapshotTable:
         for f in snap.files:
             (carried if _file_carried(stats.get(f, {})) else touched).append(f)
 
-        # r13 optimization (guide §2.3/§2.4): the source batch, the
-        # dv-applied touched slice, and the matched pair set each feed
-        # SEVERAL output branches (keep/anti, conditional-kept, incoming
-        # semi-joins, and the four CDC blocks) — left as lineage they are
-        # re-scanned and re-joined once per branch (measured on the
-        # cdc_conditional_cdf shape: 35 parquet scans / 23 exchanges in
-        # the change-data write alone). Persisting them for the duration
-        # of this one commit computes each relation once; at scale this
-        # trades N-1 re-reads of the touched slice for one spill-capable
-        # materialization (Delta's merge materializes the same relations
-        # for its single-pass join). Unpersisted in the finally — never
-        # outlives the commit, so it is not cross-run caching.
-        _cached: list[DataFrame] = []
+        # The source and the joined relation (below) each feed both the
+        # data write and the change-data write, and the joined relation
+        # also feeds its own per-key summary: persisted for the duration
+        # of this one commit, so each is computed once (Delta's merge
+        # materializes the same joined relation for its single pass).
+        # Unpersisted in the finally — never outlives the commit, so it
+        # is not cross-run caching.
+        source = source.persist()
+        joined = None
         try:
-            source = source.persist()
-            _cached.append(source)
-
-            # ONE read of the touched slice feeds the anti-join, the
-            # update-only semi-join, and the CDC block (review r9: a
-            # duplicate read here re-opened footers and invited plan drift);
             # soft-deleted rows are filtered first — a merge must neither
             # match nor carry them
             target = (
@@ -2949,16 +2951,14 @@ class SnapshotTable:
                 if touched
                 else None
             )
-            if target is not None:
-                target = target.persist()
-                _cached.append(target)
-            target_keys = target.select(*key_cols) if target is not None else None
             if target is not None and set(source.columns) != set(target.columns):
                 raise ValueError(
                     f"{self.root}: merge source columns {sorted(source.columns)} "
                     f"!= table columns {sorted(target.columns)}"
                 )
+            set_map: dict = {}
             if bs is not None and bs[0] == "update":
+                set_map = bs[1]
                 # validate the STATIC spec against the logical schema, not
                 # target.columns — review r12: gating on `target is not
                 # None` made a typo'd column silently no-op whenever the
@@ -2968,156 +2968,149 @@ class SnapshotTable:
                     if snap.schema is not None
                     else set(source.columns)
                 )
-                unknown = sorted(set(bs[1]) - known)
+                unknown = sorted(set(set_map) - known)
                 if unknown:
                     raise ValueError(
                         f"{self.root}: when_not_matched_by_source set_map "
                         f"assigns unknown columns {unknown}"
                     )
-            skeys = source.select(*key_cols)
-            pairs = m_ct = None
-            if target is not None and m_cond is not None:
-                # the matched condition's scope is (target row, source row):
-                # evaluate it over the key-joined pairs under Delta's
-                # qualified names. Source keys are unique (checked above),
-                # so each target row joins at most one source row and the
-                # pair set is exactly the matched target slice.
-                pairs = target.alias("target").join(
-                    source.alias("source"),
-                    [
-                        F_col(f"target.{k}") == F_col(f"source.{k}")
-                        for k in key_cols
-                    ],
-                    "inner",
-                ).persist()
-                _cached.append(pairs)
-                m_ct = F_coalesce(F_expr(m_cond), F_lit(False))
+            # the not-matched condition, in the source row's own scope
+            nm_ok = F_lit(nm_action == "insert")
+            if nm_cond is not None:
+                nm_ok = F_coalesce(F_expr(nm_cond), F_lit(False))
+            changes = None
+            if target is None:
+                # every file carried: no target row can match, so every
+                # source row is unmatched
+                data = source.filter(nm_ok) if nm_action == "insert" else None
+                if change_data and data is not None:
+                    changes = data.withColumn("_change_type", F_lit("insert"))
+            else:
+                cols = target.columns
+                # 1. ONE left-outer join: each touched target row with its
+                #    source row, if any (source keys are unique, checked
+                #    above), under the matched condition's qualified names.
+                #    Planned by size like any join: a small source is
+                #    broadcast, so the target keeps its file partitioning
+                #    and the rewritten files keep their key ranges. NULL
+                #    keys never match.
+                hit = F_col("source.__merge_source__").isNotNull()
+                passes = hit
+                if m_cond is not None:
+                    passes = F_when(
+                        hit, F_coalesce(F_expr(m_cond), F_lit(False))
+                    ).otherwise(F_lit(False))
+                joined = (
+                    target.alias("target")
+                    .join(
+                        source.withColumn(
+                            "__merge_source__", F_lit(True)
+                        ).alias("source"),
+                        [
+                            F_col(f"target.{k}") == F_col(f"source.{k}")
+                            for k in key_cols
+                        ],
+                        "left",
+                    )
+                    .select(
+                        "target.*",
+                        hit.alias("__matched__"),
+                        passes.alias("__passed__"),
+                    )
+                    .persist()
+                )
+                matched, passed = F_col("__matched__"), F_col("__passed__")
+                # 2. ONE CASE projection: each target row's fate — NULL
+                #    keeps it; the by-source condition and set map see
+                #    the target row alone (unqualified names)
+                bs_hit = ~matched
+                if bs is not None and bs[2] is not None:
+                    bs_hit = bs_hit & F_coalesce(F_expr(bs[2]), F_lit(False))
+                bs_action = None if bs is None else f"by_source_{bs[0]}"
+                fated = joined.withColumn(
+                    "__fate__",
+                    F_when(passed, F_lit(m_action)).when(
+                        bs_hit, F_lit(bs_action)
+                    ),
+                )
+                fate = F_col("__fate__")
+                is_set = fate == "by_source_update"
 
-            # 1. target rows NOT matched by any source key: kept verbatim
-            #    without a by-source clause, else transformed by it
-            out_rows = None
-            if target is not None:
-                tns = target.join(skeys, key_cols, "left_anti")
-                if bs is None:
-                    out_rows = tns
-                elif bs[0] == "delete":
-                    out_rows = (
-                        None  # unconditional: every by-source row goes
-                        if bs[2] is None
-                        else tns.filter(
-                            ~F_coalesce(F_expr(bs[2]), F_lit(False))
-                        )
-                    )
-                else:  # by-source update: ONE projection, CASE WHEN per col
-                    bs_ct = (
-                        F_coalesce(F_expr(bs[2]), F_lit(False))
-                        if bs[2] is not None
-                        else F_lit(True)
-                    )
-                    out_rows = tns.select(
+                def _after(df: DataFrame) -> DataFrame:
+                    return df.select(
                         *[
-                            F_when(bs_ct, F_expr(bs[1][c]))
+                            F_when(is_set, F_expr(set_map[c]))
                             .otherwise(F_col(c))
                             .alias(c)
-                            if c in bs[1]
+                            if c in set_map
                             else F_col(c)
-                            for c in tns.columns
+                            for c in cols
                         ]
                     )
 
-            # 2. matched target rows that STAY: all of them when there is no
-            #    matched clause, the condition-failing ones when the clause
-            #    is conditional (an unconditional action keeps none)
-            if target is not None:
-                kept = None
-                if m_action is None:
-                    kept = target.join(skeys, key_cols, "left_semi")
-                elif m_cond is not None:
-                    kept = pairs.filter(~m_ct).select("target.*")
-                if kept is not None:
-                    out_rows = (
-                        kept if out_rows is None else out_rows.unionByName(kept)
-                    )
-
-            # 3. incoming source rows. The condition-free shapes keep their
-            #    original 0/1-join plans; conditional clauses derive the
-            #    qualifying keys from the SAME pair set the keep side used.
-            incoming = None
-            if m_cond is None and nm_cond is None:
-                if m_action == "update" or nm_action == "insert":
-                    if nm_action != "insert":
-                        # update-only: keep just the source rows that matched
-                        incoming = (
-                            source.join(target_keys, key_cols, "left_semi")
-                            if target is not None
-                            else None
-                        )
-                    elif m_action == "delete" and target is not None:
-                        # delete+insert: a MATCHED source row must NOT re-enter
-                        # the table as an insert — its match was just deleted
-                        # (review r9: `incoming = source` resurrected it, against
-                        # MERGE semantics and the CDF's replay contract)
-                        incoming = source.join(target_keys, key_cols, "left_anti")
-                    elif m_action == "update":
-                        incoming = source  # matched updates + unmatched inserts
-                    else:
-                        # no matched clause: only the unmatched rows may enter
-                        incoming = (
-                            source.join(target_keys, key_cols, "left_anti")
-                            if target is not None
-                            else source
-                        )
-            else:
-                if m_action == "update" and target is not None:
-                    if m_cond is None:
-                        incoming = source.join(target_keys, key_cols, "left_semi")
-                    else:
-                        wk = pairs.filter(m_ct).select(
-                            *[F_col(f"source.{k}").alias(k) for k in key_cols]
-                        )
-                        incoming = source.join(wk, key_cols, "left_semi")
-                if nm_action == "insert":
-                    new_in = (
-                        source.join(target_keys, key_cols, "left_anti")
-                        if target is not None
-                        else source
-                    )
-                    if nm_cond is not None:
-                        new_in = new_in.filter(
-                            F_coalesce(F_expr(nm_cond), F_lit(False))
-                        )
-                    incoming = (
-                        new_in
-                        if incoming is None
-                        else incoming.unionByName(new_in)
-                    )
-            if incoming is not None:
-                cols = out_rows.columns if out_rows is not None else incoming.columns
-                incoming = incoming.select(*cols)
-                out_rows = (
-                    incoming
-                    if out_rows is None
-                    else out_rows.unionByName(incoming)
+                # 3. the source rows against the joined relation's per-key
+                #    summary (condition-passing matches per matched key):
+                #    an unmatched key enters under the not-matched clause
+                #    (its condition sees the source row alone); a key with
+                #    passing matches enters as ONE post-image — a true
+                #    update when it replaces one row, an insert beside N
+                #    deletes when it collapses N. Without a matched
+                #    condition every match passes, so the entry test
+                #    needs no count and the summary folds away.
+                summary = (
+                    joined.filter(matched)
+                    .groupBy(*key_cols)
+                    .agg(F_sum(passed.cast("int")).alias("__passing__"))
                 )
+                passing = F_col("__passing__")
+                post_ok = F_lit(m_action == "update")
+                if m_cond is not None:
+                    post_ok = post_ok & (passing > 0)
+                enters = F_when(passing.isNull(), nm_ok).otherwise(post_ok)
+                data = _after(fated.filter(fate.isNull() | is_set)).unionByName(
+                    source.join(summary, key_cols, "left")
+                    .filter(enters)
+                    .select(*cols)
+                )
+                if change_data:
+                    # the changed target rows and the source rows (fate
+                    # NULL) against ONE join with the summary
+                    rows = (
+                        fated.filter(fate.isNotNull())
+                        .select(*cols, fate)
+                        .unionByName(
+                            source.select(
+                                *cols, F_lit(None).cast("string").alias("__fate__")
+                            )
+                        )
+                        .join(summary, key_cols, "left")
+                        .filter(fate.isNotNull() | enters)
+                    )
+                    change_type = (
+                        F_when(
+                            fate.isNull(),
+                            F_when(passing == 1, F_lit("update_postimage"))
+                            .otherwise(F_lit("insert")),
+                        )
+                        .when(
+                            (fate == "update") & (passing > 1), F_lit("delete")
+                        )
+                        .when(
+                            (fate == "update") | is_set,
+                            F_lit("update_preimage"),
+                        )
+                        .otherwise(F_lit("delete"))
+                    )
+                    changes = rows.select(
+                        *cols, change_type.alias("_change_type")
+                    ).unionByName(
+                        _after(fated.filter(is_set)).withColumn(
+                            "_change_type", F_lit("update_postimage")
+                        )
+                    )
             enforced: dict = {}
-            changes = None
-            if change_data:
-                cdc_parts = self._merge_change_rows(
-                    source, target, target_keys, key_cols,
-                    m_action, m_cond, nm_action, nm_cond, bs, pairs, m_ct,
-                )
-                if cdc_parts:
-                    changes = cdc_parts[0]
-                    for p in cdc_parts[1:]:
-                        changes = changes.unionByName(p)
-            # both writes read the persisted relations: one pairs scan
-            # materializes source and target too; without pairs, each
-            # is forced directly
             fresh, fresh_stats, cdc_files = self._write_data_and_changes(
-                out_rows,
-                changes,
-                [pairs] if pairs is not None else _cached,
-                enforced,
+                data, changes, source if joined is None else joined, enforced
             )
             try:
                 return self._commit_rewrite(
@@ -3143,145 +3136,9 @@ class SnapshotTable:
                 self._drop_uuid_dirs(fresh + cdc_files)
                 raise
         finally:
-            for _df in _cached:
-                try:
-                    _df.unpersist(False)
-                except Exception:
-                    pass
-
-    def _merge_change_rows(
-        self,
-        source: DataFrame,
-        target: DataFrame | None,
-        target_keys: DataFrame | None,
-        key_cols: list[str],
-        m_action: str | None,
-        m_cond: str | None,
-        nm_action: str | None,
-        nm_cond: str | None,
-        bs: tuple | None,
-        pairs: DataFrame | None,
-        m_ct,
-    ) -> list[DataFrame]:
-        """The CDF change rows a merge produces, matching THIS engine's
-        merge semantics exactly (a consumer replaying them reproduces
-        the committed table):
-
-        - a source key matching EXACTLY ONE target row is a true update:
-          ``update_preimage`` / ``update_postimage`` pair;
-        - a source key matching SEVERAL target rows collapses them to
-          the one source row — emitted as N ``delete`` preimages plus an
-          ``insert`` (review r9: tagging all N as update_preimage next
-          to a single postimage gives downstream pre/post pairing N-1
-          rows that are never reported; Delta-style consumers misapply
-          the batch);
-        - ``when_matched='delete'`` preimages are plain ``delete``;
-        - unmatched source rows are ``insert`` when
-          ``when_not_matched='insert'``;
-        - a CONDITIONAL matched clause scopes all of the above to the
-          condition-passing pairs (``pairs``/``m_ct`` — the same pair
-          DEFINITION the commit's keep side used; merge REFUSES
-          non-deterministic conditions at validation precisely because
-          this re-evaluation could otherwise disagree with the commit —
-          review r12); rows whose condition fails produce no change
-          rows;
-        - ``when_not_matched_by_source``: affected rows (by-source rows
-          passing the clause condition) emit ``delete`` preimages, or
-          ``update_preimage``/``update_postimage`` pairs with the
-          postimage re-deriving the committed set expressions.
-
-        The duplicate-arity split derives both key sets from ONE shared
-        per-key count aggregate over the MATCHED slice (review r9: a
-        window plus two independent groupBys tripled the shuffle; the
-        identical count subplan across branches also lets Spark reuse
-        the exchange inside the single change-data write) — part of
-        change_data's documented opt-in price."""
-        parts: list[DataFrame] = []
-        if target is None:
-            if nm_action == "insert":
-                src_in = (
-                    source
-                    if nm_cond is None
-                    else source.filter(
-                        F_coalesce(F_expr(nm_cond), F_lit(False))
-                    )
-                )
-                parts.append(
-                    src_in.withColumn("_change_type", F_lit("insert"))
-                )
-            return parts
-        cols = target.columns
-        skeys = source.select(*key_cols)
-        if m_action is not None:
-            matched = (
-                target.join(skeys, key_cols, "left_semi")
-                if m_cond is None
-                else pairs.filter(m_ct).select("target.*")
-            )
-            if m_action == "delete":
-                parts.append(
-                    matched.withColumn("_change_type", F_lit("delete"))
-                )
-            else:
-                counts = matched.groupBy(*key_cols).count()
-                single_keys = counts.filter(F_col("count") == 1).select(*key_cols)
-                dup_keys = counts.filter(F_col("count") > 1).select(*key_cols)
-                parts.append(
-                    matched.join(single_keys, key_cols, "left_semi")
-                    .withColumn("_change_type", F_lit("update_preimage"))
-                )
-                parts.append(
-                    matched.join(dup_keys, key_cols, "left_semi")
-                    .withColumn("_change_type", F_lit("delete"))
-                )
-                parts.append(
-                    source.join(single_keys, key_cols, "left_semi")
-                    .select(*cols)
-                    .withColumn("_change_type", F_lit("update_postimage"))
-                )
-                parts.append(
-                    source.join(dup_keys, key_cols, "left_semi")
-                    .select(*cols)
-                    .withColumn("_change_type", F_lit("insert"))
-                )
-        if nm_action == "insert":
-            new_in = source.join(target_keys, key_cols, "left_anti")
-            if nm_cond is not None:
-                new_in = new_in.filter(
-                    F_coalesce(F_expr(nm_cond), F_lit(False))
-                )
-            parts.append(
-                new_in.select(*cols)
-                .withColumn("_change_type", F_lit("insert"))
-            )
-        if bs is not None:
-            tns = target.join(skeys, key_cols, "left_anti")
-            affected = (
-                tns
-                if bs[2] is None
-                else tns.filter(F_coalesce(F_expr(bs[2]), F_lit(False)))
-            )
-            if bs[0] == "delete":
-                parts.append(
-                    affected.withColumn("_change_type", F_lit("delete"))
-                )
-            else:
-                parts.append(
-                    affected.withColumn(
-                        "_change_type", F_lit("update_preimage")
-                    )
-                )
-                parts.append(
-                    affected.select(
-                        *[
-                            F_expr(bs[1][c]).alias(c)
-                            if c in bs[1]
-                            else F_col(c)
-                            for c in cols
-                        ]
-                    ).withColumn("_change_type", F_lit("update_postimage"))
-                )
-        return parts
+            source.unpersist(False)
+            if joined is not None:
+                joined.unpersist(False)
 
     def delete(
         self,
@@ -3617,7 +3474,7 @@ class SnapshotTable:
                     fresh, fresh_stats, cdc = self._write_data_and_changes(
                         rewritten,
                         changes,
-                        [matched] if matched is not None else [],
+                        matched,
                         enforced,
                     )
                 finally:

@@ -2,10 +2,10 @@
 
     python3 scripts/perfbench_ab.py --parent DIR --workload snapshot_dml --seeds 1101-1110
 
-Each seed is one pair: the parent checkout and this one each run
-``perfbench/run.py`` from their own tree (fresh JVM per run, untraced,
-``run_seconds`` from ``BENCHMARK.json``), and the side that runs first
-alternates from pair to pair. Every run's end-to-end metrics are printed
+Each listed seed is one pair, a repeated seed one more pair: the parent
+checkout and this one each run ``perfbench/run.py`` from their own tree
+(fresh JVM per run, untraced, ``run_seconds`` from ``BENCHMARK.json``),
+and the side that runs first alternates from pair to pair. Every run's end-to-end metrics are printed
 as it finishes; the summary gives, for each end-to-end metric in
 ``BENCHMARK.json``, the parent median [Q1-Q3] -> the change median, the
 relative change, and the pairs the change won (direction from the
@@ -60,7 +60,7 @@ def quartiles(xs: list[float]) -> tuple[float, float, float]:
 
 
 def summarize(metrics: list[dict], runs: dict) -> list[str]:
-    """Summary lines for paired ``runs`` ({seed: {side: result}})."""
+    """Summary lines for paired ``runs`` ({pair index: {side: result}})."""
     ok = [s for s, r in runs.items() if all("metrics" in r[k] for k in ("parent", "change"))]
     out = [f"pairs with both runs: {len(ok)}/{len(runs)}"]
     for m in metrics if ok else ():
@@ -103,13 +103,14 @@ def main(argv=None) -> int:
         if not (tree / "perfbench" / "run.py").is_file():
             ap.error(f"{side} checkout {tree} has no perfbench/run.py")
     metrics = bench["end_to_end"]
+    # keyed by pair index: a seed may repeat (``--seeds 5,5``)
     runs: dict = {}
     for i, seed in enumerate(parse_seeds(args.seeds)):
         order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
-        runs[seed] = {}
+        runs[i] = {}
         for side in order:
             res = run_once(trees[side], args.workload, seed, bench["run_seconds"])
-            runs[seed][side] = res
+            runs[i][side] = res
             if "error" in res:
                 detail = res["error"]
             else:

@@ -464,7 +464,24 @@ def test_merge_prunes_disjoint_files_by_stats(spark, table):
     assert got[105] == -1 and got[3] == 3 and len(got) == 20
 
 
-def test_merge_rejects_ambiguous_source(spark, table):
+@pytest.mark.parametrize("change_data", [False, True])
+def test_merge_keeps_range_layout_for_later_pruning(spark, table, change_data):
+    """A merge rewrites the touched files without reshuffling them by key:
+    after a 5% upsert into a 4-file range-laid table, a delete on a band
+    inside one original file removes only that band's rewritten file and
+    the one incoming file (a range-split source partition) for the band."""
+    table.append(
+        spark.range(8000).selectExpr("id AS k", "id AS v").repartitionByRange(4, "k")
+    )
+    table.merge(
+        spark,
+        spark.range(0, 8000, 20, numPartitions=8).selectExpr("id AS k", "-id AS v"),
+        ["k"],
+        change_data=change_data,
+    )
+    snap = table.delete(spark, "k >= 6000 AND k < 6800")
+    assert snap.metrics["num_removed_files"] == 2
+    assert table.read(spark).count() == 7200
     table.append(_df(spark, 0, 5))
     dup = spark.createDataFrame([(1, 10), (1, 11)], "id long, v long")
     with pytest.raises(ValueError, match="multiple rows"):
