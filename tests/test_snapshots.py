@@ -482,6 +482,9 @@ def test_merge_keeps_range_layout_for_later_pruning(spark, table, change_data):
     snap = table.delete(spark, "k >= 6000 AND k < 6800")
     assert snap.metrics["num_removed_files"] == 2
     assert table.read(spark).count() == 7200
+
+
+def test_merge_rejects_ambiguous_source(spark, table):
     table.append(_df(spark, 0, 5))
     dup = spark.createDataFrame([(1, 10), (1, 11)], "id long, v long")
     with pytest.raises(ValueError, match="multiple rows"):
