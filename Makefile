@@ -1,7 +1,7 @@
 # Driver targets for the engine (the reference's Makefile deploys AWS
 # infra; this one runs the engine locally).
 
-.PHONY: test prover-gate dml-gate pipeline-gate bench bench-small demo smoke perfbench perfbench-selftest perfbench-ab
+.PHONY: test prover-gate dml-gate pipeline-gate bench bench-small demo smoke perfbench perfbench-selftest perfbench-ab codegen-probe
 
 # The ROADMAP tier-1 command.
 test:
@@ -15,12 +15,13 @@ prover-gate:
 
 # The row-level DML gate on its own: the delete/update cell contract, the
 # snapshot table's DML/CDF tests, the merge clause matrix, the commit
-# protocol's crash points, the change-feed stream tests, and the
-# log-planned and partitioned-table reads of the change feed.
+# protocol's crash points, the change-feed stream tests, the log-planned
+# and partitioned-table reads of the change feed, and the steady-state
+# compile pin (a warm DML cycle compiles no generated class).
 dml-gate:
 	python -m pytest tests/test_row_dml.py tests/test_snapshots.py tests/test_merge_matrix.py \
 	  tests/test_commit_protocol.py tests/test_snapshot_stream.py tests/test_log_planned_reads.py \
-	  tests/test_partitioned_table.py -q -p no:cacheprovider
+	  tests/test_partitioned_table.py tests/test_codegen_cache.py -q -p no:cacheprovider
 
 # The landing -> consumer gate on its own: the batch pipeline (with its
 # job-free planning pins, the driver-side schema parity and the overlapped
@@ -55,6 +56,14 @@ SEEDS ?= 1-10
 perfbench-ab:
 	@test -n "$(PARENT)" || { echo "perfbench-ab: set PARENT=<checkout>"; exit 2; }
 	python3 scripts/perfbench_ab.py --parent $(PARENT) --workload $(W) --seeds $(SEEDS)
+
+# Generated classes compiled per op and per warm cycle of one benchmark
+# workload, plus the JVM code cache (scripts/codegen_probe.py), e.g.
+# `make codegen-probe W=snapshot_dml SEED=5101`.
+CYCLES ?= 3
+
+codegen-probe:
+	python3 scripts/codegen_probe.py --workload $(W) --seed $(SEED) --cycles $(CYCLES)
 
 demo:
 	python examples/taxi_pipeline_demo.py

@@ -94,7 +94,10 @@ def run_one_pass(sf_dir: str) -> dict[str, float]:
     JIT/codegen compilation, the per-table file-index/footer caches, and
     the Python worker pool are per-JVM one-time costs, not per-query
     costs (see module docstring for the measured ordering artifact this
-    removes)."""
+    removes). Codegen is one-time only while the generated classes fit
+    Spark's compiled-class cache (``session.CODEGEN_CACHE_ENTRIES``
+    entries in a :func:`get_spark` session): a class evicted from it
+    is compiled again on its next use."""
     queries = entrymod.queries()
     spark = get_spark("ntx-bench")
     try:

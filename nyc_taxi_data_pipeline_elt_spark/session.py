@@ -6,6 +6,15 @@ conf itself (``partitionColumnTypeInference``, line 130). Here the session
 is owned by the library; confs are chosen for correctness parity with the
 DuckDB oracle (UTC, double semantics) and for scale (AQE, dynamic partition
 overwrite, Arrow).
+
+Two kinds of conf:
+
+- Runtime confs (``RUNTIME_CONFS``): settable on a live session, so
+  :func:`tune` applies them to any session, including one a harness built.
+- Builder-only static confs (``CODEGEN_CACHE_ENTRIES``, the driver heap,
+  the UI): fixed when the JVM's first session starts. Only
+  :func:`get_spark` sets them; a harness-built session keeps Spark's
+  defaults (a 100-entry compiled-class cache).
 """
 
 from __future__ import annotations
@@ -70,6 +79,21 @@ RUNTIME_CONFS: dict[str, str] = {
 }
 
 
+# Entries of Spark's compiled-class cache (``spark.sql.codegen.cache.maxEntries``,
+# default 100): every class Janino compiles is kept in one LRU cache per
+# JVM, keyed by its source. It is a STATIC SQL conf, so only a session
+# this module builds can size it; tune() cannot. Measured on 4 vCPU
+# (scripts/codegen_probe.py): one snapshot-table DML cycle (append, merge,
+# copy-on-write and merge-on-read delete/update, OPTIMIZE, Data Source
+# scans, change feed and its stream) generates 127 distinct classes, and
+# uses them in the same order every cycle. Through a 100-entry LRU each
+# was evicted before its next use, so every warm cycle recompiled 121 of
+# them, ~12 ms each on the driver outside any Spark job. At 1000 (~8x
+# that working set) a warm cycle compiles none, and the benchmark's peak
+# RSS moved +0.7 % (10 interleaved pairs).
+CODEGEN_CACHE_ENTRIES = 1000
+
+
 # Memoization stamp for tune(): every query entry point calls tune(), so
 # an already-tuned session was paying ~len(RUNTIME_CONFS) py4j conf.set
 # round-trips per query (~16 driver calls x 200 queries x every bench
@@ -97,6 +121,9 @@ def tune(spark: SparkSession) -> SparkSession:
 
     Every public query entry point calls this so behavior is identical
     whether the session came from :func:`get_spark` or from the harness.
+    Only ``RUNTIME_CONFS`` are applied: static confs such as the
+    compiled-class cache size (``CODEGEN_CACHE_ENTRIES``) cannot change
+    on a live session, so a harness-built session keeps Spark's default.
     A session that already carries the current stamp is skipped after
     ONE conf.get — code outside this module never mutates these confs
     (pinned by ``test_no_conf_set_outside_tune_and_confscope``; tests
@@ -160,6 +187,7 @@ def get_spark(app_name: str = "nyc-taxi-elt-spark", cpus: int | None = None) -> 
         # than failing: the worker either connects or the spawn error
         # surfaces on its own.
         .config("spark.python.authenticate.socketTimeout", "120s")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

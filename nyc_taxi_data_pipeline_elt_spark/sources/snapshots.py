@@ -1473,6 +1473,7 @@ class SnapshotTable:
         mapping: dict | None = None,
         cluster: bool = True,
         partition_spec: tuple | None = None,
+        drop_empty: bool = False,
     ) -> tuple[list[str], dict]:
         """Land ``df`` as immutable parquet under a fresh uuid dir and
         return ``(written_files, their_stats)``, files relative to the
@@ -1504,7 +1505,14 @@ class SnapshotTable:
         write — the one translation point, mirroring ``_read_files``'s
         read-side one. ``None`` derives it from the current snapshot
         when enforcing (the same snapshot read the constraint set
-        needs); ``enforce=False`` callers pass it explicitly."""
+        needs); ``enforce=False`` callers pass it explicitly.
+
+        ``drop_empty`` (the rewrites: merge, copy-on-write delete and
+        update, compact, optimize): Spark's writer lands a 0-row file
+        for an empty output and for some empty write tasks; such files
+        are deleted here and left out of the result, so a rewrite that
+        removes every row of its files commits no file instead of an
+        empty one that every later read and rewrite would open."""
         cons: dict = {}
         if enforce:
             cur = self.current_version()
@@ -1580,6 +1588,14 @@ class SnapshotTable:
             if not p.name.startswith((".", "_"))
         ]
         stats = self._collect_stats(written, df.sparkSession)
+        if drop_empty:
+            empty = {f for f in written if stats.get(f, {}).get("__num_rows__") == 0}
+            for f in empty:
+                (self.root / f).unlink()
+                del stats[f]
+            written = [f for f in written if f not in empty]
+            if not written:
+                shutil.rmtree(sub, ignore_errors=True)
         if pcols:
             self._record_partition_values(written, stats, pcols)
         if enforce and written:
@@ -1688,7 +1704,7 @@ class SnapshotTable:
         if changes is None:
             if data is not None:
                 fresh, fresh_stats = self._write_data(
-                    data, enforced_out=enforced
+                    data, enforced_out=enforced, drop_empty=True
                 )
             return fresh, fresh_stats, []
         if warm is not None:
@@ -1707,7 +1723,7 @@ class SnapshotTable:
             try:
                 if data is not None:
                     fresh, fresh_stats = self._write_data(
-                        data, enforced_out=enforced
+                        data, enforced_out=enforced, drop_empty=True
                     )
             finally:
                 thread.join()
@@ -3432,6 +3448,7 @@ class SnapshotTable:
                     enforce=False,
                     mapping=cmap,
                     partition_spec=self._partition_spec(snap),
+                    drop_empty=True,
                 )
                 written += fresh
             else:
@@ -3554,6 +3571,7 @@ class SnapshotTable:
             enforce=False,
             mapping=dict(basis.column_mapping or {}) if basis else {},
             partition_spec=self._partition_spec(basis),
+            drop_empty=True,
         )
         try:
             return self._commit_rewrite(
@@ -3650,6 +3668,7 @@ class SnapshotTable:
             # the tuple's full range, defeating the pruning this op
             # exists for (review r13)
             cluster=False,
+            drop_empty=True,
         )
         try:
             # rebase-on-append like compact (concurrent adds survive
@@ -4411,7 +4430,11 @@ class SnapshotTable:
         merge-on-read delete soft-removed are anti-joined out (a
         broadcast of the small dead set) — zero overhead when the
         snapshot has no dv entries. Time travel composes: each
-        snapshot's own dv map applies."""
+        snapshot's own dv map applies.
+
+        A snapshot with no files (a rewrite removed every row) reads as
+        an empty frame of its recorded schema; without a recorded schema
+        it raises ``FileNotFoundError``."""
         if timestamp is not None and version is not None:
             raise ValueError("read: pass version OR timestamp, not both")
         snap = (
@@ -4420,6 +4443,10 @@ class SnapshotTable:
             else self.snapshot(version)
         )
         if not snap.files:
+            if snap.schema:
+                return spark.createDataFrame(
+                    [], ", ".join(f"`{n}` {t}" for n, t in snap.schema)
+                )
             raise FileNotFoundError(f"{self.root}: snapshot v{snap.version} is empty")
         # a column-mapped table's log schema + mapping translate renamed
         # columns and project dropped physicals away
@@ -4809,19 +4836,13 @@ class SnapshotTable:
         version: int,
         merge_schema: bool = False,
     ) -> DataFrame:
-        """A DataFrame carrying snapshot ``version``'s row schema even
-        when its FILE LIST is empty (review r9: ``read()`` raises on an
-        empty snapshot, so a changeless feed over an emptied table
-        crashed instead of returning empty) — typed from the manifest's
-        recorded schema, or zero columns when unknowable. The empty-feed
-        base both change readers share."""
+        """Snapshot ``version``'s rows; zero columns and rows when it has
+        no files and no recorded schema (a changeless feed over an
+        emptied legacy table must return empty, not raise). The
+        empty-feed base both change readers share."""
         snap = self.snapshot(version)
-        if snap.files:
+        if snap.files or snap.schema:
             return self.read(spark, version, merge_schema=merge_schema)
-        if snap.schema:
-            return spark.createDataFrame(
-                [], ", ".join(f"`{n}` {t}" for n, t in snap.schema)
-            )
         return spark.range(0).drop("id")
 
     def read_changes_cdf(

@@ -3253,7 +3253,7 @@ def test_read_changes_ignore_deletes_and_skip_change_commits(spark, table):
     delete that rewrote survivors (serving the rewrite would duplicate
     rows); skip_change_commits skips ANY row-changing commit. The
     default refusal is unchanged."""
-    table.append(_kv(spark, [(1, 10), (2, 200)]).coalesce(1))    # v0
+    table.append(_kv(spark, [(1, 10), (2, 200), (6, 60)]).coalesce(1))  # v0
     table.append(_kv(spark, [(3, 30)]).coalesce(1))              # v1
     table.delete(spark, "v >= 100", mode="merge-on-read")        # v2: MoR
     table.append(_kv(spark, [(4, 40)]).coalesce(1))              # v3
@@ -3268,8 +3268,9 @@ def test_read_changes_ignore_deletes_and_skip_change_commits(spark, table):
         ).collect()
     )
     assert got == [(3, 30), (4, 40)]
-    # a COW delete rewrites survivors into NEW files: ignore_deletes
-    # must still refuse (duplicates), skip_change_commits skips it
+    # a COW delete rewrites survivors ((6, 60)) into NEW files:
+    # ignore_deletes must still refuse (duplicates), skip_change_commits
+    # skips it
     table.delete(spark, "k = 1")                                 # v4: COW
     table.append(_kv(spark, [(5, 50)]).coalesce(1))              # v5
     with pytest.raises(ValueError, match="skipChangeCommits"):
@@ -4276,3 +4277,53 @@ def test_merge_wallclock_current_time_and_deep_condition_refused(
         ) + " OR source.ts > target.ts"),
     )
     assert {r.v for r in table.read(spark).collect()} == {11}
+
+
+def _assert_emptied(spark, table, since, deleted):
+    """``table`` holds no file; it reads as its recorded schema with no
+    rows, and its change feed since ``since`` replays ``deleted`` (k, v)
+    rows as deletes."""
+    assert table.detail()["num_files"] == 0
+    df = table.read(spark)
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema.fields] == [
+        ("k", "bigint"), ("v", "bigint")
+    ]
+    assert df.count() == 0
+    cdf = table.read_changes_cdf(spark, since_version=since)
+    assert sorted((r.k, r.v, r._change_type) for r in cdf.collect()) == [
+        (k, v, "delete") for k, v in deleted
+    ]
+
+
+def test_merge_deleting_every_row_commits_no_empty_file(spark, table):
+    """A merge whose matched delete removes every row of the file it
+    rewrites commits no file, not the empty one Spark's writer lands."""
+    table.append(_kv(spark, [(1, 10), (2, 20)]).coalesce(1))
+    table.set_property("delta.enableChangeDataFeed", "true")
+    v = table.current_version()
+    table.merge(
+        spark, _kv(spark, [(1, 0), (2, 0)]), key_cols=["k"],
+        when_matched="delete", when_not_matched=None,
+    )
+    _assert_emptied(spark, table, v, [(1, 10), (2, 20)])
+
+
+def test_copy_on_write_delete_of_every_row_commits_no_empty_file(spark, table):
+    table.append(_kv(spark, [(1, 10), (2, 20)]).coalesce(1))
+    table.set_property("delta.enableChangeDataFeed", "true")
+    v = table.current_version()
+    table.delete(spark, "k >= 1")
+    _assert_emptied(spark, table, v, [(1, 10), (2, 20)])
+
+
+def test_compact_and_optimize_of_an_emptied_table_commit_no_file(spark, table):
+    """Rewriting a table with no rows lands nothing: compact and
+    optimize commit no file, and the table still reads empty."""
+    table.append(_kv(spark, [(1, 10), (2, 20)]).coalesce(1))
+    table.delete(spark, "k >= 1")
+    table.compact(spark, target_files=2)
+    assert table.detail()["num_files"] == 0
+    table.optimize(spark, zorder_by=["k"], target_files=2)
+    assert table.detail()["num_files"] == 0
+    assert table.read(spark).count() == 0
+    assert [s.op for s in table.history()][-2:] == ["compact", "optimize"]
