@@ -1,15 +1,19 @@
 """The change-feed planner: one reading of a snapshot table's log that
-both change-feed readers replay.
+every change feed replays.
 
 ``change_plan(table, since, until)`` walks the raw manifests of
 ``(since, until]`` once and returns the ordered replay artifacts: which
 table file to read and how its rows become change rows.
 ``SnapshotTable.read_changes_cdf`` builds Spark frames from the plan;
 the ``readChangeFeed`` stream (``snapshot_datasource``) packs the same
-plan into partitions and serves each artifact with pyarrow. The per-op
-replay rules and the refusals live only here, so the two readers serve
-the same rows and refuse the same versions for the same reason. Pure
-Python: no pyspark import, no data read.
+plan into partitions and serves each artifact with pyarrow. With
+``inserts_only`` the same walk plans the insert-only feed
+(``SnapshotTable.read_changes`` / ``process_changes`` and the
+insert-only stream): only the insert artifacts of appends, under the
+tolerance flags. The per-op replay rules, the skips and the refusals
+live only here, so the readers serve the same rows and refuse the same
+versions for the same reason. Pure Python: no pyspark import, no data
+read.
 
 An artifact is a dict:
 
@@ -25,8 +29,9 @@ An artifact is a dict:
   source references); ``bytes``: its size.
 - ``version``, ``ts``: the commit; ``ctype``: the ``_change_type`` its
   rows get (None for ``cdc``).
-- ``mask``: the file's deletion-vector entry as of the commit's parent
-  (``[sidecar, count]``) or None.
+- ``mask``: the position sidecars whose rows the file's read drops — its
+  deletion-vector entry as of the commit's parent; for the insert-only
+  feed, the frozen positions of the in-range deletes that touched it.
 - ``schema`` / ``mapping``: the commit's recorded (name, type) list and
   column mapping, under which the file is read.
 """
@@ -49,6 +54,10 @@ ROW_NEUTRAL = frozenset(
 
 #: Column-mapping commits: row-neutral, but a schema change.
 MAPPING_OPS = ("rename_column", "drop_column")
+
+#: Commits that change rows: the insert-only feed's
+#: ``skip_change_commits`` skips every one of them.
+ROW_CHANGING = ("delete", "update", "merge", "replace", "overwrite_partitions")
 
 _FULL = "read the full snapshot instead"
 _ENABLE = (
@@ -128,7 +137,17 @@ def mapping_consistent(table, since: int, declared, end_mapping, end_schema):
     return all(end_mapping.get(c, c) == start.get(c, c) for c in declared)
 
 
-def change_plan(table, since: int, until: int, declared=None) -> list[dict]:
+def change_plan(
+    table,
+    since: int,
+    until: int,
+    declared=None,
+    *,
+    inserts_only: bool = False,
+    ignore_deletes: bool = False,
+    skip_change_commits: bool = False,
+    allow_schema_change: bool = False,
+) -> list[dict]:
     """The replay artifacts of every row change in ``(since, until]``,
     in version order (see the module docstring for their shape).
 
@@ -138,22 +157,50 @@ def change_plan(table, since: int, until: int, declared=None) -> list[dict]:
     ``declared`` column (default: the until-version schema) in its
     physical slot is skipped; any other raises "schema change". A
     commit whose row changes have no replay input raises
-    :func:`refusal`, saying what helps."""
+    :func:`refusal`, saying what helps.
+
+    ``inserts_only`` plans the insert-only feed: the insert artifacts of
+    the appends (and of a clone's v0), with the skips and refusals of
+    :func:`_inserts_skip` and the masks of :func:`_mask_deletes`. Its
+    readers read every file under the until-version schema, so a
+    rename/drop anywhere in the range is skipped when the ``declared``
+    columns keep their physical slots across the range, or with
+    ``allow_schema_change``; otherwise it raises "schema change"."""
     end = table._raw_manifest(until)
     end_mapping = dict(end.get("column_mapping") or {})
     end_schema = end.get("schema")
     if declared is None:
         declared = [n for n, _ in end_schema or ()]
     plan: list[dict] = []
+    # the served files no commit has removed yet (the insert-only feed
+    # masks them by later deletes)
+    live: dict[str, dict] = {}
     # where the drain advised by the schema-change refusal starts: past
     # any leading mapping commit this walk skipped
     resume = since
+    prev = None
     for v in range(since + 1, until + 1):
         raw = end if v == until else table._raw_manifest(v)
+        parent, prev = prev, raw
         op = raw["op"]
+        if inserts_only:
+            _mask_deletes(live, raw)
         if op in ROW_NEUTRAL:
             continue
         if op in MAPPING_OPS:
+            if inserts_only:
+                if allow_schema_change or mapping_consistent(
+                    table, since, declared, end_mapping, end_schema
+                ):
+                    continue
+                raise ValueError(
+                    f"{table.root}: change feed crosses a column-mapping "
+                    f"schema change at v{v} (op={op!r}); "
+                    "ignoreDeletes/skipChangeCommits do not skip a "
+                    "schema change — restart the feed from version "
+                    f"{v + 1} or later, or read under the current "
+                    "schema (read_changes(allow_schema_change=True))"
+                )
             if not plan and mapping_consistent(
                 table, since, declared, end_mapping, end_schema
             ):
@@ -169,8 +216,104 @@ def change_plan(table, since: int, until: int, declared=None) -> list[dict]:
                 f"or a stream with a new checkpoint and startingVersion "
                 f"{v + 1}"
             )
-        plan += _version_artifacts(table, v, raw)
+        if inserts_only and _inserts_skip(
+            table, v, raw, parent, ignore_deletes, skip_change_commits
+        ):
+            continue
+        arts = _version_artifacts(table, v, raw)
+        live.update((a["path"], a) for a in arts)
+        plan += arts
     return plan
+
+
+def _inserts_skip(
+    table, v: int, raw: dict, parent, ignore_deletes, skip_change_commits
+) -> bool:
+    """Whether the insert-only feed skips commit ``raw`` (neither
+    row-neutral nor a mapping op); raises when it can neither skip the
+    commit nor serve its rows as new (Delta's change feed without
+    update/delete vectors).
+
+    Skipped: a delete/update that changed no row; with
+    ``skip_change_commits`` (Delta's ``skipChangeCommits``) every
+    row-changing commit, accepting that deleted/updated rows diverge
+    downstream; with ``ignore_deletes`` (Delta's ``ignoreDeletes``) a
+    delete that added no file — a merge-on-read soft delete, or a
+    copy-on-write delete whose every touched file died whole. A delete
+    that rewrote survivors into new files still refuses (serving them
+    would duplicate rows), as does any other non-append (overwrite,
+    restore, merge, update) and a clone carrying deletion vectors, whose
+    added rows a plain file read cannot express."""
+    op = raw["op"]
+    if op in ("delete", "update") and _changes_no_row(table, raw, parent):
+        return True
+    if skip_change_commits and op in ROW_CHANGING:
+        return True
+    if ignore_deletes and op == "delete" and not added_by(table, raw):
+        return True
+    if op == "clone" and raw.get("dv"):
+        raise ValueError(
+            f"{table.root}: clone snapshot v{v} carries deletion vectors; "
+            "read_changes_cdf is the reader that honors them"
+        )
+    if op not in ("append", "clone"):
+        hint = (
+            "; a remove-only delete can be skipped with ignoreDeletes, "
+            "any row-changing commit with skipChangeCommits (accepting "
+            "divergence), or read the full snapshot / read_changes_cdf "
+            "instead"
+            if op in ROW_CHANGING
+            else "; read the full snapshot instead"
+        )
+        raise ValueError(
+            f"{table.root}: change feed crosses non-append snapshot "
+            f"v{v} (op={op!r}){hint}"
+        )
+    return False
+
+
+def _changes_no_row(table, raw: dict, parent) -> bool:
+    """A delete/update whose stats pruning touched no file and that grew
+    no deletion vector (a merge-on-read delete changes rows without
+    changing the file set). ``parent``: the parent's raw manifest, or
+    None to read it."""
+    if raw.get("parent") is None:
+        return False
+    if parent is None:
+        parent = table._raw_manifest(raw["parent"])
+    if "add" in raw:
+        same = not raw["add"] and not raw["remove"]
+    else:  # a legacy inline manifest lists its whole file set
+        same = set(raw.get("files", [])) == set(
+            table.snapshot(raw["parent"]).files
+        )
+    return same and (raw.get("dv") or {}) == (parent.get("dv") or {})
+
+
+def _mask_deletes(live: dict, raw: dict) -> None:
+    """Insert-only feed: add a DELETE commit's frozen ``dv_new`` sidecars
+    to the mask of every served file it touched, then retire the files
+    the commit removed, so later commits add nothing to their masks.
+    The per-delete sidecars are the exact death set: the consolidated
+    ``dv`` entry also folds in merge-on-read UPDATE pre-images (masking
+    those would vanish rows whose post-images ride a skipped commit)
+    and drops when a rewrite retires the file. A sidecar-less legacy
+    delete falls back to its consolidated entry (such manifests predate
+    merge-on-read updates). A file's sidecars are its whole in-range
+    death set, so a fully dead file serves no row."""
+    if raw["op"] == "delete":
+        frozen = dv_new_list(raw.get("dv_new"))
+        dv = raw.get("dv") or {}
+        touched = set(raw.get("dv_touched") or ()) | set(
+            raw.get("remove") or ()
+        )
+        for f in touched & live.keys():
+            if frozen:
+                live[f]["mask"] = live[f]["mask"] + frozen
+            elif dv.get(f):
+                live[f]["mask"] = [dv[f][0]]
+    for f in raw.get("remove") or ():
+        live.pop(f, None)
 
 
 def _version_artifacts(table, v: int, raw: dict) -> list[dict]:
@@ -190,7 +333,7 @@ def _version_artifacts(table, v: int, raw: dict) -> list[dict]:
             "path": rel,
             "bytes": file_bytes(table.root, stats, rel),
             "ctype": ctype,
-            "mask": mask,
+            "mask": [mask[0]] if mask else [],
             **commit,
             **rule,
         }

@@ -695,12 +695,15 @@ class SnapshotTable:
 
     def _dv_frame(self, spark: SparkSession, dv_entries: dict) -> DataFrame:
         """The (file, pos) dead-row set behind ``dv_entries`` ({rel_file:
-        [dv_rel_file, count]}): one read over the DISTINCT dv parquet
-        files, filtered to exactly the entries' data files (one dv file
-        can cover many data files; a consolidation can leave stale
-        other-file rows behind in older dv files, so the filter is
-        load-bearing, not an optimization)."""
-        dv_files = sorted({e[0] for e in dv_entries.values()})
+        entry}, an entry being a manifest ``[dv_rel_file, count]`` or a
+        change-feed artifact's mask, a list of sidecar rel files): one
+        read over the DISTINCT dv parquet files, filtered to exactly the
+        entries' data files (one dv file can cover many data files; a
+        consolidation can leave stale other-file rows behind in older dv
+        files, so the filter is load-bearing, not an optimization)."""
+        dv_files = sorted(
+            {s for e in dv_entries.values() for s in e if isinstance(s, str)}
+        )
         return self._read_positions(spark, dv_files).filter(
             F_col("file").isin([self._file_tail(f) for f in dv_entries])
         )
@@ -1473,7 +1476,6 @@ class SnapshotTable:
         mapping: dict | None = None,
         cluster: bool = True,
         partition_spec: tuple | None = None,
-        drop_empty: bool = False,
     ) -> tuple[list[str], dict]:
         """Land ``df`` as immutable parquet under a fresh uuid dir and
         return ``(written_files, their_stats)``, files relative to the
@@ -1507,12 +1509,11 @@ class SnapshotTable:
         when enforcing (the same snapshot read the constraint set
         needs); ``enforce=False`` callers pass it explicitly.
 
-        ``drop_empty`` (the rewrites: merge, copy-on-write delete and
-        update, compact, optimize): Spark's writer lands a 0-row file
-        for an empty output and for some empty write tasks; such files
-        are deleted here and left out of the result, so a rewrite that
-        removes every row of its files commits no file instead of an
-        empty one that every later read and rewrite would open."""
+        Spark's writer lands a 0-row file for an empty output and for
+        some empty write tasks; such files are deleted here and left out
+        of the result, so no commit (an empty append, a rewrite that
+        removes every row of its files) records a file that every later
+        read and rewrite would open for nothing."""
         cons: dict = {}
         if enforce:
             cur = self.current_version()
@@ -1588,14 +1589,13 @@ class SnapshotTable:
             if not p.name.startswith((".", "_"))
         ]
         stats = self._collect_stats(written, df.sparkSession)
-        if drop_empty:
-            empty = {f for f in written if stats.get(f, {}).get("__num_rows__") == 0}
-            for f in empty:
-                (self.root / f).unlink()
-                del stats[f]
-            written = [f for f in written if f not in empty]
-            if not written:
-                shutil.rmtree(sub, ignore_errors=True)
+        empty = {f for f in written if stats.get(f, {}).get("__num_rows__") == 0}
+        for f in empty:
+            (self.root / f).unlink()
+            del stats[f]
+        written = [f for f in written if f not in empty]
+        if not written:
+            shutil.rmtree(sub, ignore_errors=True)
         if pcols:
             self._record_partition_values(written, stats, pcols)
         if enforce and written:
@@ -1703,9 +1703,7 @@ class SnapshotTable:
         fresh_stats: dict = {}
         if changes is None:
             if data is not None:
-                fresh, fresh_stats = self._write_data(
-                    data, enforced_out=enforced, drop_empty=True
-                )
+                fresh, fresh_stats = self._write_data(data, enforced_out=enforced)
             return fresh, fresh_stats, []
         if warm is not None:
             warm.count()
@@ -1723,7 +1721,7 @@ class SnapshotTable:
             try:
                 if data is not None:
                     fresh, fresh_stats = self._write_data(
-                        data, enforced_out=enforced, drop_empty=True
+                        data, enforced_out=enforced
                     )
             finally:
                 thread.join()
@@ -3448,7 +3446,6 @@ class SnapshotTable:
                     enforce=False,
                     mapping=cmap,
                     partition_spec=self._partition_spec(snap),
-                    drop_empty=True,
                 )
                 written += fresh
             else:
@@ -3571,7 +3568,6 @@ class SnapshotTable:
             enforce=False,
             mapping=dict(basis.column_mapping or {}) if basis else {},
             partition_spec=self._partition_spec(basis),
-            drop_empty=True,
         )
         try:
             return self._commit_rewrite(
@@ -3668,7 +3664,6 @@ class SnapshotTable:
             # the tuple's full range, defeating the pruning this op
             # exists for (review r13)
             cluster=False,
-            drop_empty=True,
         )
         try:
             # rebase-on-append like compact (concurrent adds survive
@@ -4479,7 +4474,7 @@ class SnapshotTable:
         None when there was nothing to process.
 
         ``ignore_deletes`` / ``skip_change_commits`` are the stream
-        source's delete-tolerance opt-outs (see :meth:`added_files`) —
+        source's delete-tolerance opt-outs (see :meth:`read_changes`) —
         without them one row-removing commit permanently wedges the
         consumer at its checkpoint."""
         reader = lambda spark, since_version, until_version: (  # noqa: E731
@@ -4561,197 +4556,6 @@ class SnapshotTable:
             spark, checkpoint, handle, self.read_changes_cdf
         )
 
-    def added_files(
-        self,
-        since_version: int,
-        until_version: int,
-        ignore_deletes: bool = False,
-        skip_change_commits: bool = False,
-        allow_mapping_ops: bool = False,
-    ) -> list[str]:
-        """Relative paths of data files ADDED by append snapshots in
-        ``(since_version, until_version]`` — the manifest-diff core of
-        the change feed, O(files) metadata. Row-neutral commits
-        (``change_plan.ROW_NEUTRAL``: ``compact``/``optimize`` rewrite
-        rows without changing them, constraint and property commits are
-        metadata-only) are skipped, as is a NO-OP ``delete`` (its stats
-        pruning touched zero files, so no row changed); any other
-        non-append op (overwrite, restore, a row-removing delete)
-        invalidates append-only lineage and raises (the same contract
-        as Delta CDF without update/delete vectors —
-        :meth:`read_changes_cdf` is the reader that understands
-        deletes).
-
-        Opt-outs (VERDICT r10 task #3 — Delta's stream-source
-        options): ``ignore_deletes`` skips a row-removing DELETE that
-        added NO files (a merge-on-read soft delete, or a COW delete
-        whose every touched file died whole) — exactly Delta's
-        ``ignoreDeletes``, which tolerates remove-only commits
-        (partition-boundary deletes) but still fails when the delete
-        rewrote surviving rows into new files (serving those would
-        duplicate rows; re-process or use ``skip_change_commits``).
-        ``skip_change_commits`` (Delta's ``skipChangeCommits``) skips
-        EVERY row-changing commit — delete, update, merge,
-        replace_where — entirely, serving only appends; downstream
-        consumers accept that deleted/updated rows silently diverge.
-        A RENAME/DROP COLUMN commit in the range raises by default:
-        that is a schema change, not a row change — restart the feed
-        at or after it (Delta's incompatible-schema posture).
-        ``allow_mapping_ops=True`` skips those commits as row-neutral
-        instead — sound ONLY when the caller reads every returned file
-        under the UNTIL-version mapping and its consumer's schema is
-        the until-version logical schema (physical slots are never
-        reused, so the end mapping resolves every file ever written;
-        :meth:`read_changes` and the stream source use exactly that
-        read)."""
-        added: list[str] = []
-        for v in range(since_version + 1, until_version + 1):
-            s = self.snapshot(v)
-            if s.op in _plan.ROW_NEUTRAL:
-                continue
-            if s.op in _plan.MAPPING_OPS:
-                if allow_mapping_ops:
-                    continue  # metadata-only: no row, no file changed
-                raise ValueError(
-                    f"{self.root}: change feed crosses a column-mapping "
-                    f"schema change at v{v} (op={s.op!r}); "
-                    "ignoreDeletes/skipChangeCommits do not skip a "
-                    "schema change — restart the feed from version "
-                    f"{v + 1} or later, or read under the current "
-                    "schema (read_changes(allow_schema_change=True))"
-                )
-            if s.op in ("delete", "update") and s.parent is not None:
-                p = self.snapshot(s.parent)
-                if set(s.files) == set(p.files) and (s.dv or {}) == (
-                    p.dv or {}
-                ):
-                    # stats pruning touched zero files AND no deletion
-                    # vector grew (a merge-on-read delete changes rows
-                    # without changing the file set): no row changed
-                    continue
-            if skip_change_commits and s.op in (
-                "delete",
-                "update",
-                "merge",
-                "replace",
-                "overwrite_partitions",
-            ):
-                continue
-            if (
-                ignore_deletes
-                and s.op == "delete"
-                and s.parent is not None
-                and not (
-                    set(s.files) - set(self.snapshot(s.parent).files)
-                )
-            ):
-                # remove-only delete (MoR soft delete / whole files
-                # dropped): no file added, nothing to duplicate
-                continue
-            if s.op == "clone" and s.dv:
-                # the carried deletion vectors make 'added rows' a
-                # filtered set plain file reads cannot express
-                raise ValueError(
-                    f"{self.root}: clone snapshot v{v} carries "
-                    "deletion vectors; read_changes_cdf is the "
-                    "reader that honors them"
-                )
-            if s.op not in ("append", "clone"):
-                hint = (
-                    "; a remove-only delete can be skipped with "
-                    "ignoreDeletes, any row-changing commit with "
-                    "skipChangeCommits (accepting divergence), or read "
-                    "the full snapshot / read_changes_cdf instead"
-                    if s.op
-                    in (
-                        "delete",
-                        "update",
-                        "merge",
-                        "replace",
-                        "overwrite_partitions",
-                    )
-                    else "; read the full snapshot instead"
-                )
-                raise ValueError(
-                    f"{self.root}: change feed crosses non-append snapshot "
-                    f"v{v} (op={s.op!r}){hint}"
-                )
-            added.extend(_plan.added_by(self, self._raw_manifest(v)))
-        return added
-
-    def _range_delete_masks(
-        self,
-        since_version: int,
-        until_version: int,
-        files,
-    ) -> dict:
-        """For each given rel file, the frozen ``dv_new`` sidecars of
-        every DELETE commit in ``(since, until]`` that touched it —
-        ``{rel_file: [rel_sidecar, ...]}``. This is the delete-ONLY
-        death set the tolerance flags need: the consolidated per-file
-        ``dv`` entry also folds in merge-on-read UPDATE pre-images
-        (review r11 pass 4 — masking those VANISHES updated rows whose
-        post-images ride the skipped commit), and it drops entirely
-        when a rewrite retires the file; the per-commit ``dv_new``
-        positions conflate neither. A file's accumulated sidecars are
-        its complete in-range death set (a file cannot be deleted from
-        before it exists), so a fully-dead file masks to zero rows
-        with no special case. Sidecar-less legacy deletes fall back to
-        the consolidated entry (pre-dv_new manifests predate MoR
-        updates, so it is delete-pure there). O(range) manifest-header
-        reads, no data I/O."""
-        out: dict = {}
-        frozen: set = set()
-        fset = set(files)
-        for v in range(since_version + 1, until_version + 1):
-            raw = self._raw_manifest(v)
-            if raw.get("op") == "delete":
-                touched = set(raw.get("dv_touched") or ()) | set(
-                    raw.get("remove") or ()
-                )
-                dvn = _dv_new_list(raw.get("dv_new"))
-                for f in (touched & fset) - frozen:
-                    if dvn:
-                        out.setdefault(f, []).extend(dvn)
-                    else:
-                        e = (raw.get("dv") or {}).get(f)
-                        if e:
-                            out[f] = [e[0]]
-            # any removal retires the file: later commits key their
-            # artifacts by its successor, which maps to nothing here
-            frozen |= set(raw.get("remove") or ()) & fset
-        return out
-
-    def _apply_frozen_masks(
-        self, spark: SparkSession, df: DataFrame, masks: dict
-    ) -> DataFrame:
-        """Filter out of ``df`` (a read over exactly ``masks``' files)
-        every (file, pos) recorded by the files' frozen sidecars — the
-        Spark twin of the connector's ``_mask_dv``. One read per
-        distinct (sidecar, file-key) pair, anti-joined positionally."""
-        pairs = sorted(
-            {
-                (sc, self._file_tail(f))
-                for f, sidecars in masks.items()
-                for sc in sidecars
-            }
-        )
-        if not pairs:
-            return df
-        dead = None
-        for sc, key in pairs:
-            part = (
-                self._read_positions(spark, [sc])
-                .filter(F_col("file") == key)
-                .selectExpr("file AS __dv_file__", "pos AS __dv_pos__")
-            )
-            dead = part if dead is None else dead.unionByName(part)
-        return (
-            self._tag_dv_cols(df)
-            .join(dead, ["__dv_file__", "__dv_pos__"], "left_anti")
-            .drop("__dv_file__", "__dv_pos__")
-        )
-
     def read_changes(
         self,
         spark: SparkSession,
@@ -4766,69 +4570,66 @@ class SnapshotTable:
         including ``until_version`` (default: current) — the incremental-
         consumer shape (downstream jobs read only the delta instead of
         diffing full snapshots). Because data files are immutable and
-        appends only ever add files, the delta is exactly the manifest
-        file-set difference — an O(files) metadata operation, no row
-        diffing at any scale.
+        appends only ever add files, the delta is exactly the files the
+        appends added: the insert artifacts of
+        :func:`change_plan.change_plan` (``inserts_only``), planned from
+        the raw manifests with no row diffing at any scale.
 
         ``compact``/``optimize`` snapshots rewrite files without changing
         rows and are skipped; an ``overwrite`` in the range invalidates
         append-only lineage and raises (same contract as Delta's CDF
         without update/delete vectors). ``ignore_deletes`` /
-        ``skip_change_commits`` are Delta's stream-source opt-outs —
-        see :meth:`added_files` for their exact semantics.
+        ``skip_change_commits`` are Delta's stream-source opt-outs; the
+        planner's ``_inserts_skip`` states their exact semantics.
 
         On a column-mapped table (RENAME/DROP COLUMN established at or
         before the range) the added files are read via the recorded
         logical schema + mapping, so the feed serves LOGICAL column
         names like every other read path (ADVICE r10: the raw parquet
-        read served physical names). A rename/drop INSIDE the range
-        raises by default (the consumer's column names change across
-        the call); ``allow_schema_change=True`` opts into serving the
-        whole range under the UNTIL-version schema — exact because
-        physical slots are never reused, so the end mapping resolves
-        every file ever written."""
+        read served physical names), exact because physical slots are
+        never reused, so the end mapping resolves every file ever
+        written. A rename/drop INSIDE the range that moved an
+        until-version column off the physical slot it had at
+        ``since_version`` raises by default (the consumer's column names
+        would change across the call; the insert-only stream's rule
+        too); ``allow_schema_change=True`` serves the whole range under
+        the UNTIL-version schema regardless."""
         until = self.current_version() if until_version is None else until_version
         if until is None:
             raise FileNotFoundError(f"{self.root}: no committed snapshot")
-        added = self.added_files(
+        plan = _plan.change_plan(
+            self,
             since_version,
             until,
+            inserts_only=True,
             ignore_deletes=ignore_deletes,
             skip_change_commits=skip_change_commits,
-            allow_mapping_ops=allow_schema_change,
+            allow_schema_change=allow_schema_change,
         )
-        if not added:
+        if not plan:
             return self._snapshot_frame_or_empty(
                 spark, until, merge_schema=merge_schema
             ).limit(0)
-        snap = self.snapshot(until)
-        # added_files refused any in-range rename/drop, so the
-        # until-version schema and mapping are uniform over every added
-        # file (physical names never change once written)
+        # the plan refused any in-range rename/drop it did not skip, so
+        # the until-version schema and mapping resolve every served file
+        # (physical names never change once written)
+        end = self._raw_manifest(until)
+        files = [a["path"] for a in plan]
         out = self._read_files(
             spark,
-            added,
-            schema=snap.schema,
-            mapping=dict(snap.column_mapping or {}),
+            files,
+            schema=end.get("schema"),
+            mapping=dict(end.get("column_mapping") or {}),
             merge_schema=merge_schema,
         )
-        if ignore_deletes or skip_change_commits:
-            # the tolerance flags let row-removing commits land INSIDE
-            # the range: mask the added files' rows killed by in-range
-            # DELETES so the consumer never receives retired rows as
-            # live inserts (review r11 passes 3-4 — the until-version
-            # dv map both drops entries for retired files, serving
-            # them raw, AND folds in skipped MoR updates' pre-images,
-            # vanishing those rows; the per-delete dv_new walk
-            # conflates neither). Rows in files retired by an in-range
-            # rewrite keep their pre-rewrite values — the divergence
-            # these flags opt into.
-            out = self._apply_frozen_masks(
-                spark,
-                out,
-                self._range_delete_masks(since_version, until, added),
-            )
-        return out
+        # the tolerance flags let deletes land INSIDE the range: each
+        # file's mask is the frozen positions of the in-range deletes
+        # that touched it, so no retired row is served as a live insert.
+        # Rows of files an in-range rewrite retired keep their
+        # pre-rewrite values: the divergence these flags opt into.
+        return self._apply_dv(
+            spark, out, files, {a["path"]: a["mask"] for a in plan if a["mask"]}
+        )
 
     def _snapshot_frame_or_empty(
         self,
@@ -4924,21 +4725,27 @@ class SnapshotTable:
                         "update_postimage",
                     )
                 )
+            stamp = {
+                "_commit_version": F_lit(v),
+                "_commit_timestamp": F_lit(a["ts"]).cast("timestamp"),
+            }
             for df, ct in frames:
-                if ct is not None:
-                    df = df.withColumn("_change_type", F_lit(ct))
+                # one projection per part (a cdc file keeps its own type)
                 parts.append(
-                    df.withColumn("_commit_version", F_lit(v)).withColumn(
-                        "_commit_timestamp", F_lit(a["ts"]).cast("timestamp")
+                    df.withColumns(
+                        stamp if ct is None
+                        else {"_change_type": F_lit(ct), **stamp}
                     )
                 )
         if not parts:
             return (
                 self._snapshot_frame_or_empty(spark, until)
-                .withColumn("_change_type", F_lit(""))
-                .withColumn("_commit_version", F_lit(0))
-                .withColumn(
-                    "_commit_timestamp", F_lit(0.0).cast("timestamp")
+                .withColumns(
+                    {
+                        "_change_type": F_lit(""),
+                        "_commit_version": F_lit(0),
+                        "_commit_timestamp": F_lit(0.0).cast("timestamp"),
+                    }
                 )
                 .limit(0)
             )

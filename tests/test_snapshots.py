@@ -4316,6 +4316,19 @@ def test_copy_on_write_delete_of_every_row_commits_no_empty_file(spark, table):
     _assert_emptied(spark, table, v, [(1, 10), (2, 20)])
 
 
+def test_append_commits_no_empty_file(spark, table):
+    """An empty append, and the empty slice of a two-slice one-row
+    append, each land a 0-row file that no commit records."""
+    table.append(_kv(spark, []))
+    table.append(
+        spark.createDataFrame(
+            spark.sparkContext.parallelize([(1, 10)], 2), "k long, v long"
+        )
+    )
+    assert table.detail()["num_files"] == 1
+    assert [(r.k, r.v) for r in table.read(spark).collect()] == [(1, 10)]
+
+
 def test_compact_and_optimize_of_an_emptied_table_commit_no_file(spark, table):
     """Rewriting a table with no rows lands nothing: compact and
     optimize commit no file, and the table still reads empty."""
