@@ -164,8 +164,9 @@ def change_plan(
     :func:`_inserts_skip` and the masks of :func:`_mask_deletes`. Its
     readers read every file under the until-version schema, so a
     rename/drop anywhere in the range is skipped when the ``declared``
-    columns keep their physical slots across the range, or with
-    ``allow_schema_change``; otherwise it raises "schema change"."""
+    columns (the ones the consumer has been served) keep their physical
+    slots across the range, or with ``allow_schema_change``; otherwise
+    it raises "schema change"."""
     end = table._raw_manifest(until)
     end_mapping = dict(end.get("column_mapping") or {})
     end_schema = end.get("schema")
@@ -195,11 +196,13 @@ def change_plan(
                     continue
                 raise ValueError(
                     f"{table.root}: change feed crosses a column-mapping "
-                    f"schema change at v{v} (op={op!r}); "
-                    "ignoreDeletes/skipChangeCommits do not skip a "
-                    "schema change — restart the feed from version "
-                    f"{v + 1} or later, or read under the current "
-                    "schema (read_changes(allow_schema_change=True))"
+                    f"schema change at v{v} (op={op!r}) that moves or "
+                    "drops a served column; ignoreDeletes/"
+                    "skipChangeCommits do not skip a schema change — "
+                    f"restart the feed from version {v + 1} or later (a "
+                    "stream: a new checkpoint with that startingVersion), "
+                    "or in batch read under the current schema "
+                    "(read_changes(allow_schema_change=True))"
                 )
             if not plan and mapping_consistent(
                 table, since, declared, end_mapping, end_schema
@@ -221,7 +224,8 @@ def change_plan(
         ):
             continue
         arts = _version_artifacts(table, v, raw)
-        live.update((a["path"], a) for a in arts)
+        if inserts_only:
+            live.update((a["path"], a) for a in arts)
         plan += arts
     return plan
 

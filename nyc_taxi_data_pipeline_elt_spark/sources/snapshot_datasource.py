@@ -732,8 +732,9 @@ class _SnapshotStreamReader(DataSourceStreamReader):
         initial = sv0 < 0 and self.starting_version is None
         if not initial:
             # the served files are the change_plan walk's; it refuses a
-            # rename/drop that moved a declared column with the batch
-            # feed's schema-change message, so on this path the check
+            # rename/drop that moved a declared column with the one
+            # schema-change message both insert-only feeds give (its
+            # advice covers a stream's restart), so on this path the check
             # below fires only for a declared name the range-end schema
             # lacks with no rename/drop in the range
             plan = _plan.change_plan(

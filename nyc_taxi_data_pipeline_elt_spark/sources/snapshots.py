@@ -693,19 +693,17 @@ class SnapshotTable:
         m = _re.search(cls._DATA_FILE_RE, f)
         return m.group(1) if m else f
 
-    def _dv_frame(self, spark: SparkSession, dv_entries: dict) -> DataFrame:
-        """The (file, pos) dead-row set behind ``dv_entries`` ({rel_file:
-        entry}, an entry being a manifest ``[dv_rel_file, count]`` or a
-        change-feed artifact's mask, a list of sidecar rel files): one
-        read over the DISTINCT dv parquet files, filtered to exactly the
-        entries' data files (one dv file can cover many data files; a
-        consolidation can leave stale other-file rows behind in older dv
-        files, so the filter is load-bearing, not an optimization)."""
-        dv_files = sorted(
-            {s for e in dv_entries.values() for s in e if isinstance(s, str)}
-        )
+    def _dv_frame(self, spark: SparkSession, masks: dict) -> DataFrame:
+        """The (file, pos) dead-row set behind ``masks`` ({rel_file:
+        [dv_rel_file, ...]}; a manifest ``dv`` entry contributes its one
+        file): one read over the DISTINCT dv parquet files, filtered to
+        exactly the masked data files (one dv file can cover many data
+        files; a consolidation can leave stale other-file rows behind in
+        older dv files, so the filter is load-bearing, not an
+        optimization)."""
+        dv_files = sorted({d for ds in masks.values() for d in ds})
         return self._read_positions(spark, dv_files).filter(
-            F_col("file").isin([self._file_tail(f) for f in dv_entries])
+            F_col("file").isin([self._file_tail(f) for f in masks])
         )
 
     def _tag_dv_cols(self, df: DataFrame) -> DataFrame:
@@ -752,12 +750,23 @@ class SnapshotTable:
         broadcast is the signal to ``compact()``, which materializes it
         away — same posture as Delta, whose DV bitmaps ship to every
         task)."""
-        ents = {f: e for f, e in (dv or {}).items() if f in set(rel_files)}
-        if not ents:
+        files = set(rel_files)
+        return self._mask_rows(
+            spark, df, {f: [e[0]] for f, e in (dv or {}).items() if f in files}
+        )
+
+    def _mask_rows(
+        self, spark: SparkSession, df: DataFrame, masks: dict
+    ) -> DataFrame:
+        """Drop from ``df`` the rows at the positions ``masks``
+        ({rel_file: [dv_rel_file, ...]}) records for each file, by the
+        broadcast anti-join :meth:`_apply_dv` describes. Zero-cost when
+        ``masks`` is empty."""
+        if not masks:
             return df
         from pyspark.sql.functions import broadcast as F_broadcast
 
-        dead = self._dv_frame(spark, ents).selectExpr(
+        dead = self._dv_frame(spark, masks).selectExpr(
             "file AS __dv_file__", "pos AS __dv_pos__"
         )
         tagged = self._tag_dv_cols(df)
@@ -810,7 +819,7 @@ class SnapshotTable:
                 mapping=dict(snap.column_mapping or {}),
             )
         )
-        old_touched = {f: e for f, e in pdv.items() if f in set(touched)}
+        old_touched = {f: [e[0]] for f, e in pdv.items() if f in set(touched)}
         if old_touched:
             from pyspark.sql.functions import broadcast as F_broadcast
 
@@ -885,7 +894,7 @@ class SnapshotTable:
             if stats.get(f, {}).get("__num_rows__") is not None
             and totals[f] >= stats[f]["__num_rows__"]
         ]
-        old_affected = {f: pdv[f] for f in affected if f in pdv}
+        old_affected = {f: [pdv[f][0]] for f in affected if f in pdv}
         written: list[str] = []
         if old_affected:
             merged = self._read_positions(spark, [frozen_rel]).unionByName(
@@ -3991,9 +4000,11 @@ class SnapshotTable:
         (:meth:`_read_files`), so old and new files serve the same
         logical column. The commit requires the ``column-mapping``
         reader AND writer feature — an older build fails closed instead
-        of misreading names. Change feeds refuse to cross the rename
-        (names would misalign across the range), Delta's
-        incompatible-schema-change posture."""
+        of misreading names. A change feed that has served the column
+        under its old name refuses to cross the rename (names would
+        misalign across the range), Delta's incompatible-schema-change
+        posture; ``read_changes_cdf`` refuses any range with rows before
+        it."""
         cur = self.current_version()
         if cur is None:
             raise FileNotFoundError(f"{self.root}: no committed snapshot")
@@ -4588,19 +4599,30 @@ class SnapshotTable:
         names like every other read path (ADVICE r10: the raw parquet
         read served physical names), exact because physical slots are
         never reused, so the end mapping resolves every file ever
-        written. A rename/drop INSIDE the range that moved an
-        until-version column off the physical slot it had at
-        ``since_version`` raises by default (the consumer's column names
-        would change across the call; the insert-only stream's rule
-        too); ``allow_schema_change=True`` serves the whole range under
-        the UNTIL-version schema regardless."""
+        written. A rename/drop INSIDE the range that moves or drops a
+        column of the ``since_version`` schema (the columns the consumer
+        has been served) raises "schema change" by default; a range from
+        -1 has served none, so it only needs every until-version column
+        to keep its slot. ``allow_schema_change=True`` serves the whole
+        range under the UNTIL-version schema regardless."""
         until = self.current_version() if until_version is None else until_version
         if until is None:
             raise FileNotFoundError(f"{self.root}: no committed snapshot")
+        # the columns the consumer has been served: a rename/drop in the
+        # range that moves or drops one refuses. A range from -1 has
+        # served none; a vacuumed or schemaless start manifest leaves the
+        # planner's default, the until-version schema.
+        served = None
+        if 0 <= since_version < until:
+            try:
+                served = self._raw_manifest(since_version).get("schema")
+            except OSError:
+                pass
         plan = _plan.change_plan(
             self,
             since_version,
             until,
+            [n for n, _ in served] if served else None,
             inserts_only=True,
             ignore_deletes=ignore_deletes,
             skip_change_commits=skip_change_commits,
@@ -4627,8 +4649,8 @@ class SnapshotTable:
         # that touched it, so no retired row is served as a live insert.
         # Rows of files an in-range rewrite retired keep their
         # pre-rewrite values: the divergence these flags opt into.
-        return self._apply_dv(
-            spark, out, files, {a["path"]: a["mask"] for a in plan if a["mask"]}
+        return self._mask_rows(
+            spark, out, {a["path"]: a["mask"] for a in plan if a["mask"]}
         )
 
     def _snapshot_frame_or_empty(
@@ -4707,11 +4729,8 @@ class SnapshotTable:
             elif kind != "cdc":
                 # rows soft-deleted before the commit were not part of
                 # the table, so it did not change them
-                rows = self._apply_dv(
-                    spark,
-                    rows,
-                    files,
-                    {x["path"]: x["mask"] for x in arts if x["mask"]},
+                rows = self._mask_rows(
+                    spark, rows, {x["path"]: x["mask"] for x in arts if x["mask"]}
                 )
             for c, vals in (a.get("where") or {}).items():
                 rows = rows.filter(F_col(c).isin(*vals))

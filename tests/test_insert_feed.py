@@ -203,3 +203,32 @@ def test_batch_and_stream_insert_feeds_agree(spark, tmp_path):
     assert _assert_parity(spark, table, tmp_path, "post") == {"rows", "refused"}
     with pytest.raises(ValueError, match="schema change"):
         table.read_changes(spark, 9)
+
+
+
+def test_batch_feed_refuses_a_drop_of_a_served_column(spark, tmp_path):
+    """A drop inside the range of a column the consumer has been served
+    refuses: the batch feed declares the start version's columns. A range
+    from -1 has served none, and ``allow_schema_change`` reads the range
+    under the until-version schema."""
+    table = SnapshotTable(str(tmp_path / "tbl"))
+    ck, seen = str(tmp_path / "ck"), []
+    handle = lambda df, until: seen.append(sorted(df.columns))  # noqa: E731
+    table.append(_df(spark, 0, 3))                            # v0
+    assert table.process_changes(spark, ck, handle) == 0
+    table.append(_df(spark, 10, 12))                          # v1
+    table.drop_column("v")                                    # v2
+    table.append(spark.range(20, 22).coalesce(1))             # v3
+    for since in (0, 1):
+        with pytest.raises(ValueError, match="schema change"):
+            table.read_changes(spark, since)
+    with pytest.raises(ValueError, match="schema change"):
+        table.process_changes(spark, ck, handle)
+    assert seen == [["id", "v"]]
+    fresh = table.read_changes(spark, -1)
+    assert fresh.columns == ["id"]
+    assert sorted(r.id for r in fresh.collect()) == [0, 1, 2, 10, 11, 20, 21]
+    allowed = table.read_changes(spark, 0, allow_schema_change=True)
+    assert sorted(r.id for r in allowed.collect()) == [10, 11, 20, 21]
+    after = table.read_changes(spark, 2)
+    assert sorted(r.id for r in after.collect()) == [20, 21]
