@@ -1,7 +1,8 @@
 """The insert-only change feed — ``read_changes`` and the insert-only
 stream — is the change-feed planner's insert artifacts: its planning
-reads raw manifests only, and the batch and stream readers serve the
-same rows or refuse with the same message under every tolerance flag."""
+reads raw manifests only, the batch and stream readers serve the same
+rows or refuse with the same message under every tolerance flag, and the
+batch feed refuses a drop of a column it has served."""
 
 from __future__ import annotations
 
