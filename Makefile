@@ -17,13 +17,14 @@ prover-gate:
 # snapshot table's DML/CDF tests, the merge clause matrix, the commit
 # protocol's crash points, the change-feed stream tests, the log-planned
 # and partitioned-table reads of the change feed, the steady-state
-# compile pin (a warm DML cycle compiles no generated class), and the
-# insert-only feed's raw-manifest planning and batch/stream parity.
+# compile pin (a warm DML cycle compiles no generated class), the
+# insert-only feed's raw-manifest planning and batch/stream parity, and
+# the CHECK recheck of a commit race on renamed and evolved tables.
 dml-gate:
 	python -m pytest tests/test_row_dml.py tests/test_snapshots.py tests/test_merge_matrix.py \
 	  tests/test_commit_protocol.py tests/test_snapshot_stream.py tests/test_log_planned_reads.py \
 	  tests/test_partitioned_table.py tests/test_codegen_cache.py tests/test_insert_feed.py \
-	  -q -p no:cacheprovider
+	  tests/test_recheck_mapped.py -q -p no:cacheprovider
 
 # The landing -> consumer gate on its own: the batch pipeline (with its
 # job-free planning pins, the driver-side schema parity and the overlapped

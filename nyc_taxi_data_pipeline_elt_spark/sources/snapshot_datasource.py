@@ -1019,24 +1019,15 @@ class _SnapshotReader(DataSourceReader):
     def _envelopes(self, path: str) -> dict:
         """Per-column [min, max] for a file: manifest stats when the
         commit recorded them (pure metadata — no file I/O at planning),
-        else one footer read (legacy manifests)."""
+        else one footer read (legacy manifests) by the same reader the
+        commit uses, so both envelopes follow one set of rules."""
         if path in self.stats:
             return self.stats[path]
-        import pyarrow.parquet as pq
+        from nyc_taxi_data_pipeline_elt_spark.sources.snapshots import (
+            _file_stats,
+        )
 
-        md = pq.ParquetFile(path).metadata
-        out: dict = {}
-        for i in range(md.num_columns):
-            stats = [
-                md.row_group(rg).column(i).statistics
-                for rg in range(md.num_row_groups)
-            ]
-            if stats and all(s is not None and s.has_min_max for s in stats):
-                out[md.schema.column(i).name] = [
-                    min(s.min for s in stats),
-                    max(s.max for s in stats),
-                ]
-        return out
+        return _file_stats(path)
 
     def partitions(self):
         # one partition per committed data file (scan parallelism follows

@@ -301,21 +301,12 @@ def _rows_of(files, stats: dict) -> int | None:
     return sum(counts) if all(c is not None for c in counts) else None
 
 
-def _constraint_scan(spark: SparkSession, paths: list[str], predicate: str):
-    """The one row-level existence scan for CHECK enforcement — a
-    module-level seam so tests can assert a metadata-proven restore
-    launches ZERO scan tasks (monkeypatch this to raise). mergeSchema:
-    on a name-evolved table a single-footer sniff could miss the
-    constraint's column entirely (AnalysisException instead of a
-    verdict); with the union schema, pre-evolution rows read the column
-    as NULL, which passes CHECK (ANSI semantics) — correct."""
-    return (
-        spark.read.option("mergeSchema", "true")
-        .parquet(*paths)
-        .filter(predicate)
-        .limit(1)
-        .collect()
-    )
+def _constraint_scan(df: DataFrame, predicate: str):
+    """The one row-level existence scan for CHECK enforcement: at most
+    one row of ``df`` matching ``predicate``. A module-level seam so
+    tests can assert a metadata-proven write or restore launches ZERO
+    scan tasks (monkeypatch this to raise)."""
+    return df.filter(predicate).limit(1).collect()
 
 
 class CommitConflict(RuntimeError):
@@ -926,101 +917,6 @@ class SnapshotTable:
         }
         return dv_set, fully_dead, extra_fields, written
 
-    def _mapped_existence_scan(
-        self,
-        spark: SparkSession,
-        rel_files: list[str],
-        predicate: str,
-        mapping: dict,
-        schema=None,
-        logical_cols=None,
-    ) -> list:
-        """The column-mapped twin of :func:`_constraint_scan`: read the
-        files physically, restore LOGICAL names (via the recorded
-        ``schema`` when given, else the written frame's
-        ``logical_cols``, else — review r13 pass 3 — the files' OWN
-        merged columns inverse-mapped, so a rebase recheck over a batch
-        that lacks evolved table columns projects only what the files
-        actually hold), and return at most one violating row — ONE
-        implementation shared by :meth:`_verify_constraints` and
-        :meth:`_constraint_scan_dv` so scan semantics cannot drift."""
-        if schema is not None:
-            df = self._read_files(
-                spark, rel_files, schema=schema, mapping=mapping
-            )
-        else:
-            df = spark.read.option("mergeSchema", "true").parquet(
-                *[str(self.root / f) for f in rel_files]
-            )
-            if logical_cols is not None:
-                df = df.select(
-                    *[
-                        F_col(f"`{mapping.get(c, c)}`").alias(c)
-                        for c in logical_cols
-                    ]
-                )
-            else:
-                inv = {p: l for l, p in mapping.items()}
-                df = df.select(
-                    *[
-                        F_col(f"`{p}`").alias(inv.get(p, p))
-                        for p in df.columns
-                    ]
-                )
-        return df.filter(predicate).limit(1).collect()
-
-    def _constraint_scan_dv(
-        self,
-        spark: SparkSession,
-        rel_files: list[str],
-        predicate: str,
-        dv: dict | None,
-        schema=None,
-        mapping=None,
-    ) -> list:
-        """CHECK existence scan over committed files that may carry
-        deletion vectors: a soft-deleted row is not a table row, so a
-        violation in it must not fail the check (restore /
-        add_check_constraint would otherwise reject a table whose only
-        offenders are already dead). Clean files keep the plain
-        ``_constraint_scan`` fast path (and its zero-task test seam);
-        a column-mapped table reads through ``_read_files`` so the
-        logical expressions resolve."""
-        ents = {f: (dv or {}).get(f) for f in rel_files}
-        dirty = sorted(f for f, e in ents.items() if e)
-        clean = [f for f in rel_files if f not in set(dirty)]
-        bad: list = []
-        if clean:
-            if mapping or schema is not None:
-                # the LOG schema null-pads evolution-added columns the
-                # files lack, so a constraint referencing one evaluates
-                # to NULL (passes) instead of failing analysis — the
-                # same posture for unmapped tables as mapped ones
-                # (review r13 pass 4: add_check_constraint on an
-                # unmapped evolved table crashed here)
-                bad = self._mapped_existence_scan(
-                    spark, clean, predicate, mapping or {}, schema=schema
-                )
-            else:
-                bad = _constraint_scan(
-                    spark, [str(self.root / f) for f in clean], predicate
-                )
-        if not bad and dirty:
-            df = self._apply_dv(
-                spark,
-                self._read_files(
-                    spark, dirty, schema=schema, mapping=mapping
-                )
-                if mapping or schema is not None
-                else spark.read.option("mergeSchema", "true").parquet(
-                    *[str(self.root / f) for f in dirty]
-                ),
-                dirty,
-                {f: ents[f] for f in dirty},
-            )
-            bad = df.filter(predicate).limit(1).collect()
-        return bad
-
     def _drop_uuid_dirs(self, rels) -> None:
         """Eagerly delete the uuid dirs of uncommitted written files —
         data or change-data (failure/duplicate-batch cleanup; vacuum
@@ -1428,10 +1324,66 @@ class SnapshotTable:
         if snap.schema:
             schema = ", ".join(f"`{n}` {t}" for n, t in snap.schema)
         elif snap.files:
-            schema = self.read(spark, snap.version, merge_schema=True).schema
+            schema = self._read_files(
+                spark, snap.files, mapping=snap.column_mapping
+            ).schema
         else:
             return _prover.UNKNOWN  # no schema and no file to prune
         return _prover.resolve(spark, predicate, schema)
+
+    def _unproven(
+        self, files, stats: dict, irs: list, mapping: dict | None
+    ) -> list[str]:
+        """The ``files`` whose stats envelopes (judged under their
+        :meth:`_logical_view`) cannot prove every constraint IR in
+        ``irs`` — the only files a CHECK needs to row-scan. In-bounds
+        data verifies from manifest metadata alone, no Spark job."""
+        return [
+            f
+            for f in files
+            if not all(
+                _prover.proven(
+                    ir, self._logical_view(stats.get(f, {}), mapping or {})
+                )
+                for ir in irs
+            )
+        ]
+
+    def _violation(
+        self,
+        spark: SparkSession,
+        files: list[str],
+        constraints: dict,
+        schema,
+        mapping: dict | None,
+        dv: dict | None = None,
+    ):
+        """The first live row of ``files`` that violates a CHECK in
+        ``constraints``, or None: a row violates when any expression IS
+        FALSE (SQL semantics — NULL passes, as in Delta/ANSI CHECK).
+        The files are read through :meth:`_read_files` under ``schema``
+        (a (name, type) record: columns a file lacks read as NULL and
+        pass; the plan needs no footer) and ``mapping``, so the logical
+        expressions resolve on a renamed table; soft-deleted rows
+        (``dv``) are masked first — a dead row is not a table row."""
+        predicate = " OR ".join(
+            f"(({expr}) IS FALSE)" for expr in constraints.values()
+        )
+        df = self._read_files(spark, files, schema=schema, mapping=mapping)
+        bad = _constraint_scan(
+            self._apply_dv(spark, df, files, dv), predicate
+        )
+        return bad[0] if bad else None
+
+    def _reject_write(self, uuid_dir: Path, constraints: dict, row) -> None:
+        """Delete an uncommitted write's ``uuid_dir`` (readers never saw
+        it: visibility starts at commit) and raise the write's
+        :class:`ConstraintViolation`, quoting the offending ``row``."""
+        shutil.rmtree(uuid_dir, ignore_errors=True)
+        raise ConstraintViolation(
+            f"{self.root}: write violates CHECK constraint(s) "
+            f"{sorted(constraints)}; offending row: {row.asDict()}"
+        )
 
     def _record_partition_values(
         self, written: list[str], stats: dict, pcols: list[str]
@@ -1498,18 +1450,20 @@ class SnapshotTable:
         stats-first: a just-written file whose [min, max] envelope
         proves every constraint is never row-scanned — an append of
         in-bounds data verifies from footer metadata alone, no Spark
-        job (the same prover ``restore()`` uses).
+        job (:meth:`_unproven`, the check ``restore()`` uses too).
 
         CHECK constraints are enforced write-then-verify: scanning the
         just-written columnar files once is cheaper than recomputing an
-        arbitrary upstream plan a second time, and on violation the
-        uncommitted files are deleted so nothing leaks (readers never
-        saw them — visibility starts at commit). ``enforce=False`` is
-        for compact/optimize, whose rows already passed at their
-        original write. ``enforced_out`` (append's retry loop) receives
-        the constraint set that was actually enforced, so the committer
-        can detect and re-enforce constraints added between this write
-        and its commit.
+        arbitrary upstream plan a second time. The unproven files are
+        scanned by :meth:`_violation` under the written frame's own
+        fields, so the scan plans without a footer-inference job. On
+        violation the uncommitted files are deleted so nothing leaks
+        (readers never saw them — visibility starts at commit).
+        ``enforce=False`` is for compact/optimize, whose rows already
+        passed at their original write. ``enforced_out`` (append's
+        retry loop) receives the constraint set that was actually
+        enforced, so the committer can detect and re-enforce
+        constraints added between this write and its commit.
 
         ``mapping`` (the table's ``column_mapping``): ``df`` arrives
         LOGICAL and is renamed to its PHYSICAL column names for the
@@ -1542,13 +1496,13 @@ class SnapshotTable:
             # remainders) pass their basis snapshot's spec explicitly;
             # this fallback only pays the resolution for legacy callers
             partition_spec = self._partition_spec()
-        logical_cols = list(df.columns)
         logical_schema = df.schema
+        logical_fields = self._df_fields(df)
         if mapping:
             df = df.select(
                 *[
                     F_col(f"`{c}`").alias(mapping.get(c, c))
-                    for c in logical_cols
+                    for c in df.columns
                 ]
             )
         # declared partition columns (VERDICT r12 task #3): route each
@@ -1610,27 +1564,17 @@ class SnapshotTable:
         if enforce and written:
             if enforced_out is not None:
                 enforced_out.update(cons)
-            if cons:
-                irs = [
-                    _prover.resolve(df.sparkSession, e, logical_schema)
-                    for e in cons.values()
-                ]
-                need_scan = []
-                for f in written:
-                    view = self._logical_view(
-                        stats.get(f, {}), mapping or {}
-                    )
-                    if not all(_prover.proven(ir, view) for ir in irs):
-                        need_scan.append(f)
-                if need_scan:
-                    self._verify_constraints(
-                        df.sparkSession,
-                        need_scan,
-                        cons,
-                        sub,
-                        mapping=mapping or {},
-                        logical_cols=logical_cols,
-                    )
+            irs = [
+                _prover.resolve(df.sparkSession, e, logical_schema)
+                for e in cons.values()
+            ]
+            need = self._unproven(written, stats, irs, mapping)
+            # read under the written frame's own fields: no footer job
+            bad = need and self._violation(
+                df.sparkSession, need, cons, logical_fields, mapping
+            )
+            if bad:
+                self._reject_write(sub, cons, bad)
         return written, stats
 
     def _write_dv(self, df: DataFrame, single: bool = True) -> list[str]:
@@ -1741,53 +1685,6 @@ class SnapshotTable:
             raise
         return fresh, fresh_stats, box["files"]
 
-    def _verify_constraints(
-        self,
-        spark: SparkSession,
-        rel_files: list[str],
-        constraints: dict,
-        cleanup_dir: Path,
-        mapping: dict | None = None,
-        logical_cols: list | None = None,
-        schema: tuple | None = None,
-    ) -> None:
-        """One existence-check scan over the just-written files whose
-        stats could NOT prove compliance (``_write_data`` pre-prunes the
-        proven ones): a row violates when any CHECK expression IS FALSE
-        (SQL semantics — NULL passes, as in Delta/ANSI CHECK). Violation
-        deletes the uncommitted files and raises
-        :class:`ConstraintViolation`. On a column-mapped table the scan
-        renames the files' physical columns back to ``logical_cols``
-        first — constraint expressions speak logical."""
-        predicate = " OR ".join(
-            f"(({expr}) IS FALSE)" for expr in constraints.values()
-        )
-        if mapping or schema is not None:
-            # schema= (the manifest's logical record) null-pads columns
-            # the files lack, so a fresh constraint on an
-            # evolution-added column passes as NULL instead of crashing
-            # (review r13 pass 4); without a record, logical_cols=None
-            # lets the scan derive the projection from the files' own
-            # merged columns inverse-mapped (review r13 pass 3)
-            bad = self._mapped_existence_scan(
-                spark,
-                rel_files,
-                predicate,
-                mapping or {},
-                schema=schema,
-                logical_cols=logical_cols,
-            )
-        else:
-            bad = _constraint_scan(
-                spark, [str(self.root / f) for f in rel_files], predicate
-            )
-        if bad:
-            shutil.rmtree(cleanup_dir, ignore_errors=True)
-            raise ConstraintViolation(
-                f"{self.root}: write violates CHECK constraint(s) "
-                f"{sorted(constraints)}; offending row: {bad[0].asDict()}"
-            )
-
     # Driver-side footer reads are fine for a normal append (a handful of
     # new files); past this count — compact/optimize/replace rewrites, or
     # a huge initial load — the collection moves to a distributed pyarrow
@@ -1844,7 +1741,7 @@ class SnapshotTable:
         — the O(columns) driver-side bookkeeping that keeps the manifest
         schema current without any file I/O (ADVICE r8). Name-only
         evolution (added columns) stays recordable; a TYPE change on an
-        existing name needs the engine's mergeSchema promotion rules to
+        existing name needs the footer union's type-promotion rules to
         resolve, so the record conservatively becomes None (unknown) and
         readers fall back to the footer union — paying the O(files) cost
         only on type-evolved tables. An unknown parent stays unknown (a
@@ -1872,14 +1769,17 @@ class SnapshotTable:
         """Re-enforce, on already-written ``files``, any constraint the
         commit parent ``snap`` carries that was NOT in force when they
         were written (added or changed since — the one write/metadata
-        race that does not commute). Stats-pruned first, so in-bounds
-        data re-verifies from manifest metadata alone; ``enforced`` is
-        updated in place. Shared by ``append``'s retry loop and
-        ``_commit_rewrite`` (review r9: two near-identical copies were
-        drifting). ``files`` must share one writer uuid dir (true for
-        every caller: each hands the output of a single ``_write_data``)
-        — on violation ``_verify_constraints`` removes that dir and
-        raises; callers' failure handlers drop any sibling dirs."""
+        race that does not commute). Stats-pruned first
+        (:meth:`_unproven`), so in-bounds data re-verifies from manifest
+        metadata alone; the rest are scanned by :meth:`_violation` under
+        ``snap``'s recorded schema, which null-pads columns the batch
+        lacks, so a fresh constraint on an evolution-added column passes
+        as NULL. ``enforced`` is updated in place. Shared by
+        ``append``'s retry loop and ``_commit_rewrite``. ``files`` must
+        share one writer uuid dir (true for every caller: each hands the
+        output of a single ``_write_data``) — on violation that dir is
+        removed and :class:`ConstraintViolation` raised; callers'
+        failure handlers drop any sibling dirs."""
         fresh = {
             k: e
             for k, e in (snap.constraints or {}).items()
@@ -1887,35 +1787,16 @@ class SnapshotTable:
         }
         if fresh and files:
             # constraint expressions speak LOGICAL names; stats and the
-            # files are physical-keyed on a column-mapped table (review
-            # r13 pass 2: the unmapped prove/scan here mis-proved
-            # nothing — fail-closed — but aborted rebases with an
-            # AnalysisException instead of verifying)
+            # files are physical-keyed on a column-mapped table
             cmap = dict(snap.column_mapping or {})
             irs = [self._resolve(spark, snap, e) for e in fresh.values()]
-            need = []
-            for f in files:
-                view = self._logical_view(stats.get(f, {}), cmap)
-                if not all(_prover.proven(ir, view) for ir in irs):
-                    need.append(f)
-            if need:
-                # schema= null-pads columns the batch lacks, so a fresh
-                # constraint on an evolution-added column verifies
-                # under NULL CHECK semantics (review r13 passes 3-4:
-                # projecting the full table schema from the FILES
-                # crashed on such batches, and omitting absent columns
-                # crashed the predicate instead); a legacy None record
-                # falls back to the files' own inverse-mapped columns
-                self._verify_constraints(
-                    spark,
-                    need,
-                    fresh,
-                    self.root
-                    / Path(files[0]).parts[0]
-                    / Path(files[0]).parts[1],
-                    mapping=cmap or None,
-                    schema=snap.schema,
-                )
+            need = self._unproven(files, stats, irs, cmap)
+            bad = need and self._violation(
+                spark, need, fresh, snap.schema, cmap
+            )
+            if bad:
+                uuid_dir = Path(files[0]).parts[:2]
+                self._reject_write(self.root.joinpath(*uuid_dir), fresh, bad)
         enforced.update(fresh)
 
     def append(
@@ -2026,10 +1907,10 @@ class SnapshotTable:
         present — an O(1) driver comparison, no file I/O, the Delta
         posture (ADVICE r8: re-deriving it from every live file's
         footer made each strict append O(live files)). Only a legacy or
-        type-evolved snapshot (no record) falls back to the mergeSchema
-        UNION over its files (review r8: a single-footer sniff on an
-        evolved table picked an arbitrary file's schema, flip-flopping
-        the verdict); the passing strict append then re-records the
+        type-evolved snapshot (no record) falls back to the footer UNION
+        over its files (a single-footer sniff on an evolved table
+        would pick an arbitrary file's schema, flip-flopping the
+        verdict); the passing strict append then re-records the
         schema, so the fallback is paid once per legacy table."""
         if snap.schema is not None:
             have = set(snap.schema)
@@ -2055,9 +1936,7 @@ class SnapshotTable:
         contract is testable (monkeypatch this to raise)."""
         return {
             (f.name, f.dataType.simpleString())
-            for f in spark.read.option("mergeSchema", "true")
-            .parquet(*[str(self.root / f) for f in snap.files])
-            .schema.fields
+            for f in self._read_files(spark, snap.files).schema.fields
         }
 
     def _commit_rewrite(
@@ -3730,16 +3609,12 @@ class SnapshotTable:
             else {}
         )
         if cons and snap.files:
-            # Stats-first (VERDICT r7 task #2): a rollback should not
-            # cost a table scan. The restored manifest already carries
-            # per-file [min, max] envelopes — a file whose envelope
-            # PROVES every constraint is skipped; only inconclusive
-            # files (no stats, non-numeric, or expression the prover
-            # doesn't cover) get the row-level existence scan. At 100 TB
-            # that turns O(restored data) into O(files needing checks) —
-            # zero scan tasks on a provably-compliant table (pinned by
+            # Stats-first: a rollback should not cost a table scan. A
+            # restored file whose manifest envelope PROVES every
+            # constraint is skipped; only the inconclusive ones get the
+            # one row-level scan, soft-deleted rows masked — zero scan
+            # tasks on a provably-compliant table (pinned by
             # ``test_restore_metadata_proven_skips_scan``).
-            rstats = snap.stats or {}
             rmap = dict(snap.column_mapping or {})
             # spark=None proves with the active session, if any (with
             # none, nothing is proven); only a row scan needs spark
@@ -3749,42 +3624,24 @@ class SnapshotTable:
                 if session is not None
                 else [_prover.UNKNOWN]
             )
-            need_scan = [
-                f
-                for f in snap.files
-                if not all(
-                    _prover.proven(
-                        ir, self._logical_view(rstats.get(f, {}), rmap)
-                    )
-                    for ir in irs
+            need = self._unproven(snap.files, snap.stats or {}, irs, rmap)
+            if need and spark is None:
+                raise ValueError(
+                    f"{self.root}: restore with active CHECK "
+                    f"constraints {sorted(cons)} requires spark to "
+                    "re-validate the restored rows (manifest stats "
+                    f"prove only {len(snap.files) - len(need)}"
+                    f"/{len(snap.files)} files compliant)"
                 )
-            ]
-            if need_scan:
-                if spark is None:
-                    raise ValueError(
-                        f"{self.root}: restore with active CHECK "
-                        f"constraints {sorted(cons)} requires spark to "
-                        "re-validate the restored rows (manifest stats "
-                        f"prove only {len(snap.files) - len(need_scan)}"
-                        f"/{len(snap.files)} files compliant)"
-                    )
-                predicate = " OR ".join(
-                    f"(({expr}) IS FALSE)" for expr in cons.values()
+            bad = need and self._violation(
+                spark, need, cons, snap.schema, rmap, snap.dv
+            )
+            if bad:
+                raise ConstraintViolation(
+                    f"{self.root}: restoring v{version} would violate "
+                    f"CHECK constraint(s) {sorted(cons)}; offending "
+                    f"row: {bad.asDict()}"
                 )
-                bad = self._constraint_scan_dv(
-                    spark,
-                    need_scan,
-                    predicate,
-                    snap.dv,
-                    schema=snap.schema,
-                    mapping=rmap,
-                )
-                if bad:
-                    raise ConstraintViolation(
-                        f"{self.root}: restoring v{version} would violate "
-                        f"CHECK constraint(s) {sorted(cons)}; offending "
-                        f"row: {bad[0].asDict()}"
-                    )
         ids = snap.batch_ids
         if ids is None:  # legacy manifest: reconstruct from history
             ids = tuple(
@@ -3923,28 +3780,16 @@ class SnapshotTable:
             # stats-first, like restore(): validate only the files whose
             # manifest envelope cannot prove the new constraint — adding
             # an in-bounds constraint to a 100 TB table is metadata-only
-            ir = self._resolve(spark, snap, expr)
-            need_scan = [
-                f
-                for f in files
-                if not _prover.proven(
-                    ir, self._logical_view(stats.get(f, {}), cmap)
+            irs = [self._resolve(spark, snap, expr)]
+            need = self._unproven(files, stats, irs, cmap)
+            bad = need and self._violation(
+                spark, need, {name: expr}, snap.schema, cmap, snap.dv
+            )
+            if bad:
+                raise ConstraintViolation(
+                    f"{self.root}: existing rows violate {name!r} "
+                    f"({expr}); offending row: {bad.asDict()}"
                 )
-            ]
-            if need_scan:
-                bad = self._constraint_scan_dv(
-                    spark,
-                    need_scan,
-                    f"({expr}) IS FALSE",
-                    snap.dv,
-                    schema=snap.schema,
-                    mapping=cmap,
-                )
-                if bad:
-                    raise ConstraintViolation(
-                        f"{self.root}: existing rows violate {name!r} "
-                        f"({expr}); offending row: {bad[0].asDict()}"
-                    )
         cons[name] = expr
         return self._commit(
             files,

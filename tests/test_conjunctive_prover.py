@@ -358,19 +358,19 @@ def test_conjunctive_check_constraint_metadata_only(spark, table):
         spark.range(0, 10).selectExpr("id", "id + 100 AS v")
     )
     called = {"n": 0}
-    orig = SnapshotTable._constraint_scan_dv
+    orig = SnapshotTable._violation
 
     def spy(self, *a, **kw):
         called["n"] += 1
         return orig(self, *a, **kw)
 
-    SnapshotTable._constraint_scan_dv = spy
+    SnapshotTable._violation = spy
     try:
         table.add_check_constraint(
             spark, "bounds", "id >= 0 AND v >= 100 AND v <= 200"
         )
     finally:
-        SnapshotTable._constraint_scan_dv = orig
+        SnapshotTable._violation = orig
     assert called["n"] == 0, "conjunctive in-bounds CHECK must be metadata-only"
     # and a violating conjunctive constraint is still caught (row scan)
     with pytest.raises(Exception):

@@ -3,8 +3,9 @@
 crash — when the fresh constraint's columns are renamed, and must pass
 under NULL CHECK semantics when the constraint references an
 evolution-added column the rechecked batch lacks. Violations are still
-caught. These pin the `_mapped_existence_scan(schema=...)` /
-`logical_cols=None` paths that were previously dead or crashing.
+caught. These pin the recheck's row scan (`SnapshotTable._violation`),
+which reads the batch through `_read_files` under the commit parent's
+recorded schema and column mapping.
 """
 
 from __future__ import annotations

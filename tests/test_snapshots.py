@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import re
+import uuid
 
 import pytest
 
@@ -329,6 +330,71 @@ def test_python_datasource_pushes_filters_and_prunes_files(spark, table):
     both = df.filter("v < 25")  # ids 0..12 span both files
     assert both.rdd.getNumPartitions() == 2
     assert both.count() == 13
+
+
+def test_python_datasource_footer_envelopes_match_manifest_stats(
+    spark, table
+):
+    """A manifest without stats (a legacy commit) plans pushed filters
+    from the file footers through the commit's own stats reader, so
+    the Data Source prunes the same files and returns the same rows as
+    with the manifest stats — numeric and TIMESTAMP_NTZ wall-time
+    envelopes alike."""
+    import datetime as dt
+
+    from pyspark.sql.datasource import GreaterThanOrEqual, LessThan
+
+    from nyc_taxi_data_pipeline_elt_spark.sources.snapshot_datasource import (
+        SnapshotDataSource,
+    )
+
+    def ntz_df(lo, hi):
+        return spark.range(lo, hi).selectExpr(
+            "make_timestamp_ntz(2023, 1, CAST(id AS INT), 0, 0, 0) AS tsn",
+            "id AS v",
+        ).coalesce(1)
+
+    spark.dataSource.register(SnapshotDataSource)
+    table.append(ntz_df(1, 10))    # Jan 1-9 wall, v 1..9
+    table.append(ntz_df(20, 28))   # Jan 20-27 wall, v 20..27
+    cases = [
+        ("v >= 22", GreaterThanOrEqual(("v",), 22)),
+        (
+            "tsn >= timestamp_ntz'2023-01-25 00:00:00'",
+            GreaterThanOrEqual(("tsn",), dt.datetime(2023, 1, 25)),
+        ),
+        (
+            "tsn < timestamp_ntz'2023-01-05 00:00:00'",
+            LessThan(("tsn",), dt.datetime(2023, 1, 5)),
+        ),
+    ]
+
+    def plan():
+        ds = SnapshotDataSource({"path": str(table.root)})
+        files, rows = [], []
+        for sql, pushed in cases:
+            reader = ds.reader(ds.schema())
+            assert not list(reader.pushFilters([pushed]))
+            files.append(sorted(p.value for p in reader.partitions()))
+            hit = spark.read.format("snapshot_table").load(
+                str(table.root)
+            ).filter(sql)
+            rows.append(sorted(r.v for r in hit.collect()))
+        return files, rows
+
+    with_stats = plan()
+    assert all(len(f) == 1 for f in with_stats[0]), "setup: no pruning"
+    assert with_stats[1] == [
+        list(range(22, 28)), list(range(25, 28)), [1, 2, 3, 4]
+    ]
+    for m in table.manifest_dir.glob("v*.json"):
+        raw = json.loads(m.read_text())
+        for k in ("stats", "stats_add"):
+            if k in raw:
+                raw[k] = {}
+        m.write_text(json.dumps(raw))
+    assert not table.snapshot().stats
+    assert plan() == with_stats
 
 
 def test_commit_records_manifest_stats(spark, table):
@@ -788,8 +854,8 @@ def test_restore_metadata_proven_skips_scan(spark, table, monkeypatch):
     table.overwrite(spark.createDataFrame([(2, 7)], "id long, v long"))  # v1
     table.add_check_constraint(spark, "v_nonneg", "v >= 0")            # v2
 
-    def _boom(spark_, paths, predicate):
-        raise AssertionError(f"row-level scan launched over {paths}")
+    def _boom(*a, **k):
+        raise AssertionError(f"row-level scan launched: {a}")
 
     monkeypatch.setattr(snapmod, "_constraint_scan", _boom)
     snap = table.restore(0, spark)   # v0 stats: v in [5, 5] — proven
@@ -854,8 +920,8 @@ def test_write_path_constraint_check_is_metadata_only_when_proven(
     table.append(spark.createDataFrame([(1, 5)], "id long, v long"))
     table.add_check_constraint(spark, "v_nonneg", "v >= 0")
 
-    def _boom(spark_, paths, predicate):
-        raise AssertionError(f"row-level scan launched over {paths}")
+    def _boom(*a, **k):
+        raise AssertionError(f"row-level scan launched: {a}")
 
     monkeypatch.setattr(snapmod, "_constraint_scan", _boom)
     # append: stats prove v in [6, 9] >= 0 — no scan
@@ -879,6 +945,50 @@ def test_write_path_constraint_violation_still_caught(spark, table):
         table.append(spark.createDataFrame([(2, -3)], "id long, v long"))
     assert table.read(spark).count() == 1
     assert table.snapshot().op == "add_constraint"
+
+
+def _jobs_started(spark, run) -> int:
+    """The number of Spark jobs ``run()`` started, counted by job group."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "count the jobs of one table operation")
+    try:
+        run()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("renamed", [False, True])
+def test_unproven_check_append_starts_write_and_scan_jobs_only(
+    spark, table, renamed
+):
+    """An append whose CHECK the stats cannot prove (the prover has no
+    envelope rule for ``length``) starts exactly two Spark jobs: the
+    write and the one row scan. The scan reads under the written
+    frame's own fields, so no footer-inference job runs — on an
+    unmapped table and after a rename alike. A violating append still
+    raises and leaves no uuid directory behind."""
+    from nyc_taxi_data_pipeline_elt_spark.sources.snapshots import (
+        ConstraintViolation,
+    )
+
+    table.append(spark.createDataFrame([(1, "a")], "id long, s string"))
+    col = "s"
+    if renamed:
+        table.rename_column("s", "t")
+        col = "t"
+    table.add_check_constraint(spark, "short", f"length({col}) < 10")
+    schema = f"id long, {col} string"
+    ok = spark.createDataFrame([(2, "bb")], schema).coalesce(1)
+    assert _jobs_started(spark, lambda: table.append(ok)) == 2
+    dirs = set(table.data_dir.iterdir())
+    bad = spark.createDataFrame([(3, "x" * 12)], schema).coalesce(1)
+    with pytest.raises(ConstraintViolation, match="violates CHECK"):
+        table.append(bad)
+    assert set(table.data_dir.iterdir()) == dirs
+    assert sorted(r.id for r in table.read(spark).collect()) == [1, 2]
 
 
 def test_delta_manifests_record_only_changes(spark, table):
